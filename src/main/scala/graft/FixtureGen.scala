@@ -57,13 +57,7 @@ object FixtureGen {
     val sf = args(1).toDouble
     val outDir = args(2)
     val schemaRef = if (args.length > 3) Some(args(3)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-fixturegen")
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, seed, sf, outDir)
     schemaRef.foreach(ref => assertSchemasMatch(spark, outDir, ref))

@@ -11,9 +11,8 @@ import graft.functions.VectorExpressions.{LongArrayEqCount, SimHash64, VectorDot
   * next to the Column API. Install with:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)           // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
+  * Sessions.local("app",
+  *   extraConf = Map("spark.sql.extensions" -> "graft.GraftExtensions"))
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

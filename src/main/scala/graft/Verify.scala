@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,36 +8,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // RAM-backed scratch dir when available (see Bench.scala: the
-    // sandbox disk's write path intermittently drops to ~8 MB/s);
-    // SPARK_GRAFT_LOCAL_DIR overrides, absent /dev/shm falls back to
-    // the JVM default.
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (java.nio.file.Files.isWritable(shm)) {
-        val d = java.nio.file.Files
-          .createTempDirectory(shm, "graft-spark-local")
-        // remove the RAM-backed scratch parent on exit (ADVICE r18)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try {
-            import java.util.Comparator
-            java.nio.file.Files.walk(d)
-              .sorted(Comparator.reverseOrder[java.nio.file.Path]())
-              .forEach(p => { try java.nio.file.Files.deleteIfExists(p)
-                catch { case _: Throwable => () } })
-          } catch { case _: Throwable => () }
-        }))
-        Some(d.toString)
-      } else None
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = localDir.fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
+    val spark = Sessions.harness("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

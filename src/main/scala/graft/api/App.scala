@@ -37,21 +37,12 @@ final class App(val spark: SparkSession, val id: String,
 }
 
 object App {
-  /** Build an App with a locally-configured SparkSession. Shuffle
-    * partitions default to the local core count, not 200; AQE on.
+  /** Build an App on a [[graft.Sessions.local]] session named `id`
+    * (the base conf at `cores`, then `extraConf`); no scratch dir.
     */
   def local(id: String, cores: Int = Runtime.getRuntime.availableProcessors,
-            extraConf: Map[String, String] = Map.empty): App = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(id)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) => b.config(k, v) }
-    new App(b.getOrCreate(), id)
-  }
+            extraConf: Map[String, String] = Map.empty): App =
+    new App(graft.Sessions.local(id, cores, extraConf), id)
 }
 
 /** Kafka topic handle: source/sink builders (faust `Topic`,

@@ -34,12 +34,7 @@ object EventAnalytics {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .appName("event-analytics").master("local[*]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Sessions.local("event-analytics")
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, dir) finally spark.stop()
   }

@@ -39,12 +39,7 @@ object LakeIngest {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .appName("lake-ingest").master("local[*]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Sessions.local("lake-ingest")
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, dir) finally spark.stop()
   }

@@ -50,11 +50,7 @@ object TrainDataPipeline {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .appName("train-data-pipeline").master("local[*]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors)
-      .getOrCreate()
+    val spark = graft.Sessions.local("train-data-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, dir) finally spark.stop()
   }

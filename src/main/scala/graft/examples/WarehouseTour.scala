@@ -31,12 +31,7 @@ object WarehouseTour {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .appName("warehouse-tour").master("local[*]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Sessions.local("warehouse-tour")
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, dir) finally spark.stop()
   }

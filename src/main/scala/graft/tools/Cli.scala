@@ -44,12 +44,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val cmd = args.headOption.getOrElse("queries")
-    lazy val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    lazy val spark = graft.Sessions.local("graft-cli")
 
     cmd match {
       case "queries" =>

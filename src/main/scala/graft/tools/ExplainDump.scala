@@ -2,30 +2,21 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan dumper for the optimization rounds.
   *
   * Usage: ExplainDump <sfDir> <outDir> <suffix> [q1,q2,...]
   *
   * Writes `<outDir>/<query>_<suffix>.txt` with the formatted physical
   * plan of each named query (all queries when the filter is omitted).
-  * Session config mirrors Bench (same master/shuffle partitions) so
-  * the captured plans are the ones the bench actually runs.
+  * Builds its session like Bench ([[graft.Sessions.harness]]), so the
+  * captured plans are the ones the bench actually runs.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.harness("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     graft.SparkEntry.queries

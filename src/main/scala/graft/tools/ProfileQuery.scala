@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-stage profiler for the optimization rounds.
   *
@@ -11,20 +10,13 @@ import org.apache.spark.sql.SparkSession
   * warmup) and prints, per completed stage: task count, summed task
   * time, GC time, shuffle read/write bytes and the stage name — the
   * "which operator owns the wall clock" readout the Spark UI would
-  * give. Session config mirrors Bench.
+  * give. Builds its session like Bench ([[graft.Sessions.harness]]).
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val (sfDir, name) = (args(0), args(1))
     val iters = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.harness("graft-profile")
     spark.sparkContext.setLogLevel("ERROR")
     val fn = graft.SparkEntry.queries(name)
     // warmup: codegen + listing, and one full run at the target SF
