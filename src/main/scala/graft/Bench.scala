@@ -196,8 +196,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.harness("graft-bench", Map(
       // bucketed bench tables land in a throwaway warehouse (static conf)
-      "spark.sql.warehouse.dir" ->
-        java.nio.file.Files.createTempDirectory("graft-bench-wh").toString))
+      "spark.sql.warehouse.dir" -> Sessions.tempDir("graft-bench-wh").toString))
     // ERROR, not WARN: the driver json-parses the last 2000 chars of
     // stdout, and the allowlisted WindowExec warnings alone overflow
     // that budget (they are exactly what BENCH_r15's tail was full of)
@@ -225,7 +224,8 @@ object Bench {
     val policy = new BenchPolicy(entries, budget, sfDir.endsWith("sf0.1"),
       new BenchPolicy.Effects {
         def now: Double = elapsed
-        def time(entry: String): Double = {
+        // the entry's pins are released after its clock stops
+        def time(entry: String): Double = Pin.scope {
           val fn = factories(entry)()
           val t0 = System.nanoTime()
           val ok = try { fn(); true } catch { case _: Throwable => false }
@@ -364,7 +364,7 @@ object Bench {
     SparkEntry.queries
       .view.filterKeys(n => headline.contains(n) && want(n)).values.foreach { q =>
         if (elapsed < budget * BenchPolicy.WarmupShare)
-          try q(spark, warmDir).write.format("noop").mode("overwrite").save()
+          try Pin.scope(q(spark, warmDir).write.format("noop").mode("overwrite").save())
           catch { case _: Throwable => () }
       }
     // Streaming: producer-side materialization and the streaming
@@ -402,8 +402,7 @@ object Bench {
     val needServing = want("b05_point_lookups") || want("b06_sharded_lookups")
     val serving: Option[(graft.serving.TableServer, Int, Long)] = if (needServing) {
       import org.apache.spark.sql.functions._
-      val snapDir = java.nio.file.Files
-        .createTempDirectory("graft-serve-snap").toString
+      val snapDir = Sessions.tempDir("graft-serve-snap").toString
       Tables.events(spark, sfDir)
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"),

@@ -47,22 +47,27 @@ object Sessions {
     * stuck in FileOutputStream.open); sf0.1 shuffles are MBs, so tmpfs
     * absorbs them and keeps the disk's noise out of the timings.
     * Spark removes its own subdirectories at exit but not the parent,
-    * which would pile up in RAM across runs, so a shutdown hook
-    * removes it.
+    * which would pile up in RAM across runs, so it is a [[tempDir]].
     */
   private def scratchDir(): Option[String] =
     sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
       val shm = Paths.get("/dev/shm")
-      if (!Files.isWritable(shm)) None
-      else {
-        val d = Files.createTempDirectory(shm, "graft-spark-local")
-        sys.addShutdownHook(deleteTree(d))
-        Some(d.toString)
-      }
+      if (Files.isWritable(shm)) Some(tempDir("graft-spark-local", shm).toString)
+      else None
     }
 
+  /** A fresh directory under `parent`, deleted with its contents at JVM
+    * exit (best effort).
+    */
+  def tempDir(prefix: String,
+              parent: Path = Paths.get(System.getProperty("java.io.tmpdir"))): Path = {
+    val d = Files.createTempDirectory(parent, prefix)
+    sys.addShutdownHook(deleteTree(d))
+    d
+  }
+
   /** Best-effort recursive delete, deepest paths first. */
-  private def deleteTree(root: Path): Unit =
+  def deleteTree(root: Path): Unit =
     try Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
       .forEach(p => try Files.deleteIfExists(p) catch { case _: Throwable => () })
     catch { case _: Throwable => () }

@@ -108,16 +108,8 @@ object StreamBench {
         if (debug) dumpProgress(q)
         // each stage creates its own checkpoint; without this, a
         // multi-iteration bench leaks one temp dir per replay
-        deleteRecursively(java.nio.file.Paths.get(checkpoint))
+        Sessions.deleteTree(java.nio.file.Paths.get(checkpoint))
       }
-    }
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
     }
   }
 

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.Pin
+
 /** Event-sequence analytics over the events stream — the funnel /
   * conversion-path operators a product-analytics pipeline runs on the
   * same engine the training pipeline does.
@@ -1092,11 +1094,10 @@ object EventOps {
     * one-task sort was this report's scale cliff.
     */
   def abcFromPartRevenue(byPart: DataFrame): DataFrame = {
-    // census pinned (lazy localCheckpoint): referenced by the total,
-    // the bucket stats, and the kernel's subtotal+probe sides —
-    // without lineage truncation each reference recomputes the
-    // upstream rollup (GraphOps' documented pattern)
-    val pinned = byPart.localCheckpoint(false)
+    // census pinned (lazy): referenced by the total, the bucket stats,
+    // and the kernel's subtotal+probe sides — unpinned, each reference
+    // recomputes the upstream rollup
+    val pinned = Pin(byPart, eager = false)
     val tot = pinned.agg(sum(col("rev")).as("tv"))
     val withCum = PrefixSum.groupedRunningSum(
       PrefixSum.uniformBucket(pinned, col("rev"), 4096, "__babc",

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Pin
+
 /** Distributed connected components — the step that turns near-dup
   * PAIRS into dedup CLUSTERS (one canonical document per component).
   *
@@ -39,46 +41,33 @@ object GraphOps {
       .union(directed.select(col("v").as("u"), col("u").as("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // localCheckpoint truncates lineage each iteration — the
-    // compression step references the previous frame twice, so without
-    // truncation the logical plan doubles per iteration and the driver
-    // OOMs long before the data does. (On a real cluster with a
-    // checkpoint dir, `checkpoint` gives the same cut fault-tolerantly.)
-    var labels = nodes.select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(true)
+    // pinned per iteration: the compression step references the
+    // previous frame twice, so the uncut plan would double per round
+    var labels = Pin(nodes.select(col("id"), col("id").as("lbl")))
     var changed = 1L
     while (changed > 0) {
       // (a) min over own + neighbors' labels. The iteration-start
       // label rides along as `prev` so convergence detection below is
-      // a scan of the checkpointed frame, not another shuffle join.
+      // a scan of the pinned frame, not another shuffle join.
       val nbrMin = sym.join(labels, sym("v") === labels("id"))
         .groupBy(sym("u").as("nid")).agg(min(col("lbl")).as("nlbl"))
-      val stepped = labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
+      // eager: `next` reads it on both join legs of one job
+      val stepped = Pin(labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
         .select(labels("id"),
           least(labels("lbl"), coalesce(col("nlbl"), labels("lbl"))).as("lbl"),
-          labels("lbl").as("prev"))
-        .localCheckpoint(true)
+          labels("lbl").as("prev")))
       // (b) pointer jumping: lbl := lbl's current lbl (path compression).
-      // LAZY checkpoint (r18): the convergence count right below is
-      // the action that materializes it, so each iteration costs two
-      // jobs (stepped's eager pin + this count) instead of three.
-      // stepped itself must stay EAGER — `next` references it twice
-      // (both join legs), and a lazy pin materialized by two sibling
-      // stages of one job can race both into computing the partitions.
+      // Lazy: the convergence count right below materializes it.
       val l2 = stepped.select(col("id").as("jid"), col("lbl").as("jlbl"))
-      val next = stepped.join(l2, stepped("lbl") === l2("jid"), "left")
+      val next = Pin(stepped.join(l2, stepped("lbl") === l2("jid"), "left")
         .select(stepped("id"),
           coalesce(col("jlbl"), stepped("lbl")).as("lbl"),
-          stepped("prev"))
-        .localCheckpoint(false)
+          stepped("prev")), eager = false)
       changed = next.where(col("lbl") =!= col("prev")).count()
-      // `next` is materialized by the count and no longer depends on
-      // stepped — drop its blocks now, and the previous iteration's
-      // labels with them. Without this, MEMORY_AND_DISK blocks
-      // accumulate for the job lifetime on deep graphs (one superseded
-      // frame per iteration).
-      org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(stepped)
-      org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(labels)
+      // `next` is materialized and no longer reads stepped or labels:
+      // drop both, so deep graphs hold one iteration's blocks at a time
+      Pin.release(stepped)
+      Pin.release(labels)
       labels = next
     }
     sym.unpersist()
@@ -105,7 +94,7 @@ object GraphOps {
     *
     * Convergence: with `tol` set, iteration stops as soon as the max
     * per-node rank change of a round is ≤ tol — the delta is read from
-    * the round's already-localCheckpointed frame (the previous rank
+    * the round's already-pinned frame (the previous rank
     * rides along as `prev`, the CC loop's convergence-read pattern), so
     * early-stop costs one scalar scan of materialized rows per round,
     * not a recompute. `tol = None` (the oracle mode) runs exactly
@@ -143,61 +132,89 @@ object GraphOps {
     val n = nodes.count()
     val hasOut = outW.select(col("u").as("node"))
 
-    var ranks = nodes.select(col("node"),
-      round(lit(1.0) / n, 9).as("rank")).localCheckpoint(true)
+    var ranks = Pin(nodes.select(col("node"), round(lit(1.0) / n, 9).as("rank")))
     var rounds = 0
     var converged = false
-    // Round frames are LAZY checkpoints (r18): each round already runs
-    // a one-double driver read (the dangling-mass scalar, and the tol
-    // delta when early-stop is on), and that action materializes the
-    // round's frame through its predecessor's still-live cache — a
-    // separate eager-checkpoint job per round only re-did that work.
-    // A predecessor's blocks may only be dropped AFTER some action has
-    // materialized its successor (lineage is truncated at the
-    // checkpoint, so an early drop would be unrecoverable) — hence the
-    // one-round-delayed unpersist.
-    var pendingUnpersist: Option[DataFrame] = None
+    // Round frames are lazy pins: each round's one-double driver read
+    // (the dangling-mass scalar) materializes the previous round's
+    // frame. A predecessor may be released only AFTER that read —
+    // hence the one-round-delayed release.
+    var pendingRelease: Option[DataFrame] = None
     while (rounds < iters && !converged) {
       // dangling nodes hold rank but transport none through edges;
       // their mass re-enters uniformly (the standard teleport fix)
       // scalar per round, same class as the CC loop's convergence
       // count — a one-double driver read, not a data-plane collect.
-      // This read is also what materializes a lazily-checkpointed
+      // This read is also what materializes a lazily pinned
       // `ranks` from the previous round.
       val dangling = ranks.join(hasOut, Seq("node"), "left_anti")
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("m"))
         .head().getDouble(0)
-      pendingUnpersist.foreach(
-        org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint)
-      pendingUnpersist = None
+      pendingRelease.foreach(Pin.release)
+      pendingRelease = None
       val inbound = frac.join(ranks, frac("u") === ranks("node"))
         .groupBy(frac("v").as("node"))
         .agg(sum(col("rank") * col("f")).as("m"))
       // ranks is the spine (it covers every node, invariantly), so the
       // outgoing rank can ride along as `prev` for the delta read
-      val next = ranks.select(col("node"), col("rank").as("prev"))
+      val next = Pin(ranks.select(col("node"), col("rank").as("prev"))
         .join(inbound, Seq("node"), "left")
         .select(col("node"),
           round(lit((1.0 - damping) / n) +
             lit(damping) * (coalesce(col("m"), lit(0.0)) + lit(dangling / n)),
             9).as("rank"),
-          col("prev"))
-        .localCheckpoint(false)
+          col("prev")), eager = false)
       rounds += 1
       converged = tol.exists { t =>
         next.agg(max(abs(col("rank") - col("prev"))))
           .head().getDouble(0) <= t
       }
-      pendingUnpersist = Some(ranks)
+      pendingRelease = Some(ranks)
       ranks = next
     }
     // the final round's frame may still be unmaterialized — pin it
     // before its (truncated-lineage) inputs are dropped below
     ranks.count()
-    pendingUnpersist.foreach(
-      org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint)
+    pendingRelease.foreach(Pin.release)
     e.unpersist(); frac.unpersist(); nodes.unpersist()
     (ranks.select(col("node"), col("rank")), rounds)
+  }
+
+  /** Synchronous label propagation (Raghavan et al. 2007), the
+    * fixed-round deterministic variant: labels start as node ids;
+    * each round every node adopts the neighbor label with the
+    * greatest incident edge weight, ties to the SMALLEST label. The
+    * argmax is ONE partial-agg `min(struct(-s, lbl))` per round — no
+    * per-node sorts — and fixed rounds + total tie order make the
+    * result engine-reproducible (u12's oracle unrolls the same
+    * rounds). Input edges are treated as undirected (symmetrized,
+    * parallel edges summed); callers use integer-count weights, so
+    * the weight sums are double-exact. Per-round shuffle is |edges|
+    * label lookups + a node-key agg — the u06 round shape.
+    */
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
+    require(rounds > 0, "rounds must be positive")
+    val dir0 = edges.select(col("u").cast("string").as("u"),
+      col("v").cast("string").as("v"), col("w").cast("double").as("w"))
+    val und = dir0
+      .unionAll(dir0.select(col("v").as("u"), col("u").as("v"), col("w")))
+      .groupBy("u", "v").agg(sum(col("w")).as("w"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = und.select(col("u").as("node")).distinct()
+    var labels = Pin(nodes.select(col("node"), col("node").as("lbl")))
+    (1 to rounds).foreach { _ =>
+      val nbr = und
+        .join(labels.select(col("node").as("v"), col("lbl").as("nl")),
+          Seq("v"))
+        .groupBy("u", "nl").agg(sum(col("w")).as("s"))
+      val prev = labels
+      labels = Pin(nbr.groupBy("u")
+        .agg(min(struct((col("s") * -1).as("ns"), col("nl"))).as("m"))
+        .select(col("u").as("node"), col("m.nl").as("lbl")))
+      Pin.release(prev)
+    }
+    und.unpersist()
+    labels
   }
 
   /** HITS hubs & authorities (Kleinberg) by power iteration — the
@@ -226,45 +243,6 @@ object GraphOps {
     *              edges should be pre-aggregated into `w` (weights > 0)
     * @return (`node`, `hub`, `auth`) for every node in the graph
     */
-  /** Synchronous label propagation (Raghavan et al. 2007), the
-    * fixed-round deterministic variant: labels start as node ids;
-    * each round every node adopts the neighbor label with the
-    * greatest incident edge weight, ties to the SMALLEST label. The
-    * argmax is ONE partial-agg `min(struct(-s, lbl))` per round — no
-    * per-node sorts — and fixed rounds + total tie order make the
-    * result engine-reproducible (u12's oracle unrolls the same
-    * rounds). Input edges are treated as undirected (symmetrized,
-    * parallel edges summed); callers use integer-count weights, so
-    * the weight sums are double-exact. Per-round shuffle is |edges|
-    * label lookups + a node-key agg — the u06 round shape.
-    */
-  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    require(rounds > 0, "rounds must be positive")
-    val dir0 = edges.select(col("u").cast("string").as("u"),
-      col("v").cast("string").as("v"), col("w").cast("double").as("w"))
-    val und = dir0
-      .unionAll(dir0.select(col("v").as("u"), col("u").as("v"), col("w")))
-      .groupBy("u", "v").agg(sum(col("w")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = und.select(col("u").as("node")).distinct()
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
-      .localCheckpoint(true)
-    (1 to rounds).foreach { _ =>
-      val nbr = und
-        .join(labels.select(col("node").as("v"), col("lbl").as("nl")),
-          Seq("v"))
-        .groupBy("u", "nl").agg(sum(col("w")).as("s"))
-      val prev = labels
-      labels = nbr.groupBy("u")
-        .agg(min(struct((col("s") * -1).as("ns"), col("nl"))).as("m"))
-        .select(col("u").as("node"), col("m.nl").as("lbl"))
-        .localCheckpoint(true)
-      prev.unpersist()
-    }
-    und.unpersist()
-    labels
-  }
-
   def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters > 0, "iters must be positive")
     val e = edges.select(col("u").cast("string").as("u"),
@@ -282,30 +260,26 @@ object GraphOps {
       val flowed = e.join(score, e(from) === score("node"))
         .groupBy(e(to).as("node"))
         .agg(sum(col(scoreCol) * col("w")).as("s"))
-      // lazy checkpoint (r18): the L1-total read right below is the
-      // action that materializes it — was a separate eager job
-      val raw = nodes.join(flowed, Seq("node"), "left")
-        .select(col("node"), round(coalesce(col("s"), lit(0.0)), 9).as("raw"))
-        .localCheckpoint(false)
+      // lazy: the L1-total read right below materializes it
+      val raw = Pin(nodes.join(flowed, Seq("node"), "left")
+        .select(col("node"), round(coalesce(col("s"), lit(0.0)), 9).as("raw")),
+        eager = false)
       val total = raw.agg(sum(col("raw"))).head().getDouble(0)
-      val out = raw
-        .select(col("node"), round(col("raw") / lit(total), 9).as(outCol))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(raw)
+      val out = Pin(raw
+        .select(col("node"), round(col("raw") / lit(total), 9).as(outCol)))
+      Pin.release(raw)
       out
     }
 
-    var hub = nodes.select(col("node"), round(lit(1.0) / n, 9).as("hub"))
-      .localCheckpoint(true)
+    var hub = Pin(nodes.select(col("node"), round(lit(1.0) / n, 9).as("hub")))
     var auth: DataFrame = null
     var i = 0
     while (i < iters) {
       val authNext = halfStep(hub, "hub", "u", "v", "auth")
-      if (auth != null)
-        org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(auth)
+      if (auth != null) Pin.release(auth)
       auth = authNext
       val hubNext = halfStep(auth, "auth", "v", "u", "hub")
-      org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(hub)
+      Pin.release(hub)
       hub = hubNext
       i += 1
     }
@@ -371,17 +345,15 @@ object GraphOps {
     val perNode = triangles
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-    // materialize before dropping the cached frames the plan reads
-    // (the CC loop's checkpoint-then-unpersist pattern)
-    val res = deg.join(perNode, Seq("node"), "left")
+    // pinned before dropping the cached frames the plan reads
+    val res = Pin(deg.join(perNode, Seq("node"), "left")
       .select(col("node"), col("deg").as("degree"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
         when(col("deg") >= 2,
           round(lit(2.0) * coalesce(col("n_triangles"), lit(0L))
             / (col("deg") * (col("deg") - 1)), 6))
           .otherwise(lit(0.0)).as("clustering"))
-      .orderBy("node")
-      .localCheckpoint(true)
+      .orderBy("node"))
     oriented.unpersist()
     und.unpersist()
     res

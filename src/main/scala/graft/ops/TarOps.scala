@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.types._
 
+import graft.Pin
+
 /** USTAR (POSIX.1-1988 tar) codec + WebDataset shard grouping — the
   * container format large-scale training pipelines actually shard
   * into: a WebDataset shard IS a tar archive whose member files group
@@ -385,32 +387,29 @@ object TarOps {
     val withToks = docs.withColumn("__n_toks", TextOps.tokenCount(col("text")))
     val ep = SampleOps.materializeEpochPlan(withToks, "source", "doc_id",
       col("__n_toks"), weights, budget, maxEpochs)
-    val keyed = ep
+    // pinned (lazy): the rank kernel reads this frame on both its
+    // subtotal and probe sides — unpinned, the epoch join + per-row md5
+    // prefix executes twice (same pattern as `shards` below)
+    val keyed = Pin(ep
       .join(docs.select("doc_id", "text"), Seq("doc_id"))
       .withColumn("ck", concat(col("doc_id"), lit(":"), col("copy_idx")))
       // rank by the RAW 60-bit hash, not its double image: two hashes
       // that collide in double but differ as longs would let engines
       // order them differently through the tiebreaker
       .withColumn("uhl",
-        graft.functions.PortableHash.mdHash60(concat(lit("#"), col("ck"))))
-      // pinned: the rank kernel reads this frame on both its subtotal
-      // and probe sides — without truncation the epoch join + per-row
-      // md5 prefix executes twice (same pattern as `shards` below)
-      .localCheckpoint(false)
+        graft.functions.PortableHash.mdHash60(concat(lit("#"), col("ck")))),
+      eager = false)
     val positioned = PrefixSum.groupedRowNumber(keyed, Seq("source"),
       order = Seq(col("uhl"), col("doc_id"), col("copy_idx")),
       bucket = floor(col("uhl") / lit(1L << 48)).cast("long"),
       out = "pos")
-    // pinned (lazy localCheckpoint): the walk AND the provenance
-    // extraction both read the shards — without lineage truncation
-    // the whole epoch→shuffle→pack prefix (including the tar encode)
-    // would execute twice (GraphOps' documented pattern; reliable
-    // checkpoint on a real cluster)
-    val shards = textToWdsShards(
+    // pinned (lazy): the walk AND the provenance extraction both read
+    // the shards — unpinned, the whole epoch→shuffle→pack prefix
+    // (including the tar encode) would execute twice
+    val shards = Pin(textToWdsShards(
       positioned.select(col("source"), col("pos").as("doc_id"),
         col("text"), col("ck").as("lang")),
-      byteBudget)
-      .localCheckpoint(false)
+      byteBudget), eager = false)
     val walked = wdsSamples(shards)
     val prov = wdsExtractText(shards, "cls")
       .select(col("source").as("__psrc"), col("sample_key").as("__pkey"),

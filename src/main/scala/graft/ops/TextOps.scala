@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Text-analysis + dedup operators for large-scale document pipelines.
   *
   * All scalar paths are built from `org.apache.spark.sql.functions`
@@ -813,10 +815,9 @@ object TextOps {
     // definitionally identical (bit-parity spec-pinned in OpsSpec).
     // pinned (r19): consumed under two join keys (id_a, id_b) — the
     // tokenize+sort pass otherwise runs twice
-    val lex = df.select(col(idCol).as("id"),
+    val lex = Pin(df.select(col(idCol).as("id"),
         array_sort(array_distinct(tokens(col(textCol)))).as("lt"))
-      .select(col("id"), col("lt"), size(col("lt")).cast("long").as("n"))
-      .localCheckpoint(true)
+      .select(col("id"), col("lt"), size(col("lt")).cast("long").as("n")))
     // Verify-join strategy is SIZE-ADAPTIVE (the README's "broadcast
     // the small side always", applied to the doc-array side):
     //  - small corpus (row count from the INPUT df — a metadata-cheap
@@ -901,15 +902,14 @@ object TextOps {
     // pinned (r19): `prefix` below feeds BOTH legs of the collision
     // self-join (stream repartition + broadcast build), so the df-join
     // + rarest-first re-sort subtree otherwise runs twice
-    val sorted = toks.join(dfreq, "tok")
+    val sorted = Pin(toks.join(dfreq, "tok")
       .groupBy(col("id"), col("n_toks"))
       .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("o"))
       .select(col("id"), col("n_toks"),
         transform(col("o"), x => x.getField("tok")).as("stoks"))
       .withColumn("plen",
         col("n_toks") -
-          ceil(lit(threshold) * col("n_toks") - lit(1e-9)).cast("int") + 1)
-      .localCheckpoint(true)
+          ceil(lit(threshold) * col("n_toks") - lit(1e-9)).cast("int") + 1))
     // PPJoin's POSITIONAL filter was implemented and MEASURED here,
     // then rejected: at sf0.1 (t=0.9, rarest-first order) it pruned
     // candidates only 3.69M → 3.28M (−11%), while replacing the
@@ -1021,10 +1021,9 @@ object TextOps {
     // implicit drop of shingle-less docs (and keeps the ratio NaN-free).
     // sh pinned (r19): consumed under two join keys (id_a, id_b) — the
     // shingle-hash + sort pass otherwise runs twice
-    val sh = df.select(col(idCol).as("id"),
+    val sh = Pin(df.select(col(idCol).as("id"),
         sort_array(ngramHashes60(col(textCol), n)).as("sh"))
-      .select(col("id"), col("sh"), size(col("sh")).cast("long").as("n"))
-      .localCheckpoint(true)
+      .select(col("id"), col("sh"), size(col("sh")).cast("long").as("n")))
     candBoth
       .join(sh.toDF("id_a", "sa", "n_a"), Seq("id_a"))
       .join(sh.toDF("id_b", "sb", "n_b"), Seq("id_b"))
@@ -1083,9 +1082,8 @@ object TextOps {
     // pinned (r19): the truth join consumes this frame under two
     // different keys (id_a, id_b) — separate exchanges, no reuse — so
     // the tokenize+sort pass over the corpus ran twice per query
-    val docsArr = df.select(col(idCol).as("id"),
-      array_sort(array_distinct(tokens(col(textCol)))).as("ts"))
-      .localCheckpoint(true)
+    val docsArr = Pin(df.select(col(idCol).as("id"),
+      array_sort(array_distinct(tokens(col(textCol)))).as("ts")))
     val truth = cand
       .join(docsArr.toDF("id_a", "ta"), Seq("id_a"))
       .join(docsArr.toDF("id_b", "tb"), Seq("id_b"))
@@ -1218,11 +1216,9 @@ object TextOps {
     // Pinned (r19): `groups` feeds the banding self-join (two legs)
     // AND the intra-group leg — three references that each re-ran the
     // signature kernel over the corpus (d03's final plan scanned
-    // documents 6×). One eager localCheckpoint of the compact
-    // (sig, ids) frame = one signature pass (see minHashSigFrame for
-    // why checkpoint, not persist).
-    val groups = sigs.groupBy("sig").agg(collect_list(col("id")).as("ids"))
-      .localCheckpoint(true)
+    // documents 6×). One eager pin of the compact (sig, ids) frame =
+    // one signature pass.
+    val groups = Pin(sigs.groupBy("sig").agg(collect_list(col("id")).as("ids")))
     val banded = groups.select(col("sig"), col("ids"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         bnd => xxhash64(bnd, slice(col("sig"), bnd * r + 1, lit(r)).cast("string")))))
@@ -1308,10 +1304,9 @@ object TextOps {
                                 bands: Int = 2): DataFrame = {
     // pinned (r19): consumed under two join keys (id_a, id_b) — the
     // tokenize+sort+md5 pass otherwise runs twice
-    val fps = df.select(col(idCol).as("id"),
+    val fps = Pin(df.select(col(idCol).as("id"),
       md5(array_join(array_sort(array_distinct(tokens(col(textCol)))), " "))
-        .as("set_fp"))
-      .localCheckpoint(true)
+        .as("set_fp")))
     // est = 1.0 ⇔ identical signatures (any position mismatch lowers
     // the estimate below 1), so this selects exactly the
     // identical-signature candidate groups
@@ -1388,11 +1383,10 @@ object TextOps {
     // pinned (r19): the corpus side is referenced by both the Bloom
     // sketch build (an action) and the band join; the increment side
     // by the band join's plan — one signature pass each either way
-    df.select(col(idCol).as("id"),
+    Pin(df.select(col(idCol).as("id"),
       minHashSignature(col(textCol), numHashes, portable).as("sig"))
       .where(col("sig").isNotNull)
-      .groupBy("sig").agg(collect_list(col("id")).as("ids"))
-      .localCheckpoint(true)
+      .groupBy("sig").agg(collect_list(col("id")).as("ids")))
 
   private def mhBanded(groups: DataFrame, bands: Int, r: Int): DataFrame =
     groups.select(col("sig"), col("ids"),
@@ -1468,14 +1462,14 @@ object TextOps {
                            portable: Boolean = false): DataFrame = {
     val sigs = minHashSigFrame(df, idCol, textCol, numHashes, portable)
     val out = dedupClustersFromSigFrame(sigs, numHashes, bands, minEstimate)
-    // the returned frame is pinned (ExistingRDD) — the signature pin's
-    // blocks are no longer reachable from it and can be dropped now
-    org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(sigs)
+    // the returned frame is pinned — the signature pin's blocks are no
+    // longer reachable from it and can be dropped now
+    Pin.release(sigs)
     out
   }
 
   /** Pinned `(id, sig)` MinHash signature frame — ONE signature pass
-    * over the corpus, materialized via an eager `localCheckpoint` so
+    * over the corpus, materialized via an eager [[graft.Pin]] so
     * every consumer (cluster labeling, candidate pairs, report legs)
     * reads the same blocks instead of re-running the kernel.
     *
@@ -1486,18 +1480,12 @@ object TextOps {
     * output join, CC pins its inputs in separate construction jobs,
     * and the banding self-join has two legs. The signature kernel is
     * the only corpus-sized work in the chain, so pinning it collapses
-    * the whole family to one pass. `localCheckpoint`, NOT `persist`:
-    * the CacheManager keys cached plans canonically, so a `persist`
-    * here would let a bench re-run of the same query silently reuse
-    * the previous run's cache (result caching — forbidden); a local
-    * checkpoint is a fresh RDD per call, always recomputed from
-    * parquet within the run that created it.
+    * the whole family to one pass.
     */
   def minHashSigFrame(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int, portable: Boolean): DataFrame =
-    df.select(col(idCol).as("id"),
-      minHashSignature(col(textCol), numHashes, portable).as("sig"))
-      .localCheckpoint(true)
+    Pin(df.select(col(idCol).as("id"),
+      minHashSignature(col(textCol), numHashes, portable).as("sig")))
 
   /** The cluster half of [[dedupClustersMinHash]] over an existing
     * `(id, sig)` frame — callers that also need candidate pairs
@@ -1544,12 +1532,11 @@ object TextOps {
     // groupBy+self-join: one reference to docLabels, one exchange on
     // cluster_id (the join version re-executed the whole label subtree
     // for the size leg and paid two more exchanges) — same values
-    docLabels
+    Pin(docLabels
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy("cluster_id")))
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-        (col("doc_id") === col("cluster_id")).cast("int").as("is_canonical"))
-      .localCheckpoint(true)
+        (col("doc_id") === col("cluster_id")).cast("int").as("is_canonical")))
   }
 
   /** Quality-aware cluster representative selection: instead of the
@@ -1576,11 +1563,12 @@ object TextOps {
     // output join — without the pin the quality-scoring pass (and the
     // label join) ran twice (d21's final plan scanned documents 20×
     // before the family-wide pins)
-    val scored = clusters.join(
+    val scored = Pin(clusters.join(
       df.select(col(idCol).as("doc_id"),
         quality("quality_score").as("quality_score")),
-      Seq("doc_id"))
-      .localCheckpoint(true)
+      Seq("doc_id")))
+    // nothing reachable from the returned frame reads `clusters` now
+    Pin.release(clusters)
     val rep = scored.groupBy("cluster_id")
       .agg(max(struct(col("quality_score").as("q"),
         (-col("doc_id")).as("neg_id"))).as("best"))
@@ -1646,8 +1634,7 @@ object TextOps {
     // groups — and the signature here is often an IMAGE hash (m05/
     // m11/m13 perceptual pipelines), where re-decoding per reference
     // is far worse than re-splitting text
-    val groups = sigs.groupBy("sh").agg(collect_list(col("id")).as("ids"))
-      .localCheckpoint(true)
+    val groups = Pin(sigs.groupBy("sh").agg(collect_list(col("id")).as("ids")))
     val bandCols = array((0 until bands).map(b =>
       struct(lit(b).as("band"),
         shiftrightunsigned(col("sh"), b * bits).bitwiseAND(lit(mask)).as("bits"))): _*)
@@ -1835,8 +1822,7 @@ object TextOps {
     // distinct-gram count table — bounded by the charset³, not the
     // corpus. (A whole-table window was tried first and correctly
     // rejected by PlanHygieneSpec's unpartitioned-window gate.)
-    val counts = grams.groupBy("g").agg(count(lit(1)).as("gc"))
-      .localCheckpoint(true)
+    val counts = Pin(grams.groupBy("g").agg(count(lit(1)).as("gc")))
     val total = counts.agg(sum("gc").cast("double").as("_total"))
     val lm = counts.crossJoin(broadcast(total))
       .select(col("g"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Similarity search over embedding columns (`array<float>`).
   *
   * Scalar math is pure `functions._` HOFs (zip_with/aggregate) — stays
@@ -260,13 +262,11 @@ object VectorOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cached ::= sel
     }
-    // eager localCheckpoint materializes the |Q|·kSelect-row result
-    // (bounded by construction), truncating its lineage so every
-    // intermediate cache can be dropped NOW (the labelPropagation
-    // pattern in GraphOps) — callers hold only the checkpointed frame
-    val out = sel.select(col("qid").as("query_id"), col("mmr_rank"),
+    // pinned: the |Q|·kSelect-row result (bounded by construction) no
+    // longer reads the intermediate caches, so they can be dropped NOW
+    val out = Pin(sel.select(col("qid").as("query_id"), col("mmr_rank"),
       col("cid").as("vec_id"), col("rel").as("relevance"),
-      col("score").as("mmr_score")).localCheckpoint(true)
+      col("score").as("mmr_score")))
     cached.foreach(_.unpersist())
     cand.unpersist()
     pairs.unpersist()
@@ -542,10 +542,8 @@ object VectorOps {
                           portablePivots: Boolean = false): DataFrame = {
     // pinned (r19): the intra-cell self-join references the assignment
     // twice — each leg re-ran the scan + pivot broadcast + assignment
-    // window (see TextOps.minHashSigFrame for the checkpoint-not-
-    // persist rationale)
-    val assigned = ivfAssign(df, idCol, vecCol, nCells, probes, portablePivots)
-      .localCheckpoint(true)
+    // window
+    val assigned = Pin(ivfAssign(df, idCol, vecCol, nCells, probes, portablePivots))
     val a = assigned.select(col("cell"), col("id").as("id_a"),
       col("vec").as("vec_a"), col("nrm").as("nrm_a"))
     val b = assigned.select(col("cell"), col("id").as("id_b"),
@@ -830,7 +828,7 @@ object VectorOps {
     require(iters > 0, "iters must be positive")
     // pinned (r19): every Lloyd round's collect re-scanned the corpus
     // through kmBase — one scan + norm pass now feeds all rounds
-    val base = kmBase(df, idCol, vecCol).localCheckpoint(true)
+    val base = Pin(kmBase(df, idCol, vecCol))
     var cents = kmInitPivots(df, idCol, vecCol, k, portablePivots)
     for (_ <- 1 until iters) cents = kmCollect(kmUpdate(base, cents))
     // the last round stays lazy: callers get one scan + one shuffle
@@ -935,12 +933,11 @@ object VectorOps {
     // pinned (r19): per-round collects + the final assignment all
     // re-scanned the corpus; the assignment additionally feeds an
     // intra-cell SELF-join (two more evaluations) — pin both
-    val base = kmBase(df, idCol, vecCol).localCheckpoint(true)
+    val base = Pin(kmBase(df, idCol, vecCol))
     var cents = kmInitPivots(df, idCol, vecCol, nCells, portablePivots)
     for (_ <- 1 to iters) cents = kmCollect(kmUpdate(base, cents))
-    val assigned = base.select(col("id"), col("vec"), col("nrm"),
-      kmBestCell(cents).as("cell"))
-      .localCheckpoint(true)
+    val assigned = Pin(base.select(col("id"), col("vec"), col("nrm"),
+      kmBestCell(cents).as("cell")))
     val a = assigned.select(col("cell"), col("id").as("id_a"),
       col("vec").as("vec_a"), col("nrm").as("nrm_a"))
     val b = assigned.select(col("cell"), col("id").as("id_b"),
@@ -982,13 +979,12 @@ object VectorOps {
     require(pct > 0.0 && pct < 1.0, "pct must be in (0, 1)")
     // pinned (r19): rounds + scoring re-scanned the corpus; `scored`
     // feeds both the per-cell moments and the rank kernel
-    val base = kmBase(df, idCol, vecCol).localCheckpoint(true)
+    val base = Pin(kmBase(df, idCol, vecCol))
     var cents = kmInitPivots(df, idCol, vecCol, nCells, portablePivots)
     for (_ <- 1 to iters) cents = kmCollect(kmUpdate(base, cents))
     val best = kmBest(cents)
-    val scored = base.select(col("id"),
-      best.getField("cell").as("cell"), best.getField("sim").as("sim"))
-      .localCheckpoint(true)
+    val scored = Pin(base.select(col("id"),
+      best.getField("cell").as("cell"), best.getField("sim").as("sim")))
     // per-cell moments: mu/var from UNROUNDED avgs, then 6-dp snapped —
     // z is computed off the snapped stats so both engines divide
     // identical inputs (cf. kmUpdate's snapping contract)
@@ -1038,7 +1034,7 @@ object VectorOps {
     require(iters > 0, "iters must be positive")
     var cents = pqInit(df, idCol, vecCol, m, nCentroids, dim, portablePivots)
     // pinned (r19): each Lloyd round's collect re-ran the scan+explode
-    val subs = pqSubs(df, idCol, vecCol, m, dim / m).localCheckpoint(true)
+    val subs = Pin(pqSubs(df, idCol, vecCol, m, dim / m))
     for (_ <- 1 until iters) cents = pqCollect(pqUpdate(subs, cents), m)
     pqUpdate(subs, cents)
   }
@@ -1056,7 +1052,7 @@ object VectorOps {
     require(iters > 0, "iters must be positive")
     var cents = pqInit(df, idCol, vecCol, m, nCentroids, dim, portablePivots)
     // pinned (r19): rounds + the encode all re-ran the scan+explode
-    val subs = pqSubs(df, idCol, vecCol, m, dim / m).localCheckpoint(true)
+    val subs = Pin(pqSubs(df, idCol, vecCol, m, dim / m))
     for (_ <- 1 to iters) cents = pqCollect(pqUpdate(subs, cents), m)
     val best = pqBest(cents)
     subs.select(col("id"), col("sub"),
@@ -1092,13 +1088,12 @@ object VectorOps {
     import spark.implicits._
     // IVF cells over raw vectors (probes=1); pinned (r19) — the
     // candidate generation self-joins this frame (two legs)
-    val cells = ivfAssign(df, idCol, vecCol, nCells, probes = 1, portablePivots)
-      .select(col("cell"), col("id"))
-      .localCheckpoint(true)
+    val cells = Pin(ivfAssign(df, idCol, vecCol, nCells, probes = 1, portablePivots)
+      .select(col("cell"), col("id")))
     // trained PQ codebooks + doc codes; subs pinned (r19) — the Lloyd
     // rounds, the encode, AND the per-query LUT build all consume it
     var cents = pqInit(df, idCol, vecCol, m, nCentroids, dim, portablePivots)
-    val subs = pqSubs(df, idCol, vecCol, m, dim / m).localCheckpoint(true)
+    val subs = Pin(pqSubs(df, idCol, vecCol, m, dim / m))
     for (_ <- 1 to iters) cents = pqCollect(pqUpdate(subs, cents), m)
     val codes = subs.select(col("id").as("id_b"), col("sub"),
       pqBest(cents).getField("cell").as("code"))

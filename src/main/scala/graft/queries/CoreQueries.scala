@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pin, Tables}
 
 /** One named query per operator of SURVEY.md §2 (the faust operator
   * inventory re-expressed Spark-first), each with a DuckDB oracle.
@@ -2393,17 +2393,17 @@ object CoreQueries {
     Q("q86_topk_ties",
       (s, dir) => {
         import graft.ops.PrefixSum
-        // rollup pinned (lazy localCheckpoint): referenced by the
-        // distinct-grain kernel ~4x AND the final join-back — see
-        // q96's comment on the recompute compounding
-        val rev = Tables.lineitem(s, dir)
+        // rollup pinned (lazy): referenced by the distinct-grain
+        // kernel ~4x AND the final join-back — see q96's comment on
+        // the recompute compounding
+        val rev = Pin(Tables.lineitem(s, dir)
           .join(broadcast(Tables.part(s, dir)),
             col("l_partkey") === col("p_partkey"))
           .groupBy(col("p_brand"), col("p_name"))
           .agg(sum(col("l_extendedprice").cast("decimal(18,2)")
             * (lit(1.0).cast("decimal(18,2)")
-              - col("l_discount").cast("decimal(18,2)"))).as("revenue"))
-          .localCheckpoint(false)
+              - col("l_discount").cast("decimal(18,2)"))).as("revenue")),
+          eager = false)
         // dense_rank per brand ≡ row_number over the brand's DISTINCT
         // revenues, joined back on (brand, revenue) — and that rank
         // runs through the PrefixSum kernel (round 18): the rollup is
@@ -2412,8 +2412,8 @@ object CoreQueries {
         // exact decimals, so the join-back is an exact equi-join.
         // dist pinned too: the kernel + bucket stats reference IT ~4x,
         // and each reference would re-run the distinct shuffle
-        val dist = rev.select(col("p_brand"), col("revenue")).distinct()
-          .localCheckpoint(false)
+        val dist = Pin(rev.select(col("p_brand"), col("revenue")).distinct(),
+          eager = false)
         val ranked = PrefixSum.groupedRowNumber(
           PrefixSum.uniformBucket(dist, col("revenue"), 4096, "__b86",
             descending = true),
@@ -2501,14 +2501,11 @@ object CoreQueries {
     Q("q88_value_concentration",
       (s, dir) => {
         import graft.ops.PrefixSum
-        // pin the entity rollup: the kernel references its input ~4x
-        // (bucket stats, subtotals, probe, census) — without lineage
-        // truncation each reference recomputes the events rollup
-        // (GraphOps' documented localCheckpoint pattern; a real
-        // cluster swaps in reliable checkpoint)
-        val per = Tables.events(s, dir).groupBy("user_id")
-          .agg(sum(col("value").cast("decimal(18,2)")).as("v"))
-          .localCheckpoint(false)
+        // pin the entity rollup (lazy): the kernel references its input
+        // ~4x (bucket stats, subtotals, probe, census) — unpinned, each
+        // reference recomputes the events rollup
+        val per = Pin(Tables.events(s, dir).groupBy("user_id")
+          .agg(sum(col("value").cast("decimal(18,2)")).as("v")), eager = false)
         val ranked = PrefixSum.groupedRunningSums(
           PrefixSum.uniformBucket(per, col("v"), 4096, "__b88",
             descending = true),
@@ -2921,12 +2918,10 @@ object CoreQueries {
         import graft.ops.PrefixSum
         val ev = Tables.events(s, dir)
         val anchor = ev.agg(max(col("ts_sec")).as("now"))
-        // each pass pinned with a lazy localCheckpoint: a globalNtile
-        // references its input ~4x (bucket stats, subtotals, probe,
-        // census), so three CHAINED passes compound ~4^3 input
-        // recomputations without lineage truncation (GraphOps'
-        // documented pattern; reliable checkpoint on a real cluster)
-        val rfm = ev.where(col("event_type") === "purchase")
+        // each pass pinned (lazy): a globalNtile references its input
+        // ~4x (bucket stats, subtotals, probe, census), so three
+        // CHAINED passes compound ~4^3 input recomputations unpinned
+        val rfm = Pin(ev.where(col("event_type") === "purchase")
           .groupBy("user_id")
           .agg(max(col("ts_sec")).as("last_ts"),
             count(lit(1)).as("frequency"),
@@ -2934,17 +2929,14 @@ object CoreQueries {
           .crossJoin(broadcast(anchor))
           .select(col("user_id"),
             expr("(now - last_ts) div 86400").as("recency_days"),
-            col("frequency"), col("monetary"))
-          .localCheckpoint(false)
+            col("frequency"), col("monetary")), eager = false)
         val tiled = PrefixSum.globalNtile(
-          PrefixSum.globalNtile(
-            PrefixSum.globalNtile(rfm,
+          Pin(PrefixSum.globalNtile(
+            Pin(PrefixSum.globalNtile(rfm,
               col("recency_days"), descending = true,
-              tiebreak = col("user_id"), k = 5, out = "r_score")
-              .localCheckpoint(false),
+              tiebreak = col("user_id"), k = 5, out = "r_score"), eager = false),
             col("frequency"), descending = false,
-            tiebreak = col("user_id"), k = 5, out = "f_score")
-            .localCheckpoint(false),
+            tiebreak = col("user_id"), k = 5, out = "f_score"), eager = false),
           col("monetary"), descending = false,
           tiebreak = col("user_id"), k = 5, out = "m_score")
         val scored = tiled.select(col("user_id"), col("recency_days"),
@@ -3929,10 +3921,10 @@ object CoreQueries {
         // unpartitioned NTILE window one-task-sorted what is 10⁸⁺
         // rows at 100 TB; the distributed tile formula matches the
         // oracle's NTILE bit-for-bit.
-        // period rollups pinned (lazy localCheckpoint): the kernel
-        // references its input ~4x — see q96's comment
+        // period rollups pinned (lazy): the kernel references its
+        // input ~4x — see q96's comment
         def tiers(df: DataFrame, out: String): DataFrame =
-          PrefixSum.globalNtile(df.localCheckpoint(false),
+          PrefixSum.globalNtile(Pin(df, eager = false),
               col("spend"), descending = false,
               tiebreak = col("o_custkey"), k = 4, out = out)
             .select(col("o_custkey"), col(out))

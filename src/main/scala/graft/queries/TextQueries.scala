@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.ops.{BpeOps, LearnOps, TextOps}
 
 /** Dedup + text-analysis operators over the `documents` table —
@@ -607,12 +607,11 @@ object TextQueries {
         // pinned (r19): the funnel reads this frame five times (three
         // stage aggregations, the exact-keep grouping, and the
         // cluster labeling input) — each re-ran the scan+tokenize
-        val docs = Tables.documents(s, dir)
+        val docs = Pin(Tables.documents(s, dir)
           .select(col("doc_id"),
             TextOps.tokenCount(col("text")).cast("long").as("n_toks"),
             octet_length(col("text").cast("binary")).cast("long")
-              .as("n_bytes"), col("text"))
-          .localCheckpoint(true)
+              .as("n_bytes"), col("text")))
         def stage(df: org.apache.spark.sql.DataFrame, id: Int,
                   name: String): org.apache.spark.sql.DataFrame =
           df.agg(count(lit(1)).as("n_docs"),

@@ -32,25 +32,7 @@ object FileSources {
     * verify/bench runs must not leak corpus copies into the temp dir
     * (each round-trip query stages a full copy of its input).
     */
-  private lazy val stagingRoot: Path = {
-    val root = Files.createTempDirectory("graft-src-staging-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(root)))
-    root
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    import java.nio.file.{FileVisitResult, SimpleFileVisitor}
-    import java.nio.file.attribute.BasicFileAttributes
-    try Files.walkFileTree(p, new SimpleFileVisitor[Path] {
-      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
-        Files.deleteIfExists(f); FileVisitResult.CONTINUE
-      }
-      override def postVisitDirectory(d: Path, e: java.io.IOException): FileVisitResult = {
-        Files.deleteIfExists(d); FileVisitResult.CONTINUE
-      }
-    })
-    catch { case _: java.io.IOException => () } // best effort at exit
-  }
+  private lazy val stagingRoot: Path = graft.Sessions.tempDir("graft-src-staging-")
 
   /** Per-format staging with TWO live generations: starting a new
     * round trip reclaims the generation BEFORE last, so a DataFrame
@@ -69,7 +51,7 @@ object FileSources {
     val evicted = new java.util.concurrent.atomic.AtomicReference[Path]()
     lastStage.merge(prefix, (dir, null),
       (prev, _) => { evicted.set(prev._2); (dir, prev._1) })
-    if (evicted.get != null) deleteRecursively(evicted.get)
+    if (evicted.get != null) graft.Sessions.deleteTree(evicted.get)
     dir
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Changelog sink — the faust compacted changelog topic
   * (`/root/reference/faust/tables/base.py:253-286,449-478`) as a
   * batch-versioned parquet log with read-side compaction.
@@ -66,18 +68,18 @@ object ChangelogSink {
       .withColumn("_batch_id", lit(maxBatch))
     // stage the snapshot first: the overwrite below reads `raw`, and
     // parquet cannot overwrite a partition it is concurrently reading
-    val staged = snapshot.localCheckpoint(true)
-    staged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(dir)
+    Pin.scope {
+      Pin(snapshot).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch_id")
+        .parquet(dir)
+    }
     // drop superseded partitions
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dropped = batches.init.count { b =>
       fs.delete(new org.apache.hadoop.fs.Path(dir, s"_batch_id=$b"), true)
     }
-    org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(staged)
     dropped
   }
 }

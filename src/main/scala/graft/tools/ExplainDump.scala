@@ -22,7 +22,7 @@ object ExplainDump {
     graft.SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        try {
+        try graft.Pin.scope {
           val plan = fn(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)

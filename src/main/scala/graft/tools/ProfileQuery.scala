@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
+import graft.Pin
+
 /** Dev-only per-stage profiler for the optimization rounds.
   *
   * Usage: ProfileQuery <sfDir> <query> [iters]
@@ -10,7 +12,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * warmup) and prints, per completed stage: task count, summed task
   * time, GC time, shuffle read/write bytes and the stage name — the
   * "which operator owns the wall clock" readout the Spark UI would
-  * give. Builds its session like Bench ([[graft.Sessions.harness]]).
+  * give. Builds its session like Bench ([[graft.Sessions.harness]]),
+  * and like Bench releases each run's pins after its clock stops.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
@@ -20,8 +23,10 @@ object ProfileQuery {
     spark.sparkContext.setLogLevel("ERROR")
     val fn = graft.SparkEntry.queries(name)
     // warmup: codegen + listing, and one full run at the target SF
+    Pin.scope {
     fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    }
 
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -39,13 +44,13 @@ object ProfileQuery {
     }
     spark.sparkContext.addSparkListener(listener)
     var best = Double.MaxValue
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { _ => Pin.scope {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       if (dt < best) best = dt
       println(f"[profile] $name wall=$dt%.3fs")
-    }
+    }}
     spark.sparkContext.removeSparkListener(listener)
     Thread.sleep(500)
     rows.forEach(r => println(r))

@@ -21,12 +21,11 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Drop the storage blocks of a `localCheckpoint`ed DataFrame. The
-    * checkpointed RDD lives inside the plan's `LogicalRDD`; Dataset
-    * .unpersist only consults the CacheManager, so iterative algorithms
-    * (connected components) would otherwise accumulate MEMORY_AND_DISK
-    * blocks for every superseded iteration. Safe ONLY once nothing will
-    * read the frame again — lineage is truncated, blocks can't rebuild.
+  /** Drop the storage blocks of a `localCheckpoint`ed DataFrame whose
+    * analyzed plan is the bare `LogicalRDD` (a no-op on anything else).
+    * `Dataset.unpersist` only consults the CacheManager, so it never
+    * frees a checkpoint. Kept for callers outside this library; the
+    * library itself pins and releases through [[graft.Pin]].
     */
   def unpersistCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed match {

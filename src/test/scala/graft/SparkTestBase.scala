@@ -1,16 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.{Args, Status}
+import org.scalatest.{Args, Outcome, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session per suite (guide: one lazy session, not per test).
   * Each suite prints a start and an end line, so a log cut off mid-run
-  * names the suite that was running.
+  * names the suite that was running. Each test runs in its own
+  * [[Pin.scope]], so the pins a test makes are released when it ends.
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  override def withFixture(test: NoArgTest): Outcome =
+    Pin.scope(super.withFixture(test))
 
   override def run(testName: Option[String], args: Args): Status = {
     val t0 = System.nanoTime()
