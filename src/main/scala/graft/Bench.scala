@@ -2,10 +2,9 @@ package graft
 
 /** Benchmark main — driver runs this per round on sf0.1 → BENCH_r{N}.json.
   *
-  * Headline queries only: the quadratic oracle-checkable variants
-  * (token-Jaccard all-pairs, exhaustive near-dup) are correctness
-  * fixtures, not scale paths — their scale counterparts (MinHash LSH,
-  * LSH ANN) are benched instead.
+  * Entries ([[entryNames]]): every query in [[SparkEntry.allQueries]]
+  * except the quadratic oracle fixtures in [[NotBenched]] (their scale
+  * counterparts are benched instead), then the six [[Scenarios]].
   *
   * Each query is fully materialized through the noop sink (`count()`
   * would let Catalyst prune computed columns and under-report work).
@@ -31,167 +30,48 @@ package graft
   */
 object Bench {
 
-  private val headline = Seq(
-    "q01_filter_project", "q02_agg_table", "q03_groupby_rekey",
-    "q04_join_broadcast", "q05_multi_join", "q07_tumbling_window",
-    "q08_hopping_window", "q09_interval_join", "q10_set_table",
-    "q13_topk_per_group", "q18_json_codec", "q22_changelog_latest",
-    "q26_asof_join", "q37_asof_native",
-    "d01_dedup_exact", "d03_dedup_minhash", "d08_dedup_minhash_fast",
-    "d04_dedup_simhash", "d07_dedup_simhash_pairs",
-    "d11_decontam", "d12_dup_spans", "d13_dup_spans_fast",
-    "d14_span_scrub", "p05_mixture", "p06_funnel",
-    "s01_knn_cosine", "s03_knn_lsh", "s07_quantize_int8",
-    "t01_token_count", "t02_quality_score", "t04_fingerprint",
-    "t08_repetition", "t09_pii_redact", "t10_chunking", "p07_pack",
-    "q53_approx_distinct_portable",
-    "u02_url_normalize", "u04_url_dedup", "s09_semantic_dedup",
-    "t14_bigram_lm", "t15_cdc_chunks",
-    "t16_trigram_lm", "d19_cdc_dedup_incremental", "p12_leakfree_split_lsh",
-    "t17_cdc_chunks_fast", "s11_kmeans_train_fast",
-    "s12_knn_ivf_trained", "t18_quality_classifier", "s13_pq_train",
-    "s15_knn_ivfpq",
-    "t20_pmi_collocations", "t21_bpe_train", "d21_cluster_representative",
-    "q55_cms_frequency", "p14_perplexity_split",
-    "q57_dyadic_quantile", "q58_dyadic_quantile_grouped",
-    "d23_containment", "t24_source_drift", "u05_domain_scorecard",
-    "s17_ann_recall", "q59_bloom_membership", "p15_curriculum", "t25_keywords", "q60_event_funnel", "d24_minhash_calibration", "q61_bloom_grouped", "p16_token_budget", "q62_sessionize_batch", "s18_knn_sq8", "t26_classifier_eval",
-    "q63_profile", "d25_source_overlap", "u06_domain_pagerank",
-    "t27_token_entropy", "q64_pivot", "q65_hll_overlap",
-    "q66_skew_report", "q67_unpivot", "d26_jaccard_prefix",
-    "d27_containment_fast", "q68_cohort_retention", "t28_c4_clean",
-    "t29_dsir_weights", "d28_semantic_decontam", "q69_resample_gapfill",
-    "q70_attribution", "t30_gopher_gates", "p17_bottomk_sample",
-    "q71_kmv_distinct",
-    "u07_hits", "p18_frequency_cap", "q72_robust_stats",
-    "d29_ngram_novelty", "t31_lexical_diversity", "s19_mips",
-    "q73_join_size_cms", "q74_robust_anomaly", "t32_zipf_fit",
-    "t33_burstiness", "d30_lsh_tuner", "p19_dp_counts",
-    "d31_ngram_novelty_incremental", "q75_transition_matrix",
-    "t34_lift_table", "q76_corpus_diff", "q77_snapshot_asof",
-    "q78_time_weighted_avg", "p20_quota_sample", "s21_centroid_drift",
-    "q79_trend_per_group", "q80_funnel_latency",
-    "t35_target_encode", "q81_session_stats", "t36_effective_tokens",
-    "p21_quantile_normalize", "q82_funnel_dropoff",
-    "q83_share_of_total", "q84_growth_daily", "q85_histogram",
-    "q86_topk_ties", "q87_weighted_median", "p22_stratified_split",
-    "t37_readability", "t38_encoding_qa", "d32_dup_window_fraction",
-    "s22_knn_rerank", "u08_robots_rules",
-    "q88_value_concentration", "q89_new_vs_returning", "p23_epoch_plan",
-    "t39_blocklist", "s23_principal_component", "m06_modality_budget",
-    "q90_cohort_ltv", "q91_top_paths", "t40_lang_confusion",
-    "q92_scd2_build", "q93_dq_checks", "t41_inverted_index",
-    "u09_crawl_priority", "d33_fuzzy_key_pairs", "s24_ivf_balance",
-    "q94_pit_join", "p24_epoch_materialize", "s25_remove_top_component",
-    "q95_seasonal_decompose", "q96_rfm_segments", "q97_late_shipment",
-    "t43_sentence_chunks", "d34_entity_clusters", "q99_sliding_distinct",
-    "t44_tokenizer_fertility", "q100_assoc_rules", "p25_split_leak_audit",
-    "q98_weekday_profile", "q101_attribution_compare", "q102_ship_latency",
-    "q103_entry_path_conversion", "p26_cluster_balanced_sample",
-    "q104_weekly_movers", "q105_gap_spectrum", "u10_param_census",
-    "q106_lag_correlation", "q107_local_supplier_volume",
-    "q108_growth_accounting", "d35_entity_match_incremental",
-    "t46_heaps_curve", "p27_split_psi",
-    "q109_small_qty_revenue", "s26_triplet_mining", "s27_mmr_rerank",
-    "s28_matryoshka_recall", "u11_politeness_plan", "m07_shard_manifest",
-    "p28_token_waterfill", "d36_source_minhash_matrix",
-    "q110_window_funnel", "q111_kmv_setops", "p29_mixture_eg",
-    "m08_prototype_gate", "s29_inbatch_negatives", "s30_sq8_calibration",
-    "q112_ab_test", "d37_dual_channel_dedup", "t47_textrank",
-    "q113_price_volume_bridge", "s31_ndcg",
-    "q114_dormant_capital", "s32_rrf_fusion", "t48_kwic_concordance",
-    "q115_gini_by_nation", "m09_modality_dropout",
-    "q116_min_cost_supplier", "q117_sole_late_supplier",
-    "q118_cross_sell_pairs", "q119_important_brands",
-    "q120_tier_migration", "p30_shuffle_quality_audit",
-    "p31_class_weights", "s33_cosine_spectrum", "s34_recall_curve",
-    "t49_char_trigram_lm", "t50_license_tagger",
-    "d38_cluster_quality", "d39_dedup_funnel",
-    "m05_perceptual_near_dup",
-    "u12_domain_communities", "q121_abc_classification",
-    "d40_shingle_minhash", "q122_rolling_retention",
-    "d41_shingle_minhash_fast",
-    // round-13 coverage close: every remaining oracle query is benched
-    // unless its shape is a deliberately-quadratic correctness fixture —
-    // those few are excluded with per-entry reasons in BASELINE.md
-    "q06_semi_join", "q11_global_table", "q12_window_close",
-    "q14_distinct", "q15_union_combine", "q16_scalar_strings",
-    "q17_scalar_dates", "q19_enumerate", "q20_sort_limit",
-    "q21_window_delta", "q23_left_outer_join", "q24_rollup",
-    "q25_approx_distinct", "q27_session_window", "q28_full_outer_join",
-    "q29_percentiles", "q30_conditional_agg", "q31_cube",
-    "q32_analytic_suite", "q33_anti_join", "q34_scalar_math",
-    "q35_set_ops", "q36_string_suite", "q38_posexplode",
-    "q39_intersect_except", "q40_date_arithmetic", "q41_grouping_sets",
-    "q42_conditionals", "q43_crontab_match", "q44_field_validation",
-    "q45_array_suite", "q46_window_frames", "q47_stats_suite",
-    "q48_asof_forward", "q49_map_suite", "q50_base64_codec",
-    "q51_approx_bounds", "q52_percentile_bounds",
-    "q54_approx_distinct_grouped", "q56_cms_grouped",
-    "d06_dedup_clusters_minhash",
-    "d09_dedup_incremental", "d10_dedup_minhash_incremental",
-    "d15_dedup_incremental_bloom", "d16_dedup_minhash_verified",
-    "d18_cdc_dedup", "d20_dedup_minhash_incremental_bloom",
-    "d22_cluster_histogram",
-    "m01_binary_meta", "m02_frame_offsets", "m03_embed_search",
-    "m04_resize_plan", "m10_png_meta", "m11_png_phash",
-    "p01_hash_split", "p02_sample_hash", "p03_sample_per_group",
-    "p04_balance", "p08_shuffle_shards", "p09_temperature_mixture",
-    "p10_weighted_sample", "p13_kfold",
-    "s04_label_norms", "s05_knn_ivf", "s06_ivf_centroids",
-    "s08_pq_codes", "s10_kmeans_train", "s14_pq_codes_trained",
-    "s16_embedding_outliers",
-    "t03_lang_id", "t05_ngrams", "t06_tfidf", "t07_regex_tokens",
-    "t11_unigram_lm", "t12_vocab_coverage", "t13_corpus_report",
-    "t19_bm25", "t22_bpe_segment", "t23_freq_spectrum",
-    "u01_url_parse", "u03_domain_stats",
-    "d17_text_knn", "s02_embedding_near_dup",
-    // round-13 TPC-H-shape additions + the mergeable top-k summary
-    "q123_volume_shipping", "q124_market_share", "q125_product_profit",
-    "q126_returned_revenue", "q127_promo_share", "q128_large_orders",
-    "q129_disjunctive_revenue", "t51_mergeable_topk",
-    "q130_zorder_skipping", "q131_stickiness", "q132_engagement_depth",
-    // round-14 additions: the engagement sketch twin, the MG-stream
-    // bound gate (includes its bounded 500-doc streaming replay —
-    // deliberately, the replay IS the operator), the TPC-H Q20-Q22
-    // shapes, the JPEG codec pair, and the triangle census
-    "q133_stickiness_sketch", "t52_mg_stream_bounds",
-    "q134_recent_concentration", "q135_sole_late_shipper",
-    "q136_dormant_rich", "m12_jpeg_meta", "m13_jpeg_phash",
-    "u13_triangle_census", "q137_cdc_merge", "u14_redirect_resolution",
-    // round-15 additions: the color (YCbCr 4:2:0) codec pair, WAV/PCM
-    // audio features, GIF/LZW frame sampling, real bilinear resize
-    "m14_color_jpeg", "m15_wav_stats", "m16_gif_frames", "m17_real_resize",
-    // round-15 second batch: file-source connectors (write+read I/O is
-    // the workload — staged like the m-series own-encoder fixtures),
-    // NFC normalization (narrow codegen map), windowed audio contour
-    "q138_json_source", "q139_csv_source", "q140_orc_source",
-    "q141_partitioned_source", "q142_xml_source", "q143_variant_codec",
-    "q144_schema_evolution", "t53_unicode_normalize", "m18_audio_frames",
-    // round-16 additions: streaming lake ingestion (availableNow
-    // multi-batch file tracking — the connector's continuous twin),
-    // zstd-compressed parquet round trip (the 100 TB codec), GIF
-    // animation timing metadata + MP3 frame-header walk (header-only
-    // container scans, no pixel/audio decode)
-    "q145_stream_ingest", "q146_zstd_source", "m19_gif_timing",
-    "m20_mp3_meta", "m21_wds_shards", "m22_wds_samples",
-    "m23_wds_extract", "m24_wds_wav_loop", "m25_wds_jpeg_loop",
-    "q147_enumerate_distributed", "q148_wds_shard_files",
-    "q149_binary_source", "p32_epoch_to_wds", "p33_curation_pipeline")
-    // NOT benched (measured r13, reasons in BASELINE.md §exclusions):
-    //   d02_dedup_jaccard   88.8 s — exact all-pairs token-Jaccard, the
-    //     deliberately-quadratic oracle fixture; scale path = d03/d08
-    //     MinHash (benched) and d26's prefix filter (benched)
-    //   d05_dedup_clusters  87.3 s — connected components over d02's
-    //     exact pair edges; scale path = d06 MinHash clusters (benched)
-    //   p11_leakfree_split  86.6 s — split over d05's exact clusters;
-    //     scale path = p12 LSH split (benched)
+  /** Registered queries the bench does not time, each with its
+    * measured reason (r13; BASELINE.md §exclusions).
+    */
+  val NotBenched: Map[String, String] = Map(
+    "d02_dedup_jaccard" -> ("88.8 s: exact all-pairs token-Jaccard, the " +
+      "deliberately quadratic oracle fixture; scale path = d03/d08 MinHash " +
+      "and d26's prefix filter (benched)"),
+    "d05_dedup_clusters" -> ("87.3 s: connected components over d02's exact " +
+      "pair edges; scale path = d06 MinHash clusters (benched)"),
+    "p11_leakfree_split" -> ("86.6 s: split over d05's exact clusters; " +
+      "scale path = p12 LSH split (benched)"))
+
+  /** Scenarios over the events table, reported in `rows_per_sec`. */
+  private val EventScenarios = Seq("b01_consume_baseline", "b02_forward",
+    "b03_stream_windowed")
+
+  /** The bench's own scenarios (BASELINE.md), always in the compact line. */
+  val Scenarios: Seq[String] = EventScenarios ++ Seq("b04_bucketed_multi_join",
+    "b05_point_lookups", "b06_sharded_lookups")
+
+  /** Every entry, in run order: the registered queries minus
+    * [[NotBenched]], then the [[Scenarios]].
+    */
+  val entryNames: Seq[String] =
+    SparkEntry.allQueries.map(_.name).filterNot(NotBenched.contains) ++ Scenarios
+
+  /** Materializes every column through the noop sink (see above). */
+  private def noop(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
     val tStart = System.nanoTime()
     val budget =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "2250").toDouble
     def elapsed: Double = (System.nanoTime() - tStart) / 1e9
+
+    // Local-iteration filter: SPARK_GRAFT_BENCH_ONLY=t09_pii_redact,d12_...
+    // times just those entries; a name that is no entry fails here,
+    // before any Spark work. Unset → every entry.
+    val entries = SparkEntry.selectFrom(
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY"), entryNames)(identity)
+    val want = entries.toSet
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.harness("graft-bench", Map(
@@ -202,21 +82,10 @@ object Bench {
     // that budget (they are exactly what BENCH_r15's tail was full of)
     spark.sparkContext.setLogLevel("ERROR")
 
-    // Local-iteration filter: SPARK_GRAFT_BENCH_ONLY=t09_pii_redact,d12_...
-    // times just those entries. Unset (driver runs) → everything.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def want(name: String): Boolean = only.forall(_.contains(name))
-
-    // ---- entries, timing policy + always-valid emission (defined
-    // before any heavy work so the shutdown hook can report a partial
-    // run); each entry's FACTORY is registered after its untimed prep ----
-    val queries = SparkEntry.queries
-    val scenarioNames = Seq("b01_consume_baseline", "b02_forward",
-      "b03_stream_windowed", "b04_bucketed_multi_join", "b05_point_lookups",
-      "b06_sharded_lookups")
-    val entries = headline.filter(n => queries.contains(n) && want(n)) ++
-      scenarioNames.filter(want)
+    // ---- timing policy + always-valid emission (defined before any
+    // heavy work so the shutdown hook can report a partial run); each
+    // entry's FACTORY is registered after its untimed prep ----
+    val batch = SparkEntry.allQueries.filter(q => want(q.name))
     // factory() runs untimed setup and returns the closure that gets
     // timed (batch queries need no setup; b03 stages its replay in the
     // factory) — a factory is invoked again for every sample
@@ -236,8 +105,6 @@ object Bench {
       })
     @volatile var nEvents = 0L
     val emittedFinal = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val eventScenarios = Set("b01_consume_baseline", "b02_forward",
-      "b03_stream_windowed")
     def fmt4(v: Double): String = BenchPolicy.fmt(v, 4)
     def fmt1(v: Double): String = BenchPolicy.fmt(v, 1)
 
@@ -254,72 +121,60 @@ object Bench {
       p
     })
     val outName = java.nio.file.Paths.get(outPath).getFileName.toString
-    def rateJsons(res: Seq[BenchPolicy.Stat]): (String, String) = {
-      val rates = res.filter(r => eventScenarios(r.name)).map { r =>
-        val rps = if (r.med > 0 && nEvents > 0) nEvents / r.med else -1.0
-        val p10k = if (r.med > 0 && nEvents > 0) r.med / (nEvents / 10000.0) else -1.0
-        (r.name, rps, p10k)
-      }
-      (rates.map { case (k, r, _) => "\"" + k + "\":" + fmt1(r) }
-         .mkString("{", ",", "}"),
-       rates.map { case (k, _, p) => "\"" + k + "\":" + fmt4(p) }
-         .mkString("{", ",", "}"))
-    }
-    // the COMPACT line: a complete, standalone artifact (same top-level
-    // shape the driver has parsed every round: metric/value/unit/
-    // queries/sf) over whatever has finished. Printed after every entry
-    // timing AND on the shutdown hook — the stdout tail always ends
-    // with one, so a timeout yields a truncated-but-valid bench.
-    def compactLine(partial: Boolean): String = {
-      val res = policy.stats()
-      val done = res.count(_.med >= 0)
-      val total = res.map(_.med).filter(_ >= 0).sum
-      val (rpsJson, p10kJson) = rateJsons(res)
-      val headlineRes = res.filter(r => eventScenarios(r.name) ||
-        r.name == "b04_bucketed_multi_join" || r.name == "b05_point_lookups" ||
-        r.name == "b06_sharded_lookups")
-      val slowest = res.filter(_.med >= 0).sortBy(-_.med).take(5)
-      val compactQs =
-        (headlineRes ++ slowest.filterNot(s => headlineRes.exists(_.name == s.name)))
-          .filter(_.med >= 0)
-          .map { r => "\"" + r.name + "\":" + fmt4(r.med) }
-          .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""sf":"$sfDir","n_entries":${res.size},"n_done":$done,""" +
-        s""""partial":$partial,"budget_sec":$budget,"elapsed_sec":${fmt1(elapsed)},""" +
-        s""""rows_per_sec":$rpsJson,"sec_per_10k":$p10kJson,""" +
-        s""""degraded_box":${policy.degradedBox},"box_ratio":${fmt4(policy.boxRatio)},""" +
-        s""""preflight_wait_sec":${fmt1(policy.preflightWait)},""" +
-        s""""full":"$outName","queries":$compactQs}"""
-    }
     // Per-query repetition: environment noise on a busy 32-core box
     // swings single-shot timings by up to ~5× in either direction
     // (BENCH_r03 vs r04, identical binaries), so each entry runs
     // `iters` times and reports the MEDIAN (plus min and MAD).
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    // the FULL line: complete medians/min/MAD maps for every entry —
-    // always on disk at bench_full.json (rewritten incrementally), so
-    // the untruncated numbers survive any cut
-    def fullLine(partial: Boolean): String = {
+    // One artifact over whatever has finished, in two cuts.
+    // The COMPACT line (full = false) is complete and standalone (the
+    // stable top-level shape: metric/value/unit/queries/sf) and fits
+    // the 2000-char stdout tail that is parsed (see the header): it
+    // prints after every entry timing AND on the shutdown hook, so the
+    // tail always ends with one and a timeout yields a truncated-but-
+    // valid bench. The FULL line adds the complete medians/min/MAD maps
+    // for every entry and is always on disk (rewritten incrementally),
+    // so the untruncated numbers survive any cut.
+    def artifact(partial: Boolean, full: Boolean): String = {
       val res = policy.stats()
-      def perEntry(v: BenchPolicy.Stat => String): String =
-        res.map(r => "\"" + r.name + "\":" + v(r)).mkString("{", ",", "}")
-      val total = res.map(_.med).filter(_ >= 0).sum
-      val (rpsJson, p10kJson) = rateJsons(res)
-      s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""iters":$iters,"partial":$partial,""" +
-        s""""budget_sec":$budget,"elapsed_sec":${fmt1(elapsed)},""" +
-        s""""rows_per_sec":$rpsJson,"sec_per_10k":$p10kJson,""" +
-        s""""n_events":$nEvents,"sf":"$sfDir","iters_done":${perEntry(_.n.toString)},""" +
-        s""""degraded_box":${policy.degradedBox},"box_ratio":${fmt4(policy.boxRatio)},""" +
-        s""""preflight_wait_sec":${fmt1(policy.preflightWait)},""" +
-        s""""midrun_wait_sec":${fmt1(policy.midrunWait)},""" +
-        s""""window_reruns":${policy.windowReruns.groupBy(identity)
-          .map { case (k, v) => "\"" + k + "\":" + v.size }
-          .mkString("{", ",", "}")},""" +
-        s""""queries_min":${perEntry(r => fmt4(r.min))},""" +
-        s""""queries_mad":${perEntry(r => fmt4(r.mad))},""" +
-        s""""queries":${perEntry(r => fmt4(r.med))}}"""
+      def str(v: String): String = "\"" + v + "\""
+      def obj(kvs: Seq[(String, String)]): String =
+        kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+      def perEntry(rs: Seq[BenchPolicy.Stat])(v: BenchPolicy.Stat => String): String =
+        obj(rs.map(r => r.name -> v(r)))
+      val rated = res.filter(r => EventScenarios.contains(r.name))
+      def rate(r: BenchPolicy.Stat)(f: Double => Double): Double =
+        if (r.med > 0 && nEvents > 0) f(r.med) else -1.0
+      val done = res.filter(_.med >= 0)
+      val shared = Seq(
+        "metric" -> str("total"), "value" -> done.map(_.med).sum.toString,
+        "unit" -> str("sec"), "sf" -> str(sfDir), "partial" -> partial.toString,
+        "budget_sec" -> budget.toString, "elapsed_sec" -> fmt1(elapsed),
+        "rows_per_sec" -> perEntry(rated)(r => fmt1(rate(r)(nEvents / _))),
+        "sec_per_10k" -> perEntry(rated)(r => fmt4(rate(r)(_ / (nEvents / 10000.0)))),
+        "degraded_box" -> policy.degradedBox.toString,
+        "box_ratio" -> fmt4(policy.boxRatio),
+        "preflight_wait_sec" -> fmt1(policy.preflightWait))
+      val own =
+        if (full) Seq(
+          "iters" -> iters.toString, "n_events" -> nEvents.toString,
+          "iters_done" -> perEntry(res)(_.n.toString),
+          "midrun_wait_sec" -> fmt1(policy.midrunWait),
+          "window_reruns" -> obj(policy.windowReruns.groupBy(identity)
+            .map { case (k, v) => k -> v.size.toString }.toSeq),
+          "reruns" -> obj(policy.reruns.map { case (k, n) => k -> n.toString }),
+          "queries_min" -> perEntry(res)(r => fmt4(r.min)),
+          "queries_mad" -> perEntry(res)(r => fmt4(r.mad)),
+          "queries" -> perEntry(res)(r => fmt4(r.med)))
+        else {
+          // every finished scenario, then the five slowest finished entries
+          val scenarios = done.filter(r => Scenarios.contains(r.name))
+          val slowest = done.sortBy(-_.med).take(5).filterNot(scenarios.contains)
+          Seq("n_entries" -> res.size.toString, "n_done" -> done.size.toString,
+            "full" -> str(outName),
+            "queries" -> perEntry(scenarios ++ slowest)(r => fmt4(r.med)))
+        }
+      obj(shared ++ own)
     }
     // Run-stamped artifact (r16 judge finding 3): the default target is
     // a FRESH bench_full.<utc-stamp>.json — a driver run can no longer
@@ -331,6 +186,13 @@ object Bench {
       try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (line + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () }
+    // the full line to disk (and to stdout if `echo`), then the compact one
+    def emit(partial: Boolean, echo: Boolean = false): Unit = {
+      val full = artifact(partial, full = true)
+      writeFull(full)
+      if (echo) println(full)
+      println(artifact(partial, full = false))
+    }
     // SIGTERM (timeout's default signal) runs shutdown hooks: emit the
     // partial artifact from whatever finished before the JVM dies
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -339,13 +201,12 @@ object Bench {
         // concurrently and their executor-teardown ERRORs would land
         // after our artifact line in a merged stdout+stderr capture
         try spark.sparkContext.setLogLevel("OFF") catch { case _: Throwable => () }
-        writeFull(fullLine(partial = true))
-        println(compactLine(partial = true))
+        emit(partial = true)
         Console.flush()
         // print once more after the teardown noise burst so the tail's
         // LAST line is the artifact even under a merged capture
         try Thread.sleep(400) catch { case _: InterruptedException => () }
-        println(compactLine(partial = true))
+        println(artifact(partial = true, full = false))
         Console.flush()
       }
     }))
@@ -361,12 +222,11 @@ object Bench {
     // consumer spin-up. Budget-capped: an un-warmed entry only pays
     // codegen inside its first iteration, which the median absorbs.
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries
-      .view.filterKeys(n => headline.contains(n) && want(n)).values.foreach { q =>
-        if (elapsed < budget * BenchPolicy.WarmupShare)
-          try Pin.scope(q(spark, warmDir).write.format("noop").mode("overwrite").save())
-          catch { case _: Throwable => () }
-      }
+    batch.foreach { q =>
+      if (elapsed < budget * BenchPolicy.WarmupShare)
+        try Pin.scope(noop(q.run(spark, warmDir)))
+        catch { case _: Throwable => () }
+    }
     // Streaming: producer-side materialization and the streaming
     // planner/codegen JIT happen outside all timings; each b03
     // iteration then STAGES its replay (query start + sentinel prime,
@@ -437,11 +297,11 @@ object Bench {
     // 10,000 GETs across 8 concurrent client workers — the standard
     // posture for a serving-throughput number (the reference's routed
     // RocksDB lookups are likewise measured under concurrent load).
-    // Fresh connection per request: this sandbox's loopback throttles
-    // SUSTAINED kept-alive streams to ~44 ms/req (measured — both the
-    // JDK HttpClient and raw keep-alive sockets hit it; fresh
-    // connections don't), so per-request connections are both the
-    // faster AND the more honest client here.
+    // Fresh connection per request: on a kept-alive connection every
+    // request stalls ~44 ms, because TableServer's response goes out
+    // in two small segments and Nagle's algorithm holds the second
+    // until the client's delayed ACK of the first (faustbench/NOTES.md);
+    // fresh connections don't stall, so they are the faster client here.
     val nLookups = 10000
     val nWorkers = 8
     def oneGet(port: Int, key: Long, table: String = "users"): Unit = {
@@ -480,10 +340,9 @@ object Bench {
         threads.foreach(_.join())
         if (failure.get() != null) throw failure.get()
       }
-    if (needServing) { // connection + codegen warmup, untimed
-      if (want("b05_point_lookups")) pointLookups()
-      if (want("b06_sharded_lookups")) pointLookups("users_sharded")
-    }
+    // connection + codegen warmup, untimed
+    if (want("b05_point_lookups")) pointLookups()
+    if (want("b06_sharded_lookups")) pointLookups("users_sharded")
 
     val needBucketed = want("b04_bucketed_multi_join")
     if (needBucketed) {
@@ -496,7 +355,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       val revenueTerm = (col("l_extendedprice").cast("decimal(18,2)") *
         (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-      spark.table("bench_lineitem")
+      noop(spark.table("bench_lineitem")
         .join(spark.table("bench_orders"), col("l_orderkey") === col("o_orderkey"))
         .filter(col("o_orderdate") >= lit("1998-01-01").cast("timestamp"))
         .join(broadcast(Tables.customer(spark, sfDir)), col("o_custkey") === col("c_custkey"))
@@ -504,27 +363,20 @@ object Bench {
         .join(broadcast(Tables.region(spark, sfDir)), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name", "n_name")
         .agg(sum(revenueTerm).cast("double").as("revenue"),
-          countDistinct(col("o_orderkey")).as("n_orders"))
-        .write.format("noop").mode("overwrite").save()
+          countDistinct(col("o_orderkey")).as("n_orders")))
     }
     if (needBucketed) bucketedMultiJoin() // codegen warmup, untimed
 
-    entries.filter(queries.contains).foreach { name =>
-      val run = () => queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      factories(name) = () => run
-    }
+    batch.foreach(q => factories(q.name) = () => () => noop(q.run(spark, sfDir)))
     // t/bench-mirror scenarios (BASELINE.md): consume-only and
     // consume→transform→produce, on the streaming-shaped events table.
-    val b01 = () =>
-      Tables.events(spark, sfDir).write.format("noop").mode("overwrite").save()
+    val b01 = () => noop(Tables.events(spark, sfDir))
     val b02 = () => {
       import org.apache.spark.sql.functions._
-      Tables.events(spark, sfDir)
+      noop(Tables.events(spark, sfDir)
         .select(col("user_id").cast("string").as("key"),
           to_json(struct(col("event_id"), col("event_type"), col("value"),
-            get_json_object(col("props"), "$.k").cast("long").as("k"))).as("value"))
-        .write.format("noop").mode("overwrite").save()
+            get_json_object(col("props"), "$.k").cast("long").as("k"))).as("value")))
     }
     factories ++= Seq[(String, () => () => Unit)](
       "b01_consume_baseline" -> (() => b01),
@@ -546,10 +398,7 @@ object Bench {
 
     // after every kept sample the full artifact is rewritten and a
     // running-summary line prints — the artifact is always current
-    policy.run(iters, () => {
-      writeFull(fullLine(partial = true))
-      println(compactLine(partial = true))
-    })
+    policy.run(iters, () => emit(partial = true))
 
     // Emission order matters: the driver's BENCH artifact keeps only the
     // last 2000 chars of stdout, so the full line (which exceeds that
@@ -559,16 +408,7 @@ object Bench {
     // `partial` in the FINAL emission means "the budget cut coverage"
     // (BenchPolicy.cut), not "some entry failed".
     emittedFinal.set(true)
-    val cut = policy.cut
-    // the on-disk artifact carries the reruns map too (it is the
-    // untruncated copy the judge reads — stdout's may be cut)
-    val rerunJson = policy.reruns.map { case (k, n) => "\"" + k + "\":" + n }
-      .mkString("{", ",", "}")
-    val finalFull = fullLine(partial = cut)
-      .patch(1, s""""reruns":$rerunJson,""", 0)
-    writeFull(finalFull)
-    println(finalFull)
-    println(compactLine(partial = cut))
+    emit(partial = policy.cut, echo = true)
     serving.foreach(_._1.stop()) // release the HTTP dispatcher thread
     spark.stop()
   }

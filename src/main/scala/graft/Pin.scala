@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The one way to pin a shared subtree: materialize a frame once into
   * storage blocks, so every later reference reads the blocks instead
@@ -60,7 +61,7 @@ object Pin {
   def release(df: DataFrame): Unit = {
     val rdd = rddOf(df)
     scopes.get.foreach(_ -= rdd.id)
-    rdd.unpersist(blocking = false)
+    ColumnBridge.unpersistQuietly(rdd)
   }
 
   /** Run `body`, then release every pin made on this thread inside it,
@@ -73,7 +74,7 @@ object Pin {
     try body
     finally {
       scopes.set(scopes.get.tail)
-      pins.values.foreach(_.unpersist(blocking = false))
+      pins.values.foreach(ColumnBridge.unpersistQuietly)
     }
   }
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-import graft.core.{HoppingWindow, SlidingWindow, TumblingWindow, WindowSpec}
+import graft.core.WindowSpec
+import graft.streaming.WindowedStream
 
 /** The faust `Table` surface (`/root/reference/faust/tables/table.py`,
   * `tables/base.py`) re-expressed declaratively: a table is the
@@ -86,24 +87,15 @@ object GTable {
     agg.toColumn.asInstanceOf[Column]
 
   /** Windowed-table wrapper factory (faust `table.tumbling/...`,
-    * `tables/table.py:31-47`).
+    * `tables/table.py:31-47`). Sets no watermark, whatever
+    * `spec.expires` says; [[graft.streaming.WindowedStream.windowedAgg]]
+    * is the watermarked form.
     */
   def windowed(stream: GStream[_], spec: WindowSpec, tsCol: Column,
-               keyCols: Seq[Column], aggs: Seq[Column]): DataFrame = {
-    val w = spec match {
-      case TumblingWindow(size, _) =>
-        window(tsCol, s"$size milliseconds")
-      case HoppingWindow(size, step, _) =>
-        window(tsCol, s"$size milliseconds", s"$step milliseconds")
-      case SlidingWindow(_, _, _) =>
-        throw new IllegalArgumentException(
-          "sliding windows are record-relative: use an interval self-join " +
-            "(see CoreQueries q09_interval_join) or session_window")
-    }
+               keyCols: Seq[Column], aggs: Seq[Column]): DataFrame =
     stream.ds.toDF()
-      .groupBy((w.as("window")) +: keyCols: _*)
+      .groupBy(WindowedStream.windowColumn(spec, tsCol).as("window") +: keyCols: _*)
       .agg(aggs.head, aggs.tail: _*)
-  }
 
   /** Point lookup on a table snapshot (the serving path replacing
     * faust's `table[k]` / `@table_route`, `faust/app/router.py:25-77`).

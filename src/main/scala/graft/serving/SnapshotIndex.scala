@@ -199,15 +199,16 @@ final class ShardedSnapshotIndex(loader: () => DataFrame, keyCol: String,
 }
 
 /** Row → JSON rendering shared by the hot index (render-at-refresh)
-  * and the cold pruned-scan tier (render-per-request).
+  * and the cold pruned-scan tier (render-per-request); [[escape]] is
+  * also the escaper of Verify's oracle_sql.json.
   */
-private[serving] object JsonRows {
+private[graft] object JsonRows {
   /** RFC 8259 string escape: backslash, quote, and EVERY control
     * char < 0x20 (named escapes for \b \t \n \f \r, \u00XX for the
     * rest) — a value containing a newline must not produce an
     * invalid body on either tier.
     */
-  private def escape(s: String): String = {
+  def escape(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 2)
     var i = 0
     while (i < s.length) {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{HoppingWindow, TumblingWindow, WindowSpec}
+import graft.core.{HoppingWindow, SlidingWindow, TumblingWindow, WindowSpec}
 
 /** Structured-Streaming windowed aggregation with faust's windowed
   * table semantics (`/root/reference/faust/tables/wrappers.py`,
@@ -28,18 +28,23 @@ object WindowedStream {
   /** Build the windowed groupBy for a (possibly streaming) frame. */
   def windowedAgg(df: DataFrame, tsCol: String, spec: WindowSpec,
                   keyCols: Seq[Column], aggs: Seq[Column]): DataFrame = {
-    val wcol = spec match {
-      case TumblingWindow(size, _) => window(col(tsCol), s"$size milliseconds")
-      case HoppingWindow(size, step, _) =>
-        window(col(tsCol), s"$size milliseconds", s"$step milliseconds")
-      case other =>
-        throw new IllegalArgumentException(s"unsupported for streaming agg: $other")
-    }
     val base = spec.expires match {
       case Some(exp) => df.withWatermark(tsCol, s"$exp milliseconds")
       case None      => df
     }
-    base.groupBy(wcol.as("window") +: keyCols: _*).agg(aggs.head, aggs.tail: _*)
+    base.groupBy(windowColumn(spec, col(tsCol)).as("window") +: keyCols: _*)
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The one lowering of a tumbling or hopping spec to `window(ts, …)`. */
+  def windowColumn(spec: WindowSpec, ts: Column): Column = spec match {
+    case TumblingWindow(size, _) => window(ts, s"$size milliseconds")
+    case HoppingWindow(size, step, _) =>
+      window(ts, s"$size milliseconds", s"$step milliseconds")
+    case SlidingWindow(_, _, _) =>
+      throw new IllegalArgumentException(
+        "sliding windows are record-relative: use an interval self-join " +
+          "(see CoreQueries q09_interval_join) or session_window")
   }
 
   /** `on_window_close` view (`tables/base.py:377-379`): the same

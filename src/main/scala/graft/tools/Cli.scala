@@ -12,6 +12,8 @@ import graft.SparkEntry
   *   queries                     list every registered query (+oracle coverage)
   *   describe <name>             schema of a query's result at sf0.001
   *   run <name> [sfDir]          execute and show a sample
+  * (`<name>` goes through [[SparkEntry.select]]: an unknown name fails,
+  * and a comma-separated list describes or runs each query in turn)
   *   send <topicDir> <key> <value>   append a test row to a file topic
   *   reset <checkpointDir>       clear a named query's checkpoint state
   */
@@ -53,14 +55,14 @@ object Cli {
           println(f"${q.name}%-28s ${if (q.oracle.isDefined) "duckdb-sql" else "rows-only"}")
         }
       case "describe" =>
-        val name = args(1)
+        val selected = SparkEntry.select(Some(args(1)))
         spark.sparkContext.setLogLevel("WARN")
-        SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").printSchema()
+        selected.foreach(_.run(spark, "/root/testdata/sf0.001").printSchema())
       case "run" =>
-        val name = args(1)
+        val selected = SparkEntry.select(Some(args(1)))
         val dir = args.lift(2).getOrElse("/root/testdata/sf0.001")
         spark.sparkContext.setLogLevel("WARN")
-        SparkEntry.queries(name)(spark, dir).show(20, truncate = false)
+        selected.foreach(_.run(spark, dir).show(20, truncate = false))
       case "send" =>
         val Array(_, topicDir, key, value) = args.take(4)
         spark.sparkContext.setLogLevel("WARN")

@@ -14,22 +14,19 @@ import java.nio.file.{Files, Paths}
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
-    val only: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(",").toSet) else None
+    val selected = graft.SparkEntry.select(args.lift(3))
     val spark = graft.Sessions.harness("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    graft.SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try graft.Pin.scope {
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-        } catch { case e: Throwable =>
-          System.err.println(s"[explain] $name failed: ${e.getMessage}")
-        }
+    selected.foreach { q =>
+      try graft.Pin.scope {
+        val plan = q.run(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(s"$outDir/${q.name}_$suffix.txt"), plan)
+      } catch { case e: Throwable =>
+        System.err.println(s"[explain] ${q.name} failed: ${e.getMessage}")
       }
+    }
     spark.stop()
   }
 }

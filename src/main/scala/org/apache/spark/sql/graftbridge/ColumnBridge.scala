@@ -34,6 +34,14 @@ object ColumnBridge {
       case _ => ()
     }
 
+  /** `rdd.unpersist(blocking = false)` minus the WARN it logs for every
+    * local checkpoint (lineage truncated, cannot be recomputed): that is
+    * what releasing a pin means, so the WARN fired on every release and
+    * buried real ones. `SparkContext.unpersistRDD` is `private[spark]`.
+    */
+  def unpersistQuietly(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** `SparkSession.cloneSession()` is `private[sql]` in Spark 4 —
     * clone shares the SparkContext and inherits the current conf, the
     * right isolation for per-scenario conf overrides (mutating the

@@ -16,7 +16,7 @@ class AgentsSpec extends SparkTestBase {
   test("agent registry: named query processes a stream end-to-end with metrics") {
     implicit val sqlCtx = spark.sqlContext
     val app = new App(spark, "agents-test",
-      checkpointRoot = java.nio.file.Files.createTempDirectory("graft-cp").toString)
+      checkpointRoot = Sessions.tempDir("graft-cp").toString)
     val registry = new AgentRegistry(app)
     val monitor = new QueryMonitor
     spark.streams.addListener(monitor)
@@ -44,7 +44,7 @@ class AgentsSpec extends SparkTestBase {
   test("agent fan-out: foreachBatch multi-sink (faust sink=[...])") {
     implicit val sqlCtx = spark.sqlContext
     val app = new App(spark, "agents-test2",
-      checkpointRoot = java.nio.file.Files.createTempDirectory("graft-cp2").toString)
+      checkpointRoot = Sessions.tempDir("graft-cp2").toString)
     val registry = new AgentRegistry(app)
     val input = MemoryStream[Int]
     val sink1 = new java.util.concurrent.atomic.AtomicLong

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.tools.Cli
@@ -14,7 +12,7 @@ class CliSpec extends SparkTestBase {
   import spark.implicits._
 
   test("send appends rows to a parquet test topic a file stream consumes") {
-    val topic = Files.createTempDirectory("graft-topic").toString
+    val topic = Sessions.tempDir("graft-topic").toString
     Cli.send(spark, topic, "k1", """{"n":1}""")
     Cli.send(spark, topic, "k2", """{"n":2}""")
     val rows = spark.read.parquet(topic)
@@ -36,8 +34,8 @@ class CliSpec extends SparkTestBase {
   }
 
   test("reset clears a query's checkpoint dir") {
-    val topic = Files.createTempDirectory("graft-topic2").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString + "/q1"
+    val topic = Sessions.tempDir("graft-topic2").toString
+    val ckpt = Sessions.tempDir("graft-ckpt").toString + "/q1"
     Cli.send(spark, topic, "k1", "v1")
     val schema = spark.read.parquet(topic).schema
     val q = spark.readStream.schema(schema).parquet(topic)

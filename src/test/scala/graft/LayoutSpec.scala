@@ -96,7 +96,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("partitioned layout: predicate prunes partitions at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = Sessions.tempDir("graft-part").toString
     Layout.writePartitioned(Tables.documents(spark, sf), dir, Seq("source"))
     val pruned = spark.read.parquet(dir).where($"source" === "src3")
     // the partition filter appears in the scan node, not as a data filter

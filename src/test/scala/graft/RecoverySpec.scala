@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Recovery semantics — the reference devotes `tables/recovery.py`
@@ -16,8 +14,8 @@ class RecoverySpec extends SparkTestBase {
   import spark.implicits._
 
   test("stateful query restart from checkpoint: no loss, no double-count") {
-    val srcDir = Files.createTempDirectory("graft-rec-src").toString
-    val cpDir = Files.createTempDirectory("graft-rec-cp").toString
+    val srcDir = Sessions.tempDir("graft-rec-src").toString
+    val cpDir = Sessions.tempDir("graft-rec-cp").toString
 
     val events = Tables.events(spark, sf)
       .select($"user_id", $"value").as[(Long, Double)].collect()

@@ -492,8 +492,7 @@ class SampleOpsSpec extends SparkTestBase {
       .withColumn("score_i", (col("n_chars") % 512).cast("long"))
     val out = SampleOps.curriculumShards(docs, "doc_id", col("score_i"),
       nShards = 2, levels = 9, salt = "w")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-curr").toString
+    val dir = Sessions.tempDir("graft-curr").toString
     out.write.partitionBy("bucket", "shard").mode("overwrite").parquet(dir)
     def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
       df.collect()

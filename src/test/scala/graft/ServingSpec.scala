@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.io.Source
 
 import org.apache.spark.sql.functions._
@@ -37,7 +35,7 @@ class ServingSpec extends SparkTestBase {
   }
 
   test("compact(): same compacted view, fewer partitions and files") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = Sessions.tempDir("graft-compact").toString
     writeChangelog(dir)
     val before = ChangelogSink.readCompacted(spark, dir, Seq("key"))
       .as[(String, Long)].collect().toMap
@@ -63,7 +61,7 @@ class ServingSpec extends SparkTestBase {
   }
 
   test("HTTP table lookup serves the compacted table value") {
-    val dir = Files.createTempDirectory("graft-serve").toString
+    val dir = Sessions.tempDir("graft-serve").toString
     writeChangelog(dir)
     val server = new TableServer()
       .serveTable("word_counts",
@@ -92,7 +90,7 @@ class ServingSpec extends SparkTestBase {
   }
 
   test("hot tier: in-memory index serves, refresh picks up a new batch") {
-    val dir = Files.createTempDirectory("graft-serve-hot").toString
+    val dir = Sessions.tempDir("graft-serve-hot").toString
     writeChangelog(dir)
     val server = new TableServer()
       .serveTable("word_counts",
@@ -183,7 +181,7 @@ class ServingSpec extends SparkTestBase {
   }
 
   test("sharded hot tier: capacity past one shard's guard, ownership visible") {
-    val dir = Files.createTempDirectory("graft-serve-shard").toString
+    val dir = Sessions.tempDir("graft-serve-shard").toString
     writeChangelog(dir) // 4 keys
     val keys = Seq("k1", "k2", "k3", "k4")
     // pick a shard count under which the keys actually spread, then
@@ -230,7 +228,7 @@ class ServingSpec extends SparkTestBase {
 
   test("ShardedSnapshotIndex: slices are disjoint-and-complete; per-shard refresh") {
     import graft.serving.ShardedSnapshotIndex
-    val dir = Files.createTempDirectory("graft-shard-idx").toString
+    val dir = Sessions.tempDir("graft-shard-idx").toString
     writeChangelog(dir)
     val keys = Seq("k1", "k2", "k3", "k4")
     val nShards = (2 to 5).find { n =>
@@ -256,7 +254,7 @@ class ServingSpec extends SparkTestBase {
   }
 
   test("JSON rendering escapes control characters (valid bodies on both tiers)") {
-    val dir = Files.createTempDirectory("graft-serve-esc").toString
+    val dir = Sessions.tempDir("graft-serve-esc").toString
     val raw = "line1\nline2\ttab\rcr" + 1.toChar + "bell"
     ChangelogSink.appendBatch(dir)(
       Seq(("k1", raw)).toDF("key", "value"), 0L)
@@ -284,7 +282,7 @@ class ServingSpec extends SparkTestBase {
     // silently EMPTY hot index; the clamp-before-increment fix keeps
     // the natural guard-off value working
     import graft.serving.SnapshotIndex
-    val dir = Files.createTempDirectory("graft-guard-off").toString
+    val dir = Sessions.tempDir("graft-guard-off").toString
     writeChangelog(dir)
     val idx = new SnapshotIndex(
       () => ChangelogSink.readCompacted(spark, dir, Seq("key")), "key",
@@ -295,7 +293,7 @@ class ServingSpec extends SparkTestBase {
   }
 
   test("hot tier row guard fails fast past maxIndexRows") {
-    val dir = Files.createTempDirectory("graft-serve-guard").toString
+    val dir = Sessions.tempDir("graft-serve-guard").toString
     writeChangelog(dir)
     val server = new TableServer()
       .serveTable("tiny",
@@ -314,8 +312,8 @@ class ServingSpec extends SparkTestBase {
     // batch N commits, with X-Snapshot-Version advancing per batch.
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = Files.createTempDirectory("graft-serve-live").toString
-    val ckpt = Files.createTempDirectory("graft-serve-live-ckpt").toString
+    val dir = Sessions.tempDir("graft-serve-live").toString
+    val ckpt = Sessions.tempDir("graft-serve-live-ckpt").toString
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(String, Long)]
     input.addData(("k1", 1L), ("k2", 10L))

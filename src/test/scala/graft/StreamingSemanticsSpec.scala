@@ -786,7 +786,7 @@ class StreamingSemanticsSpec extends SparkTestBase {
   }
 
   test("ChangelogSink: append per batch, compacted read = latest per key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-changelog").toString
+    val dir = Sessions.tempDir("graft-changelog").toString
     val b0 = Seq(("a", 1), ("b", 2)).toDF("k", "v")
     val b1 = Seq(("a", 10), ("c", 3)).toDF("k", "v")
     ChangelogSink.appendBatch(dir)(b0, 0L)
