@@ -297,29 +297,46 @@ object Bench {
     // 10,000 GETs across 8 concurrent client workers — the standard
     // posture for a serving-throughput number (the reference's routed
     // RocksDB lookups are likewise measured under concurrent load).
-    // Fresh connection per request: on a kept-alive connection every
-    // request stalls ~44 ms, because TableServer's response goes out
-    // in two small segments and Nagle's algorithm holds the second
-    // until the client's delayed ACK of the first (faustbench/NOTES.md);
-    // fresh connections don't stall, so they are the faster client here.
+    // One kept-alive HTTP/1.1 connection per worker (8 per 10,000
+    // GETs), read by Content-Length. The JDK clients would time
+    // themselves: HttpURLConnection keeps 5 idle connections per host,
+    // so 3 of 8 workers reconnect on every GET, and HttpClient reads
+    // every connection on one selector thread (b05 medians 0.73–1.19 s
+    // against 0.25–0.37 s here, 4 cores).
     val nLookups = 10000
     val nWorkers = 8
-    def oneGet(port: Int, key: Long, table: String = "users"): Unit = {
-      val url = java.net.URI.create(
-        s"http://127.0.0.1:$port/table/$table/$key").toURL
-      val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
-      conn.setConnectTimeout(30000)
-      conn.setReadTimeout(30000)
-      val code = conn.getResponseCode
-      val stream =
-        if (code == 200) conn.getInputStream
-        else Option(conn.getErrorStream)
-          .getOrElse(java.io.InputStream.nullInputStream())
-      val body = new String(stream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      conn.disconnect()
-      require(code == 200 && body.contains("n_events"),
-        s"lookup for user $key failed: HTTP $code body=$body")
+    def lookups(port: Int, table: String, keys: Iterator[Long]): Unit = {
+      val socket = new java.net.Socket("127.0.0.1", port)
+      try {
+        socket.setTcpNoDelay(true)
+        socket.setSoTimeout(30000)
+        val in = new java.io.BufferedInputStream(socket.getInputStream)
+        val out = socket.getOutputStream
+        def line(): String = {
+          val sb = new StringBuilder
+          var c = in.read()
+          while (c != '\n') {
+            if (c < 0) throw new java.io.EOFException("server closed the connection")
+            if (c != '\r') sb.append(c.toChar)
+            c = in.read()
+          }
+          sb.toString
+        }
+        keys.foreach { key =>
+          out.write(s"GET /table/$table/$key HTTP/1.1\r\nHost: localhost\r\n\r\n"
+            .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+          val status = line()
+          var length = 0
+          var h = line()
+          while (h.nonEmpty) {
+            if (h.toLowerCase.startsWith("content-length:")) length = h.drop(15).trim.toInt
+            h = line()
+          }
+          val body = new String(in.readNBytes(length), java.nio.charset.StandardCharsets.UTF_8)
+          require(status.startsWith("HTTP/1.1 200") && body.contains("n_events"),
+            s"lookup for user $key failed: $status body=$body")
+        }
+      } finally socket.close()
     }
     def pointLookups(table: String = "users"): Unit =
       serving.foreach { case (_, port, nKeys) =>
@@ -327,20 +344,16 @@ object Bench {
         val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
         val threads = (0 until nWorkers).map { w =>
           val t = new Thread(() => {
-            try {
-              var i = 0
-              while (i < perWorker) {
-                oneGet(port, (w.toLong * perWorker + i) % nKeys, table)
-                i += 1
-              }
-            } catch { case e: Throwable => failure.compareAndSet(null, e) }
+            try lookups(port, table,
+              Iterator.range(0, perWorker).map(i => (w.toLong * perWorker + i) % nKeys))
+            catch { case e: Throwable => failure.compareAndSet(null, e) }
           })
           t.start(); t
         }
         threads.foreach(_.join())
         if (failure.get() != null) throw failure.get()
       }
-    // connection + codegen warmup, untimed
+    // JIT warm-up of both ends, untimed
     if (want("b05_point_lookups")) pointLookups()
     if (want("b06_sharded_lookups")) pointLookups("users_sharded")
 

@@ -45,6 +45,18 @@ import graft.api.GTable
   *
   * Requests run on a pooled executor (not the dispatcher thread), so
   * concurrent lookups don't serialize behind each other.
+  *
+  * Responses go out with TCP_NODELAY on. The JDK server flushes the
+  * headers inside `sendResponseHeaders` and writes the body after, so
+  * each response is two small segments; with Nagle on, the body waits
+  * for the client's delayed ACK of the headers, ~40 ms, on every
+  * kept-alive request (faustbench/NOTES.md "The 44 ms kept-alive
+  * stall"). The JDK exposes no socket, so the switch is the
+  * `sun.net.httpserver.nodelay` property, set unless `-D` already set
+  * it. Ordering limit: the JDK reads it once, when the JVM's first
+  * `HttpServer` is created; if other code creates one before the first
+  * `TableServer`, the setting is silently ignored. ServingSpec's
+  * kept-alive case fails if that happens in the test JVM.
   */
 final class TableServer(port: Int = 0, nThreads: Int = 16) {
 
@@ -62,6 +74,7 @@ final class TableServer(port: Int = 0, nThreads: Int = 16) {
     t.setDaemon(true)
     t
   })
+  sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
   private val server: HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
   server.setExecutor(pool)
 

@@ -154,6 +154,65 @@ class ServingSpec extends SparkTestBase {
     } finally server.stop()
   }
 
+  test("kept-alive GETs on one connection do not wait out a delayed ACK") {
+    // without TCP_NODELAY each response's body (the second segment)
+    // waits ~40 ms for the client's delayed ACK of its headers. One raw
+    // socket proves every request shared a connection, which
+    // HttpURLConnection's keep-alive cache cannot. Runs in the shared
+    // test JVM, so it also fails if any code there created a JDK
+    // HttpServer before TableServer could set the property.
+    import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
+    val dir = Sessions.tempDir("graft-serve-keepalive").toString
+    writeChangelog(dir)
+    val server = new TableServer()
+      .serveTable("word_counts",
+        () => ChangelogSink.readCompacted(spark, dir, Seq("key")), "key",
+        hot = true)
+      .start()
+    val socket = new java.net.Socket("127.0.0.1", server.boundPort)
+    try {
+      socket.setTcpNoDelay(true)
+      socket.setSoTimeout(10000)
+      val in = new java.io.BufferedInputStream(socket.getInputStream)
+      val out = socket.getOutputStream
+      def line(): String = {
+        val sb = new StringBuilder
+        var c = in.read()
+        while (c != '\n') {
+          assert(c >= 0, "server closed the kept-alive connection")
+          if (c != '\r') sb.append(c.toChar)
+          c = in.read()
+        }
+        sb.toString
+      }
+      val expected = Map("k1" -> 4L, "k2" -> 11L, "k3" -> 30L, "k4" -> 40L)
+      val millis = (0 until 20).map { i =>
+        val k = s"k${i % 4 + 1}"
+        val t0 = System.nanoTime()
+        out.write((s"GET /table/word_counts/$k HTTP/1.1\r\nHost: localhost\r\n" +
+          "Connection: keep-alive\r\n\r\n").getBytes(US_ASCII))
+        out.flush()
+        val status = line()
+        val headers = Iterator.continually(line()).takeWhile(_.nonEmpty).map { h =>
+          val c = h.indexOf(':')
+          h.take(c).trim.toLowerCase -> h.drop(c + 1).trim
+        }.toMap
+        val body = new String(in.readNBytes(headers("content-length").toInt), UTF_8)
+        val ms = (System.nanoTime() - t0) / 1e6
+        assert(status.startsWith("HTTP/1.1 200"), status)
+        assert(body == s"""[{"key":"$k","value":${expected(k)}}]""", body)
+        assert(headers.get("x-snapshot-version").contains("1"), headers)
+        ms
+      }
+      val median = millis.sorted.apply((millis.size - 1) / 2)
+      assert(median < 10.0,
+        s"median kept-alive GET $median ms; per GET: ${millis.map(m => f"$m%.1f")}")
+    } finally {
+      socket.close()
+      server.stop()
+    }
+  }
+
   test("shard routing reproduces Spark's xxhash64 pmod bit-for-bit") {
     // the slice filter (Spark plan) and the request router (driver
     // JVM) must NEVER disagree about key ownership — assert
