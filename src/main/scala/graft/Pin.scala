@@ -7,19 +7,21 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** The one way to pin a shared subtree: materialize a frame once into
-  * storage blocks, so every later reference reads the blocks instead
-  * of re-running the subtree. Every pin in the program goes through
-  * [[apply]].
+/** The one way to pin or cache a shared subtree: materialize a frame
+  * once into storage blocks, so every later reference reads the blocks
+  * instead of re-running the subtree. Every pin and every cache in the
+  * program goes through [[apply]]; nothing calls `persist`, `cache`
+  * or `localCheckpoint` directly (a PinSpec case scans for them).
   *
   * Why a local checkpoint and not `persist`: the CacheManager keys
-  * cached plans canonically, so a `persist` of a query's subtree would
-  * let a bench re-run of the same query silently reuse the previous
-  * run's cache (result caching). A local checkpoint is a fresh RDD per
-  * call, always recomputed from the sources by the run that made it.
-  * It also truncates lineage, so an iterative plan does not double per
-  * round. The price of the cut: a pin's blocks cannot be rebuilt, so a
-  * pin may be released only once nothing will read it again.
+  * cached plans canonically and no scope frees them, so a `persist` of
+  * a query's subtree would let a bench re-run of the same query
+  * silently reuse the previous run's cache (result caching). A local
+  * checkpoint is a fresh RDD per call, always recomputed from the
+  * sources by the run that made it. It also truncates lineage, so an
+  * iterative plan does not double per round. The price of the cut: a
+  * pin's blocks cannot be rebuilt, so a pin may be released only once
+  * nothing will read it again.
   *
   * Eager or lazy: an eager pin runs its own job now. A lazy pin saves
   * that job and is materialized by the first action that reads it. It

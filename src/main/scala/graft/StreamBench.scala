@@ -54,8 +54,7 @@ object StreamBench {
     * anyway — the clone makes that explicit and mutation-free).
     */
   def stageReplay(spark: SparkSession, rows: Array[(Long, String, Double)],
-                  chunks: Int = defaultChunks,
-                  shufflePartitions: Int = defaultShuffle): () => Unit = {
+                  chunks: Int = ReplayChunks): () => Unit = {
     // cloneSession is private[sql] in Spark 4 (same bridge situation
     // as ColumnBridge): inherits current conf + shares the context
     val s: SparkSession =
@@ -64,7 +63,7 @@ object StreamBench {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     // streaming state is per-shuffle-partition: for this row volume a
     // handful of state stores beats 32 (less per-batch store overhead)
-    s.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    s.conf.set("spark.sql.shuffle.partitions", StateShards.toString)
     // After the last data batch, the watermark advance schedules one
     // EMPTY no-data micro-batch (state eviction tick) — ~0.3s of pure
     // bookkeeping for zero rows in this finite replay, with no output
@@ -105,7 +104,6 @@ object StreamBench {
         q.processAllAvailable()
       } finally {
         q.stop()
-        if (debug) dumpProgress(q)
         // each stage creates its own checkpoint; without this, a
         // multi-iteration bench leaks one temp dir per replay
         Sessions.deleteTree(java.nio.file.Paths.get(checkpoint))
@@ -113,31 +111,10 @@ object StreamBench {
     }
   }
 
-  /** Replay knobs for the b03 profiling loop (defaults = the shipped
-    * scenario: 10 chunks mirrors the reference's 10k-event commit
-    * cadence at 100k events, `BASELINE.md` row 4).
+  /** 10 chunks mirrors the reference's 10k-event commit cadence at
+    * 100k events (`BASELINE.md` row 4).
     */
-  private def defaultChunks: Int =
-    sys.env.getOrElse("SPARK_GRAFT_B03_CHUNKS", "10").toInt
-  private def defaultShuffle: Int =
-    sys.env.getOrElse("SPARK_GRAFT_B03_SHUFFLE", "2").toInt
-  private def debug: Boolean =
-    sys.env.get("SPARK_GRAFT_B03_DEBUG").contains("1")
-
-  /** Per-batch duration breakdown (stderr, debug only): where each
-    * micro-batch spends its wall time — addBatch (processing + state
-    * commit) vs the offset/WAL bookkeeping around it.
-    */
-  private def dumpProgress(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val ps = q.recentProgress
-    System.err.println(s"[b03] ${ps.length} micro-batches")
-    ps.foreach { p =>
-      val d = p.durationMs
-      System.err.println(s"[b03] batch=${p.batchId} rows=${p.numInputRows} " +
-        s"trigger=${d.get("triggerExecution")} addBatch=${d.get("addBatch")} " +
-        s"getBatch=${d.get("getBatch")} planning=${d.get("queryPlanning")} " +
-        s"walCommit=${d.get("walCommit")} commitOffsets=${d.get("commitOffsets")} " +
-        s"latestOffset=${d.get("latestOffset")}")
-    }
-  }
+  private val ReplayChunks = 10
+  /** State-store shards of the windowed aggregation. */
+  private val StateShards = 2
 }

@@ -5,6 +5,8 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
+import graft.Pin
+
 /** Agents — faust's `@app.agent` stream processors
   * (`/root/reference/faust/agents/agent.py:157-1046`,
   * `@app.agent` decorator `faust/app/base.py:831-885`) as a registry
@@ -46,10 +48,12 @@ final class AgentRegistry(app: App) {
         .option("checkpointLocation", app.checkpointFor(name))
         .trigger(trigger)
         .foreachBatch { (batch: Dataset[O], batchId: Long) =>
-          val df = batch.toDF().persist()
-          try sinks.foreach(s => s(df, batchId))
-          finally df.unpersist()
-          ()
+          // one eager pin per batch, so the sinks read it instead of
+          // each re-running the batch plan; freed when the batch ends
+          Pin.scope {
+            val df = Pin(batch.toDF())
+            sinks.foreach(s => s(df, batchId))
+          }
         }
         .start()
       running.put(name, q)

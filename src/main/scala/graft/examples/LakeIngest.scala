@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.ops.TextOps
 import graft.sources.FileSources
 
@@ -50,11 +50,11 @@ object LakeIngest {
       .select(col("doc_id"), col("text"), col("lang"))
 
     // 1. landing: JSON-lines drop with one bad line, counted not fatal.
-    // The landing frame is CACHED: a corrupt-only aggregation over a
+    // The landing frame is PINNED: a corrupt-only aggregation over a
     // raw JSON scan is disallowed (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
     // and the frame is read twice below anyway
-    val landed = FileSources.jsonRoundTrip(docs,
-      rawExtraLines = Seq("""{NOT-JSON""")).cache()
+    val landed = Pin(FileSources.jsonRoundTrip(docs,
+      rawExtraLines = Seq("""{NOT-JSON""")))
     val corrupt = col("_corrupt_record").isNotNull
     val counts = landed.agg(
       sum(when(corrupt, 0L).otherwise(1L)).as("ok"),
@@ -69,9 +69,9 @@ object LakeIngest {
         col("lang"))
 
     // 3. lake: partitioned by lang (one directory per value); the
-    // write is an action, so the landing cache is done after it
+    // write is an action, so the landing pin is done after it
     val lake = FileSources.partitionedRoundTrip(cleaned, "lang")
-    landed.unpersist()
+    Pin.release(landed)
 
     // 4. pruned slice: the filter must land in PartitionFilters
     val slice = lake.where(col("lang") === "en")

@@ -3,6 +3,7 @@ package graft.examples
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.ops.{BpeOps, LearnOps, SampleOps, TextOps}
 
 /** End-to-end training-data pipeline walkthrough — the 100 TB
@@ -82,17 +83,16 @@ object TrainDataPipeline {
 
     // 1. quality gate: drop degenerate docs before anything shuffles
     val quality = TextOps.qualityColumns($"text", stopwords).toMap
-    val gated = capped.where(quality("n_tokens") >= 5).cache()
+    val gated = Pin(capped.where(quality("n_tokens") >= 5))
 
     // 2. near-dup clusters; keep the HIGHEST-QUALITY representative
     // per cluster (the linear LSH path — never all-pairs)
     val clustered = TextOps.clusterRepresentatives(
       gated, "doc_id", "text", stopwords, numHashes = 16, bands = 2,
       minEstimate = 0.7, portable = true)
-    val kept = clustered.where($"is_kept" === 1)
+    val kept = Pin(clustered.where($"is_kept" === 1)
       .join(gated, "doc_id")
-      .select($"doc_id", $"text", $"lang", $"cluster_id")
-      .cache()
+      .select($"doc_id", $"text", $"lang", $"cluster_id"))
 
     // 3. leak-free split: key the hash on the CLUSTER id
     val split = SampleOps.hashSplit(kept, "cluster_id",
@@ -121,14 +121,18 @@ object TrainDataPipeline {
     // subword budget each split would feed a shard writer
     val trainDocs = split.where($"split" === "train")
       .select($"doc_id", $"text")
-    val (merges, _) = BpeOps.train(trainDocs, "text", rounds = 4)
+    val (merges, words) = BpeOps.train(trainDocs, "text", rounds = 4)
+    Pin.release(words)
     println("bpe merges: " + merges.map(m =>
       s"${m.w1}+${m.w2}(${m.n})").mkString(" "))
-    val budget = BpeOps.segmentCounts(split, "doc_id", "text", rounds = 4)
-      .join(split.select("doc_id", "split"), "doc_id")
-      .groupBy("split").agg(sum($"n_subwords").as("subword_budget"))
-      .orderBy("split")
-    budget.show(truncate = false)
+    // the census reads the tokenizer's pinned word state: the scope frees it
+    Pin.scope {
+      BpeOps.segmentCounts(split, "doc_id", "text", rounds = 4)
+        .join(split.select("doc_id", "split"), "doc_id")
+        .groupBy("split").agg(sum($"n_subwords").as("subword_budget"))
+        .orderBy("split")
+        .show(truncate = false)
+    }
 
     // 7. curriculum shard writing: bucket the train fragment by the
     // frozen-weight quality score (cuts from the portable quantile
@@ -178,6 +182,7 @@ object TrainDataPipeline {
       s"(${total - survived} near-duplicates removed)")
     require(survived > 0, "pipeline produced no output")
     require(merges.nonEmpty, "tokenizer learned no merges")
-    gated.unpersist(); kept.unpersist()
+    Pin.release(gated)
+    Pin.release(kept)
   }
 }

@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.ops.EventOps
 
 /** Warehouse-core walkthrough — the dimensional-modeling loop the
@@ -54,8 +54,8 @@ object WarehouseTour {
     val clicks = ev.where(col("event_type") === "click")
       .select(col("user_id"), tier.as("tier"), col("ts_sec"),
         col("event_id"))
-    val dim = EventOps.scd2Intervals(clicks, "user_id", "tier",
-      "ts_sec", "event_id").cache()
+    val dim = Pin(EventOps.scd2Intervals(clicks, "user_id", "tier",
+      "ts_sec", "event_id"))
     val nIv = dim.count()
     val nOpen = dim.where(col("effective_to").isNull).count()
     println(s"dimension: $nIv tier intervals, $nOpen currently open")
@@ -63,11 +63,10 @@ object WarehouseTour {
     // 3. point-in-time enrichment of the purchase facts
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id"), col("ts_sec"), col("value"))
-    val enriched = EventOps.pointInTimeJoin(purchases, dim,
+    val enriched = Pin(EventOps.pointInTimeJoin(purchases, dim,
         "user_id", "ts_sec")
       .select(col("event_id"), col("value"),
-        coalesce(col("state"), lit("unknown")).as("tier_at_purchase"))
-      .cache()
+        coalesce(col("state"), lit("unknown")).as("tier_at_purchase")))
 
     // 4. revenue share by tier-at-purchase (percent-of-total)
     val byTier = enriched.groupBy("tier_at_purchase")
@@ -84,6 +83,7 @@ object WarehouseTour {
     val nP = purchases.count()
     val nE = enriched.count()
     require(nP == nE, s"PIT join must be row-preserving: $nP != $nE")
-    dim.unpersist(); enriched.unpersist()
+    Pin.release(dim)
+    Pin.release(enriched)
   }
 }

@@ -56,7 +56,6 @@ object WordCount {
       posts.flatMap(_.split(" ")).where(length($"value") > 0),
       keyCols = Seq($"value".as("word")),
       aggs = Seq(count(lit(1)).as("n")))
-      .cache()
 
     val top = counts.orderBy($"n".desc, $"word").limit(10).collect()
     println("top words (batch table):")

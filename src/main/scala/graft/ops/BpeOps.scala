@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** In-engine BPE tokenizer TRAINING (Sennrich et al. 2016,
   * arXiv:1508.07909) — the "train the tokenizer on the corpus" step of
   * a training-data pipeline, run as a Spark plan instead of a local
@@ -79,37 +81,36 @@ object BpeOps {
   /** Run `rounds` BPE merge rounds. Returns the learned merge list and
     * the final word state (word, n, syms) with all merges applied.
     * Stops early (returning fewer merges) only if the pair space runs
-    * dry — a degenerate corpus of single-symbol words.
+    * dry — a degenerate corpus of single-symbol words. The word state
+    * is a [[Pin]]: the caller's [[Pin.scope]] frees it, or
+    * [[Pin.release]] does.
     */
   def train(df: DataFrame, textCol: String, rounds: Int,
             maxLen: Int = 8): (Seq[Merge], DataFrame) = {
     require(rounds >= 1 && rounds <= 32, "rounds must be in [1, 32]")
     require(maxLen >= 2 && maxLen <= 16, "maxLen must be in [2, 16]")
     // Each round's top-pair scan reads the PREVIOUS round's word state.
-    // Without a persist, round r would re-evaluate all r-1 prior merge
+    // Without a pin, round r would re-evaluate all r-1 prior merge
     // expressions from the raw word counts (O(rounds²) work and one
     // FileScan per round — at 100 TB vocab scale, hours not minutes).
-    // So: cache eagerly per round, then drop the predecessor — one
-    // FileScan total, O(1) recompute depth per round.
-    var words = wordCounts(df, textCol)
-      .select(col("word"), col("n"), chars(col("word")).as("syms"))
-      .persist()
+    // So: pin per round, then drop the predecessor — one FileScan
+    // total, O(1) recompute depth per round.
+    var words = Pin(wordCounts(df, textCol)
+      .select(col("word"), col("n"), chars(col("word")).as("syms")))
     val over = words.where(length(col("word")) > maxLen).limit(1).collect()
     require(over.isEmpty,
       s"word '${over.headOption.map(_.getString(0)).getOrElse("")}' exceeds " +
         s"maxLen=$maxLen symbols; raise maxLen (the merge unroll bound)")
     val merges = Seq.newBuilder[Merge]
-    // predecessor whose cache must outlive the NEXT round's scan
-    var pendingUnpersist: Option[DataFrame] = None
+    // the predecessor of a lazily pinned `words`, live until a scan
+    // materializes `words`
+    var pending: Option[DataFrame] = None
     var r = 1
     var dry = false
     while (r <= rounds && !dry) {
       // ONE action per round (r18 optimization; was two): the top-pair
       // scan below is the action that materializes the current round's
-      // cached word state — the separate next.count() it replaces only
-      // re-did that materialization. The predecessor's cache is dropped
-      // AFTER the scan, so every round still reads a fully-cached
-      // parent and recompute depth stays O(1) per round.
+      // lazily pinned word state, after which its predecessor goes.
       val nBi = greatest(size(col("syms")) - 1, lit(0))
       val top = words.select(col("n"),
           explode(zip_with(slice(col("syms"), lit(1), nBi),
@@ -119,36 +120,24 @@ object BpeOps {
         .agg(sum("n").as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
         .collect()
+      pending.foreach(Pin.release)
+      pending = None
       if (top.isEmpty) dry = true
       else {
         val (a, b, cnt) =
           (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
         merges += Merge(r, a, b, cnt)
-        val prev = words
-        words = prev
-          .withColumn("syms", applyMerge(col("syms"), a, b, maxLen))
-          .persist()
-        if (r < rounds) {
-          // next round's top scan materializes `words` through prev's
-          // still-live cache; prev can only be dropped after that
-          pendingUnpersist.foreach(_.unpersist(blocking = false))
-          pendingUnpersist = Some(prev)
-        } else {
-          // final round: nothing scans `words` inside train — callers
-          // materialize it; prev must stay live until they do, so
-          // materialize the last state here (one count, not one per
-          // round) before dropping the predecessors
-          words.count()
-          pendingUnpersist.foreach(_.unpersist(blocking = false))
-          prev.unpersist(blocking = false)
-        }
+        // lazy: the next round's scan materializes it. The final round
+        // has no next scan, so its state is pinned eagerly and its
+        // predecessor dropped at once.
+        val last = r == rounds
+        val next = Pin(words.withColumn("syms", applyMerge(col("syms"), a, b, maxLen)),
+          eager = last)
+        if (last) Pin.release(words) else pending = Some(words)
+        words = next
         r += 1
       }
     }
-    // dry exit: drop any still-pending predecessor
-    if (dry) pendingUnpersist.foreach(_.unpersist(blocking = false))
-    // The returned frame stays cached (callers fold/segment over it);
-    // callers that only need the merge table should unpersist it.
     (merges.result(), words)
   }
 
@@ -157,14 +146,15 @@ object BpeOps {
                 rounds: Int, maxLen: Int = 8): DataFrame = {
     import spark.implicits._
     val (ms, words) = train(df, textCol, rounds, maxLen)
-    words.unpersist(blocking = false) // merge table only; drop the word state
+    Pin.release(words) // merge table only; drop the word state
     ms.toDF("round", "w1", "w2", "n")
   }
 
   /** Per-doc subword census under the trained tokenizer: segment the
     * VOCAB once (the trainer's final word state), broadcast-join the
     * per-word subword counts to the token stream, aggregate per doc.
-    * Output: (doc_id, n_tokens, n_subwords).
+    * Output: (doc_id, n_tokens, n_subwords). The result reads the word
+    * state's pin, which the caller's [[Pin.scope]] frees.
     */
   def segmentCounts(df: DataFrame, idCol: String, textCol: String,
                     rounds: Int, maxLen: Int = 8): DataFrame = {

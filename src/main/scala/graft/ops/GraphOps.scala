@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Pin
 
@@ -28,18 +27,15 @@ object GraphOps {
     * @return (`id`, `cluster_id`)
     */
   def connectedComponents(edges: DataFrame, nodes: DataFrame): DataFrame = {
-    val spark = nodes.sparkSession
-    // persist the DIRECTED edges before symmetrizing: the union's two
-    // legs would otherwise each re-evaluate the caller's edge plan —
-    // for dedup callers that plan is the expensive candidate join
-    // (LSH bands / IVF cosine), so the double eval is a 2× tax on the
-    // whole edge-generation stage. Edge rows are (long, long) — the
-    // extra cached copy is noise next to recomputing the join.
-    val directed = edges.select(col("u"), col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sym = directed
-      .union(directed.select(col("v").as("u"), col("u").as("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Symmetrize with one explode, not a union: a union's two legs
+    // would each re-evaluate the caller's edge plan, and for dedup
+    // callers that plan is the expensive candidate join (LSH bands /
+    // IVF cosine). Pinned because every round reads it. Lazy: the
+    // first round's eager `stepped` pin reads it once and materializes it.
+    val sym = Pin(edges
+      .select(explode(array(struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v")), eager = false)
 
     // pinned per iteration: the compression step references the
     // previous frame twice, so the uncut plan would double per round
@@ -70,8 +66,7 @@ object GraphOps {
       Pin.release(labels)
       labels = next
     }
-    sym.unpersist()
-    directed.unpersist()
+    Pin.release(sym)
     labels.select(col("id"), col("lbl").as("cluster_id"))
   }
 
@@ -117,19 +112,18 @@ object GraphOps {
                      tol: Option[Double] = None): (DataFrame, Int) = {
     require(iters > 0, "iters must be positive")
     require(tol.forall(_ > 0), "tol must be positive")
-    val e = edges.select(col("u").cast("string").as("u"),
-      col("v").cast("string").as("v"), col("w").cast("double").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // normalized out-weights: each edge carries the FRACTION of its
-    // source's rank it transports — computed once, reused every round
-    val outW = e.groupBy(col("u")).agg(sum(col("w")).as("ow"))
-    val frac = e.join(outW, Seq("u"))
-      .select(col("u"), col("v"), (col("w") / col("ow")).as("f"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("u")).union(e.select(col("v").as("u")))
-      .distinct().select(col("u").as("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // lazy: the node count below reads it once and materializes it
+    val e = Pin(edges.select(col("u").cast("string").as("u"),
+      col("v").cast("string").as("v"), col("w").cast("double").as("w")),
+      eager = false)
+    val nodes = e.select(explode(array(col("u"), col("v"))).as("node")).distinct()
     val n = nodes.count()
+    // normalized out-weights: each edge carries the FRACTION of its
+    // source's rank it transports — computed once, reused every round.
+    // Lazy: the first round's rank frame reads it once.
+    val outW = e.groupBy(col("u")).agg(sum(col("w")).as("ow"))
+    val frac = Pin(e.join(outW, Seq("u"))
+      .select(col("u"), col("v"), (col("w") / col("ow")).as("f")), eager = false)
     val hasOut = outW.select(col("u").as("node"))
 
     var ranks = Pin(nodes.select(col("node"), round(lit(1.0) / n, 9).as("rank")))
@@ -176,7 +170,8 @@ object GraphOps {
     // before its (truncated-lineage) inputs are dropped below
     ranks.count()
     pendingRelease.foreach(Pin.release)
-    e.unpersist(); frac.unpersist(); nodes.unpersist()
+    Pin.release(e)
+    Pin.release(frac)
     (ranks.select(col("node"), col("rank")), rounds)
   }
 
@@ -196,10 +191,10 @@ object GraphOps {
     require(rounds > 0, "rounds must be positive")
     val dir0 = edges.select(col("u").cast("string").as("u"),
       col("v").cast("string").as("v"), col("w").cast("double").as("w"))
-    val und = dir0
+    // lazy: the first labels pin below reads it once and materializes it
+    val und = Pin(dir0
       .unionAll(dir0.select(col("v").as("u"), col("u").as("v"), col("w")))
-      .groupBy("u", "v").agg(sum(col("w")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy("u", "v").agg(sum(col("w")).as("w")), eager = false)
     val nodes = und.select(col("u").as("node")).distinct()
     var labels = Pin(nodes.select(col("node"), col("node").as("lbl")))
     (1 to rounds).foreach { _ =>
@@ -213,7 +208,7 @@ object GraphOps {
         .select(col("u").as("node"), col("m.nl").as("lbl")))
       Pin.release(prev)
     }
-    und.unpersist()
+    Pin.release(und)
     labels
   }
 
@@ -234,7 +229,7 @@ object GraphOps {
     *
     * Scale: each half-step is ONE shuffle join of the (node, score)
     * frame against the edge list plus a key-grouped sum — score rows
-    * are (string, double), edges persist once, so a billion-edge graph
+    * are (string, double), edges are pinned once, so a billion-edge graph
     * pays 2·iters·|edges| join work and nothing quadratic. The L1
     * total is a one-double driver read per half-step (the dangling-
     * mass pattern), not a data-plane collect.
@@ -245,12 +240,12 @@ object GraphOps {
     */
   def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters > 0, "iters must be positive")
-    val e = edges.select(col("u").cast("string").as("u"),
-      col("v").cast("string").as("v"), col("w").cast("double").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("u")).union(e.select(col("v").as("u")))
-      .distinct().select(col("u").as("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // both lazy: the node count below reads each once and materializes both
+    val e = Pin(edges.select(col("u").cast("string").as("u"),
+      col("v").cast("string").as("v"), col("w").cast("double").as("w")),
+      eager = false)
+    val nodes = Pin(e.select(explode(array(col("u"), col("v"))).as("node"))
+      .distinct(), eager = false)
     val n = nodes.count()
 
     // one normalized propagation half-step: score flows across `ekey`
@@ -284,7 +279,8 @@ object GraphOps {
       i += 1
     }
     val res = hub.join(auth, Seq("node")).select(col("node"), col("hub"), col("auth"))
-    e.unpersist(); nodes.unpersist()
+    Pin.release(e)
+    Pin.release(nodes)
     res
   }
 
@@ -313,7 +309,6 @@ object GraphOps {
     val und = edges.select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .where(col("a") =!= col("b")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -322,15 +317,17 @@ object GraphOps {
     val withDegs = und
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-    val oriented = withDegs.select(
+    // eager: the wedge join and the close read it three times in one job.
+    // `und` is not pinned: this job reuses its distinct's exchange, and
+    // the result's `deg` recomputes it once from the edge scan
+    val oriented = Pin(withDegs.select(
         when(col("da") < col("db")
           || (col("da") === col("db") && col("a") < col("b")),
           struct(col("a").as("u"), col("b").as("v"), col("db").as("dv")))
           .otherwise(
             struct(col("b").as("u"), col("a").as("v"), col("da").as("dv")))
           .as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv")))
     // wedges at the low endpoint: (v, w) with rank(v) < rank(w), both
     // out-neighbors of u — then close with the oriented edge v→w
     val o1 = oriented.select(col("u"), col("v"), col("dv"))
@@ -345,7 +342,7 @@ object GraphOps {
     val perNode = triangles
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-    // pinned before dropping the cached frames the plan reads
+    // pinned before dropping the oriented edges the plan reads
     val res = Pin(deg.join(perNode, Seq("node"), "left")
       .select(col("node"), col("deg").as("degree"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
@@ -354,8 +351,7 @@ object GraphOps {
             / (col("deg") * (col("deg") - 1)), 6))
           .otherwise(lit(0.0)).as("clustering"))
       .orderBy("node"))
-    oriented.unpersist()
-    und.unpersist()
+    Pin.release(oriented)
     res
   }
 }

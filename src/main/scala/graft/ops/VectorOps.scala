@@ -204,20 +204,19 @@ object VectorOps {
                 vecCol: String, kCand: Int, kSelect: Int,
                 lambda: Double): DataFrame = {
     require(kSelect >= 1 && kCand >= kSelect, "need 1 <= kSelect <= kCand")
-    // persist the two bounded intermediates: the unrolled greedy plan
-    // references cand in every round (anti-join + rescore) and pairs
-    // in every round after the first — without the cache each round
-    // would re-run the full corpus-scale candidate scoring. Both are
-    // |Q|·kCand(²) rows by construction, so the cache is tiny at any
-    // corpus size.
-    val cand = knnBruteForceKernel(queries, corpus, idCol, vecCol, kCand)
+    // pin the two bounded intermediates: every round references cand
+    // (anti-join + rescore) and every round after the first references
+    // pairs — unpinned, each round would re-run the full corpus-scale
+    // candidate scoring. Both are |Q|·kCand(²) rows by construction, so
+    // the pins are tiny at any corpus size. cand is eager (pairs
+    // self-joins it); pairs is lazy (round 2's eager pin reads it once)
+    val cand = Pin(knnBruteForceKernel(queries, corpus, idCol, vecCol, kCand)
       .select(col("id_a").as("qid"), col("id_b").as("cid"),
-        col("cos").as("rel"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("cos").as("rel")))
     val vecs = corpus.select(col(idCol).as("vid"), col(vecCol).as("v"),
       norm(col(vecCol)).as("nv"))
     // candidate×candidate cosines within each query's bounded set
-    val pairs = cand.select(col("qid"), col("cid"))
+    val pairs = Pin(cand.select(col("qid"), col("cid"))
       .join(cand.select(col("qid"), col("cid").as("cid2")), Seq("qid"))
       .where(col("cid") =!= col("cid2"))
       .join(broadcast(vecs), col("cid") === col("vid"))
@@ -225,8 +224,8 @@ object VectorOps {
         col("v").as("va"), col("nv").as("na"))
       .join(broadcast(vecs), col("cid2") === col("vid"))
       .select(col("qid"), col("cid"), col("cid2"),
-        (dot(col("va"), col("v")) / (col("na") * col("nv"))).as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (dot(col("va"), col("v")) / (col("na") * col("nv"))).as("sim")),
+      eager = false)
     val lam = lit(lambda)
     // expression-level 1-λ (NOT a Scala-side subtraction result typed
     // into SQL): both engines then run the identical IEEE 1-λ
@@ -238,16 +237,12 @@ object VectorOps {
         .select(col("qid"), col("cid"), lit(r).as("mmr_rank"),
           col("rel"), col("score"))
     }
-    // persist each round's selection too: round r references sel(r−1)
-    // twice (anti-join + max-sim), so an uncached lineage re-executes
-    // every earlier round 2^r times — the BpeOps per-round-persist
-    // lesson (measured 5.4 s → sub-second on the cached rounds alone)
-    var sel = pick(cand.withColumn("score", round(lam * col("rel"), 6)), 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // track every cached round so the intermediates can be released
-    // once the final selection is materialized — without this each
-    // invocation leaks 2+kSelect cached frames for the session lifetime
-    var cached = List[DataFrame](sel)
+    // pin each round's selection too, eagerly: round r references
+    // sel(r−1) twice (anti-join + max-sim), so an unpinned lineage
+    // re-executes every earlier round 2^r times (measured 5.4 s →
+    // sub-second once the rounds were cached). Once round r is pinned,
+    // round r−1 is no longer read and is released.
+    var sel = Pin(pick(cand.withColumn("score", round(lam * col("rel"), 6)), 1))
     for (r <- 2 to kSelect) {
       val rem = cand.join(sel.select(col("qid"), col("cid")),
         Seq("qid", "cid"), "left_anti")
@@ -257,20 +252,18 @@ object VectorOps {
       val scored = rem.join(ms, Seq("qid", "cid"))
         .withColumn("score",
           round(lam * col("rel") - mu * col("maxsim"), 6))
-      sel = sel.unionByName(
-        pick(scored.select("qid", "cid", "rel", "score"), r))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cached ::= sel
+      val prev = sel
+      sel = Pin(sel.unionByName(
+        pick(scored.select("qid", "cid", "rel", "score"), r)))
+      Pin.release(prev)
     }
-    // pinned: the |Q|·kSelect-row result (bounded by construction) no
-    // longer reads the intermediate caches, so they can be dropped NOW
-    val out = Pin(sel.select(col("qid").as("query_id"), col("mmr_rank"),
+    // the last round's pin holds the |Q|·kSelect-row result (bounded by
+    // construction); it no longer reads cand or pairs
+    Pin.release(cand)
+    Pin.release(pairs)
+    sel.select(col("qid").as("query_id"), col("mmr_rank"),
       col("cid").as("vec_id"), col("rel").as("relevance"),
-      col("score").as("mmr_score")))
-    cached.foreach(_.unpersist())
-    cand.unpersist()
-    pairs.unpersist()
-    out
+      col("score").as("mmr_score"))
   }
 
   /** Near-duplicate pairs by embedding cosine (id_a < id_b, cos >= threshold). */

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
 import graft.ops.{GraphOps, TextOps}
@@ -47,11 +49,41 @@ class PinSpec extends SparkTestBase {
     assert(persisted == before)
   }
 
+  // q96 pins lazily; the rest run iterative ops (BPE merge rounds, MMR
+  // selection rounds, graph power iteration) that pin per round
   test("a scope around a lazily pinned query ends where it started") {
-    val before = persisted
-    val n = Pin.scope(SparkEntry.queries("q96_rfm_segments")(spark, sf).count())
-    assert(n > 0)
-    assert(persisted == before)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // start from an empty CacheManager, whatever earlier suites left
+    spark.catalog.clearCache()
+    val leaks = Seq("q96_rfm_segments", "t22_bpe_segment",
+        "t44_tokenizer_fertility", "s27_mmr_rerank", "u06_domain_pagerank",
+        "u07_hits", "u12_domain_communities", "u13_triangle_census").flatMap { name =>
+      val before = persisted
+      assert(Pin.scope(SparkEntry.queries(name)(spark, sf).count()) > 0, name)
+      val after = persisted
+      val cached = !cacheManager.isEmpty
+      spark.catalog.clearCache()
+      if (after == before && !cached) None
+      else Some(s"$name: ${(after -- before).size} persisted RDD(s) left, CacheManager " +
+        (if (cached) "not empty" else "empty"))
+    }
+    if (leaks.nonEmpty) fail(leaks.mkString("; "))
+  }
+
+  test("every cache and checkpoint in src/main goes through Pin") {
+    val banned = """\.persist\(|\.cache\(\)|StorageLevel|localCheckpoint\(""".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val hits = try files.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Pin.scala")
+        .flatMap { f =>
+          java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+            case (line, i) if banned.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+          }
+        }.toList
+      finally files.close()
+    if (hits.nonEmpty) fail(hits.mkString("\n"))
   }
 
   test("a body that throws still releases its pins") {
