@@ -1,11 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.Pin
+import graft.streaming.StatefulTable
+import graft.streaming.StatefulTable.{Expiry, Next}
 
 /** Event-sequence analytics over the events stream — the funnel /
   * conversion-path operators a product-analytics pipeline runs on the
@@ -379,8 +381,8 @@ object EventOps {
     * handler sorts its iterator). Under that contract greedy
     * first-match IS the batch semantics ("earliest step k strictly
     * after step k-1"), and the spec proves streamed ≡ batch on the
-    * same events. State is `steps.length` longs per live user —
-    * bounded, TTL-able via the StatefulTable machinery if needed.
+    * same events. State is `steps.length` longs per live user; the
+    * state bound below caps how many users hold it.
     *
     * Rows: `(user_id, step_ts)` with `step_ts(i)` the i-th step's
     * timestamp or -1; filled slots never change, so the FINAL row per
@@ -406,8 +408,9 @@ object EventOps {
     import spark.implicits._
     val n = steps.size
     val stepIdx = steps.zipWithIndex.toMap
-    // Greedy per-event advance — shared by both timeout modes. Under
-    // per-key ts-ordered delivery this IS the batch semantics.
+    val horizon = stateTtl.orElse(within)
+    // Greedy per-event advance. Under per-key ts-ordered delivery this
+    // IS the batch semantics.
     def advance(cur: Array[Long], tpe: String, ts: Long): Unit =
       stepIdx.get(tpe).foreach { i =>
         if (cur(i) == -1L &&
@@ -415,54 +418,18 @@ object EventOps {
               within.forall(w => ts <= cur(0) + w))))
           cur(i) = ts
       }
-    stateTtl.orElse(within) match {
-      case None =>
-        events.groupByKey(_._1)
-          .flatMapGroupsWithState[Array[Long], (Long, Seq[Long])](
-            OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-            (user: Long, evs: Iterator[(Long, String, Long)],
-             state: GroupState[Array[Long]]) =>
-              val cur = state.getOption.getOrElse(Array.fill(n)(-1L))
-              evs.toSeq.sortBy(e => (e._3, e._2))
-                .foreach { case (_, tpe, ts) => advance(cur, tpe, ts) }
-              state.update(cur)
-              Iterator.single(user -> cur.toSeq)
-          }
-          .toDF("user_id", "step_ts")
-      case Some(horizon) =>
-        // Event-time timeouts need a watermarked timestamp column.
-        val wm = events.toDF("user_id", "event_type", "ts")
-          .withColumn("event_time", timestamp_seconds(col("ts")))
-          .withWatermark("event_time", "0 seconds")
-          .as[(Long, String, Long, java.sql.Timestamp)]
-        wm.groupByKey(_._1)
-          .flatMapGroupsWithState[Array[Long], (Long, Seq[Long])](
-            OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-            (user: Long, evs: Iterator[(Long, String, Long, java.sql.Timestamp)],
-             state: GroupState[Array[Long]]) =>
-              if (state.hasTimedOut) {
-                // Final row on expiry, then drop the key's state.
-                val cur = state.getOption.getOrElse(Array.fill(n)(-1L))
-                state.remove()
-                Iterator.single(user -> cur.toSeq)
-              } else {
-                val cur = state.getOption.getOrElse(Array.fill(n)(-1L))
-                var maxTs = Long.MinValue
-                evs.toSeq.sortBy(e => (e._3, e._2)).foreach { case (_, tpe, ts, _) =>
-                  maxTs = math.max(maxTs, ts)
-                  advance(cur, tpe, ts)
-                }
-                state.update(cur)
-                val anchor = if (cur(0) != -1L) cur(0) else maxTs
-                // never set a timeout at/behind the current watermark
-                val at = math.max((anchor + horizon) * 1000L,
-                  state.getCurrentWatermarkMs + 1L)
-                state.setTimeoutTimestamp(at)
-                Iterator.single(user -> cur.toSeq)
-              }
-          }
-          .toDF("user_id", "step_ts")
-    }
+    StatefulTable.keyed(events, (e: (Long, String, Long)) => e._1,
+        OutputMode.Update(), Expiry.eventTime(horizon, col("_3")))(
+      (user: Long, st: Option[Array[Long]], evs: Iterator[(Long, String, Long)]) => {
+        val cur = st.getOrElse(Array.fill(n)(-1L))
+        val sorted = evs.toSeq.sortBy(e => (e._3, e._2))
+        sorted.foreach { case (_, tpe, ts) => advance(cur, tpe, ts) }
+        val anchor = if (cur(0) != -1L) cur(0) else sorted.last._3
+        Next(Some(cur), Iterator.single(user -> cur.toSeq), horizon.map(anchor + _))
+      },
+      // final row on expiry
+      expired = (user: Long, cur: Array[Long]) => Iterator.single(user -> cur.toSeq)
+    ).toDF("user_id", "step_ts")
   }
 
   /** Streaming twin of [[transitionMatrix]]'s pair-generation stage:
@@ -501,46 +468,13 @@ object EventOps {
       }
       (cur, out.toSeq)
     }
-    stateTtl match {
-      case None =>
-        events.groupByKey(_._1)
-          .flatMapGroupsWithState[(String, Long), (String, String)](
-            OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-            (_: Long, evs: Iterator[(Long, String, Long, Long)],
-             state: GroupState[(String, Long)]) =>
-              val (next, pairs) = chain(state.getOption,
-                evs.toSeq.sortBy(e => (e._3, e._4))
-                  .map(e => (e._2, e._3, e._4)))
-              next.foreach(state.update)
-              pairs.iterator
-          }
-          .toDF("prev_type", "next_type")
-      case Some(ttl) =>
-        val wm = events.toDF("user_id", "event_type", "ts", "event_id")
-          .withColumn("event_time", timestamp_seconds(col("ts")))
-          .withWatermark("event_time", "0 seconds")
-          .as[(Long, String, Long, Long, java.sql.Timestamp)]
-        wm.groupByKey(_._1)
-          .flatMapGroupsWithState[(String, Long), (String, String)](
-            OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-            (_: Long, evs: Iterator[(Long, String, Long, Long, java.sql.Timestamp)],
-             state: GroupState[(String, Long)]) =>
-              if (state.hasTimedOut) {
-                state.remove(); Iterator.empty
-              } else {
-                val (next, pairs) = chain(state.getOption,
-                  evs.toSeq.sortBy(e => (e._3, e._4))
-                    .map(e => (e._2, e._3, e._4)))
-                next.foreach { s =>
-                  state.update(s)
-                  state.setTimeoutTimestamp(math.max((s._2 + ttl) * 1000L,
-                    state.getCurrentWatermarkMs + 1L))
-                }
-                pairs.iterator
-              }
-          }
-          .toDF("prev_type", "next_type")
-    }
+    StatefulTable.keyed(events, (e: (Long, String, Long, Long)) => e._1,
+        OutputMode.Append(), Expiry.eventTime(stateTtl, col("_3"))) {
+      (_: Long, st: Option[(String, Long)], evs: Iterator[(Long, String, Long, Long)]) =>
+        val (next, pairs) = chain(st,
+          evs.toSeq.sortBy(e => (e._3, e._4)).map(e => (e._2, e._3, e._4)))
+        Next(next, pairs.iterator, for (t <- stateTtl; s <- next) yield s._2 + t)
+    }.toDF("prev_type", "next_type")
   }
 
   /** SCD-2 interval build — compress a keyed changelog into validity
@@ -630,52 +564,28 @@ object EventOps {
       }
       (cur, out.toSeq)
     }
-    stateTtl match {
-      case None =>
-        events.groupByKey(_._1)
-          .flatMapGroupsWithState[(String, Long), (Long, String, Long, Long)](
-            OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-            (user: Long, evs: Iterator[(Long, String, Long, Long)],
-             state: GroupState[(String, Long)]) =>
-              val (next, closed) = chain(state.getOption,
-                evs.toSeq.sortBy(e => (e._3, e._4)).map(e => (e._2, e._3, e._4)))
-              next.foreach(state.update)
-              closed.iterator.map { case (st, from, to) => (user, st, from, to) }
-          }
-          .toDF("user_id", "state", "effective_from", "effective_to")
-      case Some(ttl) =>
-        // state gains last_ts: the timeout anchors on the last EVENT,
-        // not the interval start — an entity active in one state for
-        // years must not retire while events still arrive
-        val wm = events.toDF("user_id", "event_type", "ts_sec", "event_id")
-          .withColumn("event_time", timestamp_seconds(col("ts_sec")))
-          .withWatermark("event_time", "0 seconds")
-          .as[(Long, String, Long, Long, java.sql.Timestamp)]
-        wm.groupByKey(_._1)
-          .flatMapGroupsWithState[(String, Long, Long), (Long, String, Long, Long)](
-            OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-            (user: Long, evs: Iterator[(Long, String, Long, Long, java.sql.Timestamp)],
-             state: GroupState[(String, Long, Long)]) =>
-              if (state.hasTimedOut) {
-                val (st, from, _) = state.get
-                state.remove()
-                Iterator.single((user, st, from, Long.MaxValue))
-              } else {
-                val sorted = evs.toSeq.sortBy(e => (e._3, e._4))
-                val (next, closed) = chain(
-                  state.getOption.map(s => (s._1, s._2)),
-                  sorted.map(e => (e._2, e._3, e._4)))
-                val lastTs = sorted.last._3
-                next.foreach { case (st, from) =>
-                  state.update((st, from, lastTs))
-                  state.setTimeoutTimestamp(math.max((lastTs + ttl) * 1000L,
-                    state.getCurrentWatermarkMs + 1L))
-                }
-                closed.iterator.map { case (st, from, to) => (user, st, from, to) }
-              }
-          }
-          .toDF("user_id", "state", "effective_from", "effective_to")
-    }
+    // the TTL flavor's state gains last_ts: the timeout anchors on the
+    // last EVENT, not the interval start — an entity active in one
+    // state for years must not retire while events still arrive
+    def run[S: Encoder](open: S => (String, Long), keep: ((String, Long), Long) => S) =
+      StatefulTable.keyed(events, (e: (Long, String, Long, Long)) => e._1,
+          OutputMode.Append(), Expiry.eventTime(stateTtl, col("_3")))(
+        (user: Long, st: Option[S], evs: Iterator[(Long, String, Long, Long)]) => {
+          val sorted = evs.toSeq.sortBy(e => (e._3, e._4))
+          val (next, closed) = chain(st.map(open), sorted.map(e => (e._2, e._3, e._4)))
+          val lastTs = sorted.last._3
+          Next(next.map(keep(_, lastTs)),
+            closed.iterator.map { case (s, from, to) => (user, s, from, to) },
+            stateTtl.map(lastTs + _))
+        },
+        // retirement record: the open interval, q92's current-row sentinel
+        expired = (user: Long, s: S) => {
+          val (st, from) = open(s)
+          Iterator.single((user, st, from, Long.MaxValue))
+        })
+    (if (stateTtl.isEmpty) run[(String, Long)](identity, (s, _) => s)
+     else run[(String, Long, Long)](s => (s._1, s._2), (s, ts) => (s._1, s._2, ts)))
+      .toDF("user_id", "state", "effective_from", "effective_to")
   }
 
   /** Streaming twin of q89's new-vs-returning classification: per-user
@@ -712,43 +622,13 @@ object EventOps {
       }
       (cur, out.toSeq)
     }
-    stateTtl match {
-      case None =>
-        events.groupByKey(_._1)
-          .flatMapGroupsWithState[(Long, Long), (Long, Boolean)](
-            OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-            (_: Long, evs: Iterator[(Long, Long)],
-             state: GroupState[(Long, Long)]) =>
-              val (next, rows) = chain(state.getOption, evs.map(_._2).toSeq)
-              next.foreach(state.update)
-              rows.iterator
-          }
-          .toDF("day", "is_new")
-      case Some(ttl) =>
-        val wm = events.toDF("user_id", "day")
-          .withColumn("event_time", timestamp_seconds(col("day") * 86400L))
-          .withWatermark("event_time", "0 seconds")
-          .as[(Long, Long, java.sql.Timestamp)]
-        wm.groupByKey(_._1)
-          .flatMapGroupsWithState[(Long, Long), (Long, Boolean)](
-            OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-            (_: Long, evs: Iterator[(Long, Long, java.sql.Timestamp)],
-             state: GroupState[(Long, Long)]) =>
-              if (state.hasTimedOut) {
-                state.remove(); Iterator.empty
-              } else {
-                val (next, rows) = chain(state.getOption, evs.map(_._2).toSeq)
-                next.foreach { s =>
-                  state.update(s)
-                  state.setTimeoutTimestamp(math.max(
-                    (s._2 * 86400L + ttl) * 1000L,
-                    state.getCurrentWatermarkMs + 1L))
-                }
-                rows.iterator
-              }
-          }
-          .toDF("day", "is_new")
-    }
+    StatefulTable.keyed(events, (e: (Long, Long)) => e._1, OutputMode.Append(),
+        Expiry.eventTime(stateTtl, col("_2") * 86400L)) {
+      (_: Long, st: Option[(Long, Long)], evs: Iterator[(Long, Long)]) =>
+        val (next, rows) = chain(st, evs.map(_._2).toSeq)
+        Next(next, rows.iterator,
+          for (t <- stateTtl; s <- next) yield s._2 * 86400L + t)
+    }.toDF("day", "is_new")
   }
 
   /** Streaming twin of q108's growth accounting: per-user state is
@@ -787,41 +667,13 @@ object EventOps {
       }
       (cur, out.toSeq)
     }
-    stateTtl match {
-      case None =>
-        events.groupByKey(_._1)
-          .flatMapGroupsWithState[Long, (Long, String)](
-            OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-            (_: Long, evs: Iterator[(Long, Long)], state: GroupState[Long]) =>
-              val (next, rows) = chain(state.getOption, evs.map(_._2).toSeq)
-              next.foreach(state.update)
-              rows.iterator
-          }
-          .toDF("day", "category")
-      case Some(ttl) =>
-        val wm = events.toDF("user_id", "day")
-          .withColumn("event_time", timestamp_seconds(col("day") * 86400L))
-          .withWatermark("event_time", "0 seconds")
-          .as[(Long, Long, java.sql.Timestamp)]
-        wm.groupByKey(_._1)
-          .flatMapGroupsWithState[Long, (Long, String)](
-            OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-            (_: Long, evs: Iterator[(Long, Long, java.sql.Timestamp)],
-             state: GroupState[Long]) =>
-              if (state.hasTimedOut) {
-                state.remove(); Iterator.empty
-              } else {
-                val (next, rows) = chain(state.getOption, evs.map(_._2).toSeq)
-                next.foreach { d =>
-                  state.update(d)
-                  state.setTimeoutTimestamp(math.max((d * 86400L + ttl) * 1000L,
-                    state.getCurrentWatermarkMs + 1L))
-                }
-                rows.iterator
-              }
-          }
-          .toDF("day", "category")
-    }
+    StatefulTable.keyed(events, (e: (Long, Long)) => e._1, OutputMode.Append(),
+        Expiry.eventTime(stateTtl, col("_2") * 86400L)) {
+      (_: Long, st: Option[Long], evs: Iterator[(Long, Long)]) =>
+        val (next, rows) = chain(st, evs.map(_._2).toSeq)
+        Next(next, rows.iterator,
+          for (t <- stateTtl; d <- next) yield d * 86400L + t)
+    }.toDF("day", "category")
   }
 
   /** Streaming twin of q101's attribution comparison: per CONVERSION,
@@ -857,8 +709,7 @@ object EventOps {
     val spark = events.sparkSession
     import spark.implicits._
     val touchSet = touchTypes.toSet
-    // state: (max_ts_seen, touches within the trailing lookback);
-    // chain shared by both timeout modes
+    // state: (max_ts_seen, touches within the trailing lookback)
     def chain(st: Option[(Long, Seq[(String, Long, Long)])],
               batch: Seq[(Long, String, Long, Long, Double)])
         : ((Long, Seq[(String, Long, Long)]), Seq[(String, String, Double)]) = {
@@ -880,46 +731,13 @@ object EventOps {
       val maxTs = batch.foldLeft(prevMax)((m, e) => math.max(m, e._3))
       ((maxTs, touches.filter(_._2 >= maxTs - lookback)), out)
     }
-    stateTtl match {
-      case None =>
-        events.groupByKey(_._1)
-          .flatMapGroupsWithState[(Long, Seq[(String, Long, Long)]),
-            (String, String, Double)](
-            OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-            (_: Long, evs: Iterator[(Long, String, Long, Long, Double)],
-             state: GroupState[(Long, Seq[(String, Long, Long)])]) =>
-              val (next, out) = chain(state.getOption,
-                evs.toSeq.sortBy(e => (e._3, e._4)))
-              state.update(next)
-              out.iterator
-          }
-          .toDF("first_channel", "last_channel", "value")
-      case Some(ttl) =>
-        val wm = events
-          .toDF("user_id", "event_type", "ts_sec", "event_id", "value")
-          .withColumn("event_time", timestamp_seconds(col("ts_sec")))
-          .withWatermark("event_time", "0 seconds")
-          .as[(Long, String, Long, Long, Double, java.sql.Timestamp)]
-        wm.groupByKey(_._1)
-          .flatMapGroupsWithState[(Long, Seq[(String, Long, Long)]),
-            (String, String, Double)](
-            OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-            (_: Long, evs: Iterator[(Long, String, Long, Long, Double, java.sql.Timestamp)],
-             state: GroupState[(Long, Seq[(String, Long, Long)])]) =>
-              if (state.hasTimedOut) {
-                state.remove(); Iterator.empty
-              } else {
-                val (next, out) = chain(state.getOption,
-                  evs.map(e => (e._1, e._2, e._3, e._4, e._5)).toSeq
-                    .sortBy(e => (e._3, e._4)))
-                state.update(next)
-                state.setTimeoutTimestamp(math.max((next._1 + ttl) * 1000L,
-                  state.getCurrentWatermarkMs + 1L))
-                out.iterator
-              }
-          }
-          .toDF("first_channel", "last_channel", "value")
-    }
+    StatefulTable.keyed(events, (e: (Long, String, Long, Long, Double)) => e._1,
+        OutputMode.Append(), Expiry.eventTime(stateTtl, col("_3"))) {
+      (_: Long, st: Option[(Long, Seq[(String, Long, Long)])],
+       evs: Iterator[(Long, String, Long, Long, Double)]) =>
+        val (next, out) = chain(st, evs.toSeq.sortBy(e => (e._3, e._4)))
+        Next(Some(next), out.iterator, stateTtl.map(next._1 + _))
+    }.toDF("first_channel", "last_channel", "value")
   }
 
   /** Streaming twin of q122's rolling 7-day retention: per-user state
@@ -950,16 +768,11 @@ object EventOps {
       }
       (Some((maxDay, recent)), out.toSeq)
     }
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Seq[Long]), (Long, Boolean)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_: Long, evs: Iterator[(Long, Long)],
-         state: GroupState[(Long, Seq[Long])]) =>
-          val (next, rows) = chain(state.getOption, evs.map(_._2).toSeq)
-          next.foreach(state.update)
-          rows.iterator
-      }
-      .toDF("day", "retained")
+    StatefulTable.keyed(events, (e: (Long, Long)) => e._1, OutputMode.Append()) {
+      (_: Long, st: Option[(Long, Seq[Long])], evs: Iterator[(Long, Long)]) =>
+        val (next, rows) = chain(st, evs.map(_._2).toSeq)
+        Next(next, rows.iterator)
+    }.toDF("day", "retained")
   }
 
   /** Streaming half of q104's weekly movers: the maintained state is
@@ -1169,7 +982,7 @@ object EventOps {
     * (latest emission per key, `present` only) matches batch
     * [[cdcApply]] on (key, value, last_seq) for ANY batch split —
     * spec-pinned. The one documented divergence — the CONTRACT,
-    * spec-asserted both ways in Round15Spec: because a delete FREES
+    * spec-asserted both ways in StreamingSemanticsSpec: because a delete FREES
     * the slot, `n_ops` restarts when a key is deleted in one batch
     * and re-inserted in a later one (ops since the last
     * resurrection); within-batch delete+re-insert keeps the full
@@ -1183,34 +996,28 @@ object EventOps {
       : DataFrame = {
     val spark = ops.sparkSession
     import spark.implicits._
-    ops.groupByKey(_._1)
-      .flatMapGroupsWithState[
-        (Long, Long, Double, Long, Boolean), // lastSeq, lastSub, value, nOps, present
-        (Long, Double, Long, Long, Boolean)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[(Long, Long, Long, String, Double)],
-         state: GroupState[(Long, Long, Double, Long, Boolean)]) =>
-          val batch = it.toSeq.sortBy(t => (t._2, t._3))
-          var (ls, lb, v, n, present) = state.getOption
-            .getOrElse((Long.MinValue, Long.MinValue, 0.0, 0L, false))
-          batch.foreach { case (_, seq, sub, op, value) =>
-            n += 1
-            if (seq > ls || (seq == ls && sub > lb)) {
-              ls = seq; lb = sub
-              if (op == "D") { v = value; present = false }
-              else { v = value; present = true }
-            }
+    StatefulTable.keyed(ops, (o: (Long, Long, Long, String, Double)) => o._1,
+        OutputMode.Update()) {
+      (key: Long,
+       st: Option[(Long, Long, Double, Long, Boolean)], // lastSeq, lastSub, value, nOps, present
+       it: Iterator[(Long, Long, Long, String, Double)]) =>
+        val batch = it.toSeq.sortBy(t => (t._2, t._3))
+        var (ls, lb, v, n, present) =
+          st.getOrElse((Long.MinValue, Long.MinValue, 0.0, 0L, false))
+        batch.foreach { case (_, seq, sub, op, value) =>
+          n += 1
+          if (seq > ls || (seq == ls && sub > lb)) {
+            ls = seq; lb = sub
+            if (op == "D") { v = value; present = false }
+            else { v = value; present = true }
           }
-          if (present) state.update((ls, lb, v, n, present))
-          else {
-            // a real delete: the slot is FREED, not flagged — but the
-            // op total must survive, so tombstoned keys that get
-            // re-inserted later resume their count from the emission
-            // the reader keeps (state itself restarts at the re-insert)
-            state.remove()
-          }
-          Iterator((key, v, n, ls, present))
-      }
-      .toDF("k", "value", "n_ops", "last_seq", "present")
+        }
+        // a real delete: the slot is FREED, not flagged — but the op
+        // total must survive, so tombstoned keys that get re-inserted
+        // later resume their count from the emission the reader keeps
+        // (state itself restarts at the re-insert)
+        Next(if (present) Some((ls, lb, v, n, present)) else None,
+          Iterator((key, v, n, ls, present)))
+    }.toDF("k", "value", "n_ops", "last_seq", "present")
   }
 }

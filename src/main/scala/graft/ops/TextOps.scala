@@ -2685,36 +2685,32 @@ object TextOps {
     */
   def mgSummariesStream(tokens: org.apache.spark.sql.Dataset[(String, String)],
                         k: Int): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.streaming.StatefulTable
     require(k >= 1, "need k >= 1")
     val spark = tokens.sparkSession
     import spark.implicits._
-    tokens.groupByKey(_._1)
-      .flatMapGroupsWithState[(Map[String, Long], Long, Long),
-        (String, String, Long, Long, Long)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (shard: String, toks: Iterator[(String, String)],
-         state: GroupState[(Map[String, Long], Long, Long)]) =>
-          val (m0, dec0, seq0) = state.getOption
-            .getOrElse((Map.empty[String, Long], 0L, 0L))
-          var m = m0; var dec = dec0
-          toks.foreach { case (_, t) =>
-            m.get(t) match {
-              case Some(c) => m = m.updated(t, c + 1)
-              case None if m.size < k => m = m.updated(t, 1L)
-              case None =>
-                // decrement-all-by-1: the incoming token's implicit
-                // count and all k counters shed 1 together (k+1 mass
-                // per decrement ⇒ dec ≤ N/(k+1))
-                dec += 1
-                m = m.flatMap { case (t2, c) =>
-                  if (c > 1) Some(t2 -> (c - 1)) else None }
-            }
+    StatefulTable.keyed(tokens, (t: (String, String)) => t._1, OutputMode.Update()) {
+      (shard: String, st: Option[(Map[String, Long], Long, Long)],
+       toks: Iterator[(String, String)]) =>
+        val (m0, dec0, seq0) = st.getOrElse((Map.empty[String, Long], 0L, 0L))
+        var m = m0; var dec = dec0
+        toks.foreach { case (_, t) =>
+          m.get(t) match {
+            case Some(c) => m = m.updated(t, c + 1)
+            case None if m.size < k => m = m.updated(t, 1L)
+            case None =>
+              // decrement-all-by-1: the incoming token's implicit
+              // count and all k counters shed 1 together (k+1 mass
+              // per decrement ⇒ dec ≤ N/(k+1))
+              dec += 1
+              m = m.flatMap { case (t2, c) =>
+                if (c > 1) Some(t2 -> (c - 1)) else None }
           }
-          val seq = seq0 + 1
-          state.update((m, dec, seq))
-          m.iterator.map { case (t, c) => (shard, t, c, dec, seq) }
-      }
-      .toDF("shard", "tok", "cnt", "tail", "emit_seq")
+        }
+        val seq = seq0 + 1
+        StatefulTable.Next(Some((m, dec, seq)),
+          m.iterator.map { case (t, c) => (shard, t, c, dec, seq) })
+    }.toDF("shard", "tok", "cnt", "tail", "emit_seq")
   }
 }

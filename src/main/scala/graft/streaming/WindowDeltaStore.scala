@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** `delta(d)` / `relative_to` point reads over windowed tables — the
   * reference's `WindowSet.delta` (`faust/tables/wrappers.py:234-237`)
@@ -30,10 +30,9 @@ object WindowDeltaStore {
       (implicit outEnc: Encoder[DeltaView[K, V]],
        stateEnc: Encoder[Map[Long, V]]): Dataset[DeltaView[K, V]] = {
     require(deltaWindows > 0 && maxWindows > deltaWindows)
-    updates.groupByKey(_.key).flatMapGroupsWithState[Map[Long, V], DeltaView[K, V]](
-      OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-      (key: K, batch: Iterator[WindowUpdate[K, V]], state: GroupState[Map[Long, V]]) =>
-        var hist = state.getOption.getOrElse(Map.empty[Long, V])
+    StatefulTable.keyed(updates, (u: WindowUpdate[K, V]) => u.key, OutputMode.Append()) {
+      (key: K, st: Option[Map[Long, V]], batch: Iterator[WindowUpdate[K, V]]) =>
+        var hist = st.getOrElse(Map.empty[Long, V])
         val out = batch.toSeq.sortBy(_.windowStart).map { u =>
           hist = hist.updated(u.windowStart, u.value)
           if (hist.size > maxWindows)
@@ -41,8 +40,7 @@ object WindowDeltaStore {
           val deltaStart = u.windowStart - deltaWindows * windowSizeMs
           DeltaView(key, u.windowStart, u.value, deltaStart, hist.get(deltaStart))
         }
-        state.update(hist)
-        out.iterator
+        StatefulTable.Next(Some(hist), out.iterator)
     }
   }
 }

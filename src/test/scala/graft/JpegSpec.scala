@@ -156,4 +156,30 @@ class JpegSpec extends SparkTestBase {
     val ph = JpegOps.jpegPhash(jpegs, "id", "jpeg").collect()
     assert(ph.length == meta.length)
   }
+
+  test("m13 fixture rule: jpegPhash over own-encoded block-constant JPEGs " +
+    "equals the kernel phash of the raw block grid") {
+    import graft.ops.PhashKernel
+    // the full Spark path (encode → entropy decode → IDCT → 8x8 grid
+    // sample → DCT kernel) must equal the pure function of the text —
+    // the same identity m13's SQL oracle recomputes
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+      .limit(50)
+    val jpegs = JpegOps.textToJpegOwn(docs, "doc_id", "text")
+    val got = JpegOps.jpegPhash(jpegs, "id", "jpeg")
+      .select($"id", $"sh").as[(Long, Long)].collect().toMap
+    val texts = docs.as[(Long, String)].collect()
+    assert(texts.nonEmpty)
+    texts.foreach { case (id, text) =>
+      val cps = Option(text).getOrElse("").codePoints().toArray
+      val n = cps.length.toLong
+      def blockVal(b: Int): Long =
+        if (n > 0) (cps(((b * n) / 4).toInt) % 256).toLong else 0L
+      // grid cell (gy, gx) samples pixel (2gy, 2gx) → block (gy/4)*2+(gx/4)
+      val grid = Array.tabulate(64) { c =>
+        blockVal((c / 8 / 4) * 2 + (c % 8 / 4))
+      }
+      assert(got(id) == PhashKernel.phash56FromGrid(grid), s"doc $id")
+    }
+  }
 }

@@ -73,50 +73,6 @@ class Round14Spec extends SparkTestBase {
       (4L, 9.5, 2L, 10L)))  // tiebreaker column decides; k2 gone
   }
 
-  test("cdcApplyStream: tombstone deletes free state; snapshot ≡ batch") {
-    import graft.ops.EventOps
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Long, Long, String, Double)]
-    val q = EventOps.cdcApplyStream(input.toDS())
-      .writeStream.format("memory").queryName("cdc_stream")
-      .outputMode("update").start()
-    try {
-      // batch 1: k1 I, k2 I, k3 D-before-anything, k4 I+U (same batch)
-      input.addData((1L, 10L, 0L, "I", 1.0), (2L, 10L, 0L, "I", 5.0),
-        (4L, 10L, 0L, "I", 9.0), (4L, 10L, 1L, "U", 9.5))
-      q.processAllAvailable()
-      // batch 2: k1 U, k2 D (slot freed), k3 I, stale k4 op (dropped)
-      input.addData((1L, 20L, 0L, "U", 2.0), (2L, 30L, 0L, "D", 0.0),
-        (3L, 20L, 0L, "I", 7.0), (4L, 5L, 0L, "U", 0.1))
-      q.processAllAvailable()
-      val emitted = spark.table("cdc_stream")
-      // latest emission per key = the serving view
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("k").orderBy(col("last_seq").desc, col("n_ops").desc)
-      val snap = emitted.withColumn("_r", row_number().over(w))
-        .where($"_r" === 1).drop("_r")
-        .collect().map(r => r.getLong(0) ->
-          ((r.getDouble(1), r.getLong(3), r.getBoolean(4)))).toMap
-      assert(snap(1L) == ((2.0, 20L, true)))
-      assert(snap(2L)._3 == false)              // tombstoned downstream
-      assert(snap(3L) == ((7.0, 20L, true)))
-      assert(snap(4L) == ((9.5, 10L, true)))    // stale op dropped
-      // ≡ batch on (key, value, last_seq) for the same op multiset
-      val opsDf = Seq(
-        (1L, 10L, 0L, "I", 1.0), (2L, 10L, 0L, "I", 5.0),
-        (4L, 10L, 0L, "I", 9.0), (4L, 10L, 1L, "U", 9.5),
-        (1L, 20L, 0L, "U", 2.0), (2L, 30L, 0L, "D", 0.0),
-        (3L, 20L, 0L, "I", 7.0), (4L, 5L, 0L, "U", 0.1))
-        .toDF("k", "seq", "sub", "op", "value")
-      val batch = EventOps.cdcApply(opsDf, Seq("k"), Seq("seq", "sub"),
-        "op", Seq("value"))
-        .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(3))))
-        .toMap
-      val live = snap.filter(_._2._3).map { case (k, (v, s, _)) => k -> ((v, s)) }
-      assert(live == batch, s"streamed=$live batch=$batch")
-    } finally q.stop()
-  }
-
   test("resolveRedirects: chains collapse, loops flagged, depth doubles per round") {
     import graft.ops.UrlOps
     // chain a->b->c->d (depth 3) + 2-cycle x<->y + self-terminal m->t
