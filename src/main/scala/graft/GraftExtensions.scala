@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
+import graft.functions.PiiExpressions.PiiScan
 import graft.functions.VectorExpressions.{LongArrayEqCount, SimHash64, VectorDot}
 
 /** Session extension registering the engine's native expressions as
@@ -16,37 +17,34 @@ import graft.functions.VectorExpressions.{LongArrayEqCount, SimHash64, VectorDot
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions.functions
 
   /** Register on an already-built session (tests, REPLs). */
   def registerOn(spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction
-    registerFunction(spark, "vector_dot", args => VectorDot(args(0), args(1)))
-    registerFunction(spark, "simhash64", args => SimHash64(args.head))
-    registerFunction(spark, "minhash_agreement",
-      args => LongArrayEqCount(args(0), args(1)))
-    registerFunction(spark, "pii_scan",
-      args => graft.functions.PiiExpressions.PiiScan(args.head))
+    functions.foreach { case (name, _, builder) =>
+      registerFunction(spark, name, builder)
+    }
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
-    ext.injectFunction((
-      new FunctionIdentifier("vector_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, "vector_dot"),
-      (args: Seq[Expression]) => VectorDot(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_agreement"),
-      new ExpressionInfo(classOf[LongArrayEqCount].getName, "minhash_agreement"),
-      (args: Seq[Expression]) => LongArrayEqCount(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("pii_scan"),
-      new ExpressionInfo(
-        classOf[graft.functions.PiiExpressions.PiiScan].getName, "pii_scan"),
-      (args: Seq[Expression]) => graft.functions.PiiExpressions.PiiScan(args.head)))
+    functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
   }
+}
+
+object GraftExtensions {
+  /** The SQL functions both install paths register: (name, expression
+    * class, builder).
+    */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vector_dot", classOf[VectorDot], args => VectorDot(args(0), args(1))),
+    ("simhash64", classOf[SimHash64], args => SimHash64(args.head)),
+    ("minhash_agreement", classOf[LongArrayEqCount],
+      args => LongArrayEqCount(args(0), args(1))),
+    ("pii_scan", classOf[PiiScan], args => PiiScan(args.head)))
 }

@@ -550,7 +550,8 @@ object TextOps {
     * map-side against a broadcast sketch first. Only the might-contain
     * sliver of the increment pays the anti-join shuffle; at 1% fpp
     * that sliver is (true dups) + ~1% of new rows, so for a mostly-new
-    * daily increment the shuffle shrinks by ~100×.
+    * daily increment the shuffle shrinks by ~100×. The split is
+    * `bloomAntiJoin`, shared with [[incrementalChunkDedupBloom]].
     *
     * Note: building the sketch is an eager Spark job at call time
     * (one pass over the existing fingerprints); the returned frame is
@@ -560,22 +561,32 @@ object TextOps {
   def incrementalExactDedupBloom(incoming: DataFrame, existing: DataFrame,
                                  idCol: String, textCol: String,
                                  expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    import graft.functions.BloomExpressions.bloomMightContain
-    val spark = incoming.sparkSession
     val known = existing.select(fingerprintMd5(col(textCol)).as("fingerprint"))
       .distinct()
-    val sketch = known.stat.bloomFilter("fingerprint", expectedItems, fpp)
-    val bc = spark.sparkContext.broadcast(sketch)
-    val incomingDedup = exactDedup(incoming, idCol, textCol)
-    val maybe = bloomMightContain(col("fingerprint"), bc)
-    // definitely-new rows skip the anti-join entirely; the maybes are
-    // exact-confirmed so false positives cannot leak through. A null
-    // fingerprint (null text) probes to null — route it to the skip
-    // branch: the plain anti-join keeps it too (null keys never match),
-    // so both flavors stay bit-identical.
-    incomingDedup.where(maybe.isNull || !maybe)
-      .unionByName(incomingDedup.where(coalesce(maybe, lit(false)))
-        .join(known, Seq("fingerprint"), "left_anti"))
+    bloomAntiJoin(exactDedup(incoming, idCol, textCol), known, "fingerprint",
+      expectedItems, fpp)
+  }
+
+  /** Probe of `key` against a broadcast Bloom sketch of `known`'s `key`
+    * (an eager job): false = absent, true = maybe, null for null.
+    */
+  private def bloomProbe(known: DataFrame, key: String,
+                         expectedItems: Long, fpp: Double): Column = {
+    val sketch = known.stat.bloomFilter(key, expectedItems, fpp)
+    graft.functions.BloomExpressions.bloomMightContain(col(key),
+      known.sparkSession.sparkContext.broadcast(sketch))
+  }
+
+  /** `rows` left-anti `known` on `key`, the same rows as the plain
+    * anti-join: definitely-new rows (and null keys, which never match)
+    * skip it, the maybes are exact-confirmed.
+    */
+  private def bloomAntiJoin(rows: DataFrame, known: DataFrame, key: String,
+                            expectedItems: Long, fpp: Double): DataFrame = {
+    val maybe = bloomProbe(known, key, expectedItems, fpp)
+    rows.where(maybe.isNull || !maybe)
+      .unionByName(rows.where(coalesce(maybe, lit(false)))
+        .join(known, Seq(key), "left_anti"))
   }
 
   /** Sketch-based source similarity matrix: one k-lane MinHash
@@ -703,13 +714,10 @@ object TextOps {
     */
   def incrementalChunkDedup(incoming: DataFrame, existing: DataFrame,
                             idCol: String, textCol: String,
-                            window: Int = 4, modulus: Int = 8): DataFrame = {
-    val incChunks = contentDefinedChunks(incoming, idCol, textCol, window, modulus)
-      .groupBy(md5(col("chunk_text")).as("chunk_hash"))
-      .agg(min(col("id")).as("keep_doc"), count(lit(1)).as("n_dups"))
-    val known = chunkFingerprints(existing, idCol, textCol, window, modulus)
-    incChunks.join(known, Seq("chunk_hash"), "left_anti")
-  }
+                            window: Int = 4, modulus: Int = 8): DataFrame =
+    chunkCounts(incoming, idCol, textCol, window, modulus)
+      .join(chunkFingerprints(existing, idCol, textCol, window, modulus),
+        Seq("chunk_hash"), "left_anti")
 
   /** Bloom-accelerated [[incrementalChunkDedup]] — bit-identical
     * result (no false negatives; every might-contain row is
@@ -717,29 +725,22 @@ object TextOps {
     * map-side against a broadcast sketch of the corpus chunk
     * fingerprints first, so only the (true dups + fpp) sliver of the
     * increment's chunks pays the anti-join shuffle — the d15↔d09
-    * relationship, at chunk granularity.
+    * relationship at chunk granularity, through the same
+    * `bloomAntiJoin`.
     */
   def incrementalChunkDedupBloom(incoming: DataFrame, existing: DataFrame,
                                  idCol: String, textCol: String,
                                  expectedItems: Long, fpp: Double = 0.01,
-                                 window: Int = 4, modulus: Int = 8): DataFrame = {
-    import graft.functions.BloomExpressions.bloomMightContain
-    val spark = incoming.sparkSession
-    val known = chunkFingerprints(existing, idCol, textCol, window, modulus)
-    val sketch = known.stat.bloomFilter("chunk_hash", expectedItems, fpp)
-    val bc = spark.sparkContext.broadcast(sketch)
-    val incChunks = contentDefinedChunks(incoming, idCol, textCol, window, modulus)
+                                 window: Int = 4, modulus: Int = 8): DataFrame =
+    bloomAntiJoin(chunkCounts(incoming, idCol, textCol, window, modulus),
+      chunkFingerprints(existing, idCol, textCol, window, modulus),
+      "chunk_hash", expectedItems, fpp)
+
+  private def chunkCounts(incoming: DataFrame, idCol: String, textCol: String,
+                          window: Int, modulus: Int): DataFrame =
+    contentDefinedChunks(incoming, idCol, textCol, window, modulus)
       .groupBy(md5(col("chunk_text")).as("chunk_hash"))
       .agg(min(col("id")).as("keep_doc"), count(lit(1)).as("n_dups"))
-    val maybe = bloomMightContain(col("chunk_hash"), bc)
-    // definitely-new chunks skip the anti-join; maybes are exact-
-    // confirmed so false positives cannot leak through (chunk hashes
-    // are never null: even an empty token list yields a chunk row
-    // with empty chunk_text, and md5('') is a real value)
-    incChunks.where(maybe.isNull || !maybe)
-      .unionByName(incChunks.where(coalesce(maybe, lit(false)))
-        .join(known, Seq("chunk_hash"), "left_anti"))
-  }
 
   /** Token-set Jaccard near-duplicate pairs (id_a < id_b, jaccard >= threshold).
     *
@@ -1147,8 +1148,7 @@ object TextOps {
                    minEstimate: Double = 0.5,
                    portable: Boolean = false): DataFrame =
     minHashPairsFromSignatures(
-      df.select(col(idCol).as("id"),
-        minHashSignature(col(textCol), numHashes, portable).as("sig")),
+      minHashSigs(df, idCol, textCol, numHashes, portable),
       numHashes, bands, minEstimate)
 
   /** w-shingling flavor (Broder 1997): the MinHash set is word
@@ -1192,16 +1192,14 @@ object TextOps {
   }
 
   /** The candidate→estimate→member-expansion half of [[minHashPairs]]
-    * over any `(id, sig)` signature frame — shared by the unigram and
-    * shingle flavors.
+    * over any `(id, sig)` signature frame — the unigram and shingle
+    * flavors and d38's shared signature frame enter here. It is the
+    * banded-LSH core below with the MinHash band key and score.
     */
   def minHashPairsFromSignatures(sigFrame: DataFrame, numHashes: Int,
                                  bands: Int,
                                  minEstimate: Double): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sigs = sigFrame
-      .where(col("sig").isNotNull) // tokenless docs have no signature
     // Candidate generation and scoring run at DISTINCT-SIGNATURE
     // granularity: duplicate-heavy corpora collapse identical
     // signatures into one row each, turning an O(bucket²) doc-level
@@ -1218,34 +1216,82 @@ object TextOps {
     // signature kernel over the corpus (d03's final plan scanned
     // documents 6×). One eager pin of the compact (sig, ids) frame =
     // one signature pass.
-    val groups = Pin(sigs.groupBy("sig").agg(collect_list(col("id")).as("ids")))
-    val banded = groups.select(col("sig"), col("ids"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        bnd => xxhash64(bnd, slice(col("sig"), bnd * r + 1, lit(r)).cast("string")))))
+    val groups = Pin(sigGroups(sigFrame))
+    val banded = minHashBands(groups, numHashes, bands)
+    val score = minHashScore(numHashes, minEstimate)
+    memberPairs(bandJoin(banded, banded, ordered = true, score), groups, score)
+  }
+
+  // ── Banded LSH: every candidate path here runs these steps over an
+  // `(id, sig)` frame, differing only in band key, score and pins ──
+
+  private def sigGroups(sigFrame: DataFrame): DataFrame =
+    sigFrame.where(col("sig").isNotNull)
+      .groupBy("sig").agg(collect_list(col("id")).as("ids"))
+
+  private def bandRows(groups: DataFrame, keys: Column): DataFrame =
+    groups.select(groups.columns.map(col).toSeq :+ posexplode(keys): _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-    val a = banded.select(col("band"), col("band_hash"),
-      col("sig").as("sig_a"), col("ids").as("ids_a"))
-    val b = banded.select(col("band"), col("band_hash"),
-      col("sig").as("sig_b"), col("ids").as("ids_b"))
-    val crossPairs = a.join(b, Seq("band", "band_hash"))
-      .where(col("sig_a") < col("sig_b")) // lexicographic array order
-      .select(col("sig_a"), col("sig_b"), col("ids_a"), col("ids_b"),
-        (graft.functions.VectorExpressions.long_array_eq_count(
-          col("sig_a"), col("sig_b")).cast("double") / numHashes).as("est_jaccard"))
-      .where(col("est_jaccard") >= minEstimate)
+
+  /** Band b hashes signature positions [b·r, (b+1)·r); this hash
+    * decides which pairs become candidates.
+    */
+  private def minHashBands(groups: DataFrame, numHashes: Int,
+                           bands: Int): DataFrame = {
+    val r = numHashes / bands
+    bandRows(groups, transform(sequence(lit(0), lit(bands - 1)),
+      bnd => xxhash64(bnd, slice(col("sig"), bnd * r + 1, lit(r)).cast("string"))))
+  }
+
+  /** A band join's score column: its `name`, its value `of` two
+    * signatures, the threshold to `keep`, its value on `same` ones.
+    */
+  private case class BandScore(name: String, of: (Column, Column) => Column,
+                               keep: Column => Column, same: Column)
+
+  private def minHashScore(numHashes: Int, minEstimate: Double): BandScore =
+    BandScore("est_jaccard",
+      (a, b) => graft.functions.VectorExpressions.long_array_eq_count(a, b)
+        .cast("double") / numHashes,
+      _ >= minEstimate, lit(1.0))
+
+  /** Two sides' band rows joined on (band, band_hash), other columns
+    * suffixed `_a`/`_b`, scored and thresholded, one row per signature
+    * pair; `ordered` (a self-join) keeps sig_a < sig_b.
+    */
+  private def bandJoin(a: DataFrame, b: DataFrame, ordered: Boolean,
+                       score: BandScore): DataFrame = {
+    val carried = a.columns.toSeq.filterNot(Set("band", "band_hash"))
+    def side(df: DataFrame, sfx: String) = df.select(col("band") +:
+      col("band_hash") +: carried.map(c => col(c).as(c + sfx)): _*)
+    val joined = side(a, "_a").join(side(b, "_b"), Seq("band", "band_hash"))
+    (if (ordered) joined.where(col("sig_a") < col("sig_b")) else joined)
+      .select(carried.flatMap(c => Seq(col(c + "_a"), col(c + "_b"))) :+
+        score.of(col("sig_a"), col("sig_b")).as(score.name): _*)
+      .where(score.keep(col(score.name)))
       .dropDuplicates("sig_a", "sig_b") // multi-band collisions
-      .select(explode(col("ids_a")).as("m_a"), col("ids_b"), col("est_jaccard"))
-      .select(col("m_a"), explode(col("ids_b")).as("m_b"), col("est_jaccard"))
+  }
+
+  /** Signature pairs expanded to `(id_a < id_b, score)` member pairs,
+    * plus each identical-signature group's own pairs at `same`.
+    */
+  private def memberPairs(sigPairs: DataFrame, groups: DataFrame,
+                          score: BandScore): DataFrame = {
+    val crossPairs = explodeMembers(sigPairs, "m_a", "m_b", score)
       .select(least(col("m_a"), col("m_b")).as("id_a"),
-        greatest(col("m_a"), col("m_b")).as("id_b"), col("est_jaccard"))
-    // identical signatures agree on every position → estimate 1.0
-    val intra = groups.where(size(col("ids")) > 1 && lit(1.0) >= minEstimate)
+        greatest(col("m_a"), col("m_b")).as("id_b"), col(score.name))
+    val intra = groups.where(size(col("ids")) > 1 && score.keep(score.same))
       .select(explode(col("ids")).as("id_a"), col("ids"))
       .select(col("id_a"), explode(col("ids")).as("id_b"))
       .where(col("id_a") < col("id_b"))
-      .withColumn("est_jaccard", lit(1.0))
+      .withColumn(score.name, score.same)
     crossPairs.unionByName(intra)
   }
+
+  private def explodeMembers(sigPairs: DataFrame, a: String, b: String,
+                             score: BandScore): DataFrame =
+    sigPairs.select(explode(col("ids_a")).as(a), col("ids_b"), col(score.name))
+      .select(col(a), explode(col("ids_b")).as(b), col(score.name))
 
   /** Top-k most-similar documents per document (the similar-document
     * report): MinHash+LSH candidate pairs, symmetrized, each doc's k
@@ -1332,17 +1378,9 @@ object TextOps {
                               idCol: String, textCol: String,
                               numHashes: Int = 16, bands: Int = 4,
                               minEstimate: Double = 0.5,
-                              portable: Boolean = false): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val inc = mhBanded(mhSigGroups(incoming, idCol, textCol, numHashes, portable),
-      bands, r).select(col("band"), col("band_hash"),
-      col("sig").as("sig_i"), col("ids").as("ids_i"))
-    val ex = mhBanded(mhSigGroups(existing, idCol, textCol, numHashes, portable),
-      bands, r).select(col("band"), col("band_hash"),
-      col("sig").as("sig_e"), col("ids").as("ids_e"))
-    mhIncJoin(inc, ex, numHashes, minEstimate)
-  }
+                              portable: Boolean = false): DataFrame =
+    incrementalMinHash(incoming, existing, idCol, textCol, numHashes, bands,
+      minEstimate, portable)(_ => lit(true))
 
   /** Bloom-accelerated [[minHashPairsIncremental]] — bit-identical
     * results (spec-proven): the increment's band rows are pre-filtered
@@ -1354,7 +1392,8 @@ object TextOps {
     * band hashes compress to ~1.2 bytes each at 1% fpp and ride along
     * as a build-once-per-cycle broadcast, probed by every increment.
     * No false negatives + the exact signature-agreement confirmation
-    * downstream keep the pair set identical to the plain join.
+    * downstream keep the pair set identical to the plain join; the
+    * probe is `bloomProbe`, the one d15 and d19 split on.
     */
   def minHashPairsIncrementalBloom(incoming: DataFrame, existing: DataFrame,
                                    idCol: String, textCol: String,
@@ -1362,48 +1401,29 @@ object TextOps {
                                    minEstimate: Double = 0.5,
                                    portable: Boolean = false,
                                    expectedItems: Long = 1L << 20,
-                                   fpp: Double = 0.01): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    import graft.functions.BloomExpressions.bloomMightContain
-    val r = numHashes / bands
-    val ex = mhBanded(mhSigGroups(existing, idCol, textCol, numHashes, portable),
-      bands, r).select(col("band"), col("band_hash"),
-      col("sig").as("sig_e"), col("ids").as("ids_e"))
-    val sketch = ex.stat.bloomFilter("band_hash", expectedItems, fpp)
-    val bc = incoming.sparkSession.sparkContext.broadcast(sketch)
-    val inc = mhBanded(mhSigGroups(incoming, idCol, textCol, numHashes, portable),
-      bands, r).select(col("band"), col("band_hash"),
-      col("sig").as("sig_i"), col("ids").as("ids_i"))
-      .where(bloomMightContain(col("band_hash"), bc))
-    mhIncJoin(inc, ex, numHashes, minEstimate)
-  }
+                                   fpp: Double = 0.01): DataFrame =
+    incrementalMinHash(incoming, existing, idCol, textCol, numHashes, bands,
+      minEstimate, portable)(ex => bloomProbe(ex, "band_hash", expectedItems, fpp))
 
-  private def mhSigGroups(df: DataFrame, idCol: String, textCol: String,
-                          numHashes: Int, portable: Boolean): DataFrame =
+  /** Increment × corpus pairs; `mightCollide` filters the increment's band rows. */
+  private def incrementalMinHash(incoming: DataFrame, existing: DataFrame,
+                                 idCol: String, textCol: String,
+                                 numHashes: Int, bands: Int,
+                                 minEstimate: Double, portable: Boolean)(
+                                 mightCollide: DataFrame => Column): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
     // pinned (r19): the corpus side is referenced by both the Bloom
     // sketch build (an action) and the band join; the increment side
     // by the band join's plan — one signature pass each either way
-    Pin(df.select(col(idCol).as("id"),
-      minHashSignature(col(textCol), numHashes, portable).as("sig"))
-      .where(col("sig").isNotNull)
-      .groupBy("sig").agg(collect_list(col("id")).as("ids")))
-
-  private def mhBanded(groups: DataFrame, bands: Int, r: Int): DataFrame =
-    groups.select(col("sig"), col("ids"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        bnd => xxhash64(bnd, slice(col("sig"), bnd * r + 1, lit(r)).cast("string")))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-
-  private def mhIncJoin(inc: DataFrame, ex: DataFrame,
-                        numHashes: Int, minEstimate: Double): DataFrame =
-    inc.join(ex, Seq("band", "band_hash"))
-      .select(col("sig_i"), col("sig_e"), col("ids_i"), col("ids_e"),
-        (graft.functions.VectorExpressions.long_array_eq_count(
-          col("sig_i"), col("sig_e")).cast("double") / numHashes).as("est_jaccard"))
-      .where(col("est_jaccard") >= minEstimate)
-      .dropDuplicates("sig_i", "sig_e")
-      .select(explode(col("ids_i")).as("inc_id"), col("ids_e"), col("est_jaccard"))
-      .select(col("inc_id"), explode(col("ids_e")).as("ex_id"), col("est_jaccard"))
+    def side(df: DataFrame) = minHashBands(
+      Pin(sigGroups(minHashSigs(df, idCol, textCol, numHashes, portable))),
+      numHashes, bands)
+    val ex = side(existing)
+    val probe = mightCollide(ex)
+    val score = minHashScore(numHashes, minEstimate)
+    explodeMembers(bandJoin(side(incoming).where(probe), ex, ordered = false, score),
+      "inc_id", "ex_id", score)
+  }
 
   /** Near-duplicate CLUSTERS from an explicit candidate-edge set:
     * connected components over the near-dup pair graph, one canonical
@@ -1484,8 +1504,12 @@ object TextOps {
     */
   def minHashSigFrame(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int, portable: Boolean): DataFrame =
-    Pin(df.select(col(idCol).as("id"),
-      minHashSignature(col(textCol), numHashes, portable).as("sig")))
+    Pin(minHashSigs(df, idCol, textCol, numHashes, portable))
+
+  private def minHashSigs(df: DataFrame, idCol: String, textCol: String,
+                          numHashes: Int, portable: Boolean): DataFrame =
+    df.select(col(idCol).as("id"),
+      minHashSignature(col(textCol), numHashes, portable).as("sig"))
 
   /** The cluster half of [[dedupClustersMinHash]] over an existing
     * `(id, sig)` frame — callers that also need candidate pairs
@@ -1499,31 +1523,17 @@ object TextOps {
                                 bands: Int,
                                 minEstimate: Double): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val groups = sigs.where(col("sig").isNotNull)
-      .groupBy("sig").agg(collect_list(col("id")).as("ids"))
-    val withRep = groups.select(col("sig"),
+    val withRep = sigGroups(sigs).select(col("sig"),
       array_min(col("ids")).as("rep"), col("ids"))
     // tokenless docs (null signature) stay singleton components
     val docRep = withRep.select(explode(col("ids")).as("doc_id"),
         col("rep"))
       .unionByName(sigs.where(col("sig").isNull)
         .select(col("id").as("doc_id"), col("id").as("rep")))
-    val banded = withRep.select(col("sig"), col("rep"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        bnd => xxhash64(bnd, slice(col("sig"), bnd * r + 1, lit(r)).cast("string")))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-    val a = banded.select(col("band"), col("band_hash"),
-      col("sig").as("sig_a"), col("rep").as("rep_a"))
-    val b = banded.select(col("band"), col("band_hash"),
-      col("sig").as("sig_b"), col("rep").as("rep_b"))
-    val repEdges = a.join(b, Seq("band", "band_hash"))
-      .where(col("sig_a") < col("sig_b"))
-      .where(graft.functions.VectorExpressions.long_array_eq_count(
-        col("sig_a"), col("sig_b")).cast("double") / numHashes
-        >= minEstimate)
+    val banded = minHashBands(withRep.drop("ids"), numHashes, bands)
+    val repEdges = bandJoin(banded, banded, ordered = true,
+        minHashScore(numHashes, minEstimate))
       .select(col("rep_a").as("u"), col("rep_b").as("v"))
-      .dropDuplicates("u", "v")
     val repNodes = docRep.select(col("rep").as("id")).distinct()
     val labels = GraphOps.connectedComponents(repEdges, repNodes)
     val docLabels = docRep.join(labels, docRep("rep") === labels("id"))
@@ -1620,7 +1630,8 @@ object TextOps {
     * signature frame `(id, sh)` (simhash, perceptual image hash, …):
     * band-bucketed Hamming-LSH at distinct-signature granularity,
     * pigeonhole-complete for `maxHamming < bands`. Null signatures
-    * are dropped.
+    * are dropped. It is the banded-LSH core of [[minHashPairs]] with
+    * a bit-slice band key and the Hamming distance as the score.
     */
   def hammingPairsFromSignatures(sigFrame: DataFrame, maxHamming: Int,
                                  bands: Int): DataFrame = {
@@ -1629,37 +1640,15 @@ object TextOps {
     require(60 % bands == 0, "bands must divide the 60-bit signature")
     val bits = 60 / bands
     val mask = (1L << bits) - 1
-    val sigs = sigFrame.where(col("sh").isNotNull)
-    // pinned (r19): same three-reference shape as minHashPairs'
-    // groups — and the signature here is often an IMAGE hash (m05/
-    // m11/m13 perceptual pipelines), where re-decoding per reference
-    // is far worse than re-splitting text
-    val groups = Pin(sigs.groupBy("sh").agg(collect_list(col("id")).as("ids")))
-    val bandCols = array((0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("sh"), b * bits).bitwiseAND(lit(mask)).as("bits"))): _*)
-    val banded = groups.select(col("sh"), col("ids"), explode(bandCols).as("bd"))
-      .select(col("sh"), col("ids"), col("bd.band").as("band"), col("bd.bits").as("bits"))
-    val a = banded.select(col("band"), col("bits"),
-      col("sh").as("sh_a"), col("ids").as("ids_a"))
-    val b = banded.select(col("band"), col("bits"),
-      col("sh").as("sh_b"), col("ids").as("ids_b"))
-    val crossPairs = a.join(b, Seq("band", "bits"))
-      .where(col("sh_a") < col("sh_b"))
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .where(col("hamming") <= maxHamming)
-      .dropDuplicates("sh_a", "sh_b") // multi-band collisions
-      .select(explode(col("ids_a")).as("m_a"), col("ids_b"), col("hamming"))
-      .select(col("m_a"), explode(col("ids_b")).as("m_b"), col("hamming"))
-      .select(least(col("m_a"), col("m_b")).as("id_a"),
-        greatest(col("m_a"), col("m_b")).as("id_b"), col("hamming"))
-    // identical signatures: hamming 0 within the group
-    val intra = groups.where(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("hamming", lit(0))
-    crossPairs.unionByName(intra)
+    // pinned (r19): the groups feed both band-join legs and the
+    // intra-group leg — and the signature here is often an IMAGE hash
+    // (m05/m11/m13 perceptual pipelines), where re-decoding per
+    // reference is far worse than re-splitting text
+    val groups = Pin(sigGroups(sigFrame.select(col("id"), col("sh").as("sig"))))
+    val banded = bandRows(groups, array((0 until bands).map(b =>
+      shiftrightunsigned(col("sig"), b * bits).bitwiseAND(lit(mask))): _*))
+    val score = BandScore("hamming", hammingDistance, _ <= maxHamming, lit(0))
+    memberPairs(bandJoin(banded, banded, ordered = true, score), groups, score)
   }
 
   /** Word n-grams of the token array (n >= 2): joined with single

@@ -87,26 +87,54 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("dedupClustersMinHash: clusters from LSH candidate edges (scale path)") {
-    val docs = Tables.documents(spark, sf).limit(200)
-    val clusters = TextOps.dedupClustersMinHash(docs, "doc_id", "text",
-      numHashes = 16, bands = 2, minEstimate = 0.7, portable = true).cache()
-    assert(clusters.count() == 200)
-    val perCluster = clusters.groupBy("cluster_id")
-      .agg(sum("is_canonical").as("n_canon"), min("doc_id").as("min_id"))
-    assert(perCluster.where(col("n_canon") =!= 1).count() == 0)
-    assert(perCluster.where(col("min_id") =!= col("cluster_id")).count() == 0)
-    // identical texts share an identical signature → must co-cluster
-    val fp = docs.groupBy(md5(col("text")).as("f"))
-      .agg(collect_list("doc_id").as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("doc_id"), md5(lit("")).as("dummy"))
-      .drop("dummy")
-    val nViolations = fp.join(clusters, "doc_id")
-      .join(docs.select(col("doc_id"), md5(col("text")).as("f")), "doc_id")
-      .groupBy("f").agg(countDistinct("cluster_id").as("k"))
-      .where(col("k") =!= 1).count()
-    assert(nViolations == 0)
-    clusters.unpersist()
+    val base = Tables.documents(spark, sf).limit(200).select("doc_id", "text")
+    // two null-text docs have no signature: each must come out as its
+    // own canonical singleton on both paths below
+    val nullIds = base.orderBy("doc_id").limit(2)
+      .select((col("doc_id") + 10000000L).as("doc_id"),
+        lit(null).cast("string").as("text"))
+    val docs = base.unionByName(nullIds).cache()
+    val nullDocs = nullIds.select("doc_id").as[Long].collect().toSet
+    assert(nullDocs.size == 2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "cluster_id", "cluster_size", "is_canonical")
+        .orderBy("doc_id").collect().toSeq
+    for (portable <- Seq(true, false)) {
+      val clusters = TextOps.dedupClustersMinHash(docs, "doc_id", "text",
+        numHashes = 16, bands = 2, minEstimate = 0.7, portable = portable).cache()
+      assert(clusters.count() == 202)
+      val perCluster = clusters.groupBy("cluster_id")
+        .agg(sum("is_canonical").as("n_canon"), min("doc_id").as("min_id"))
+      assert(perCluster.where(col("n_canon") =!= 1).count() == 0)
+      assert(perCluster.where(col("min_id") =!= col("cluster_id")).count() == 0)
+      // identical texts share an identical signature → must co-cluster
+      val fp = docs.where(col("text").isNotNull)
+        .groupBy(md5(col("text")).as("f"))
+        .agg(collect_list("doc_id").as("ids"))
+        .where(size(col("ids")) > 1)
+        .select(explode(col("ids")).as("doc_id"), md5(lit("")).as("dummy"))
+        .drop("dummy")
+      val nViolations = fp.join(clusters, "doc_id")
+        .join(docs.select(col("doc_id"), md5(col("text")).as("f")), "doc_id")
+        .groupBy("f").agg(countDistinct("cluster_id").as("k"))
+        .where(col("k") =!= 1).count()
+      assert(nViolations == 0)
+      val got = rows(clusters)
+      val nullRows = got.filter(r => nullDocs(r.getLong(0)))
+      assert(nullRows.size == 2, s"portable=$portable")
+      nullRows.foreach { r =>
+        assert(r.getLong(1) == r.getLong(0) && r.getLong(2) == 1L && r.getInt(3) == 1,
+          s"portable=$portable: null-text doc not a canonical singleton: $r")
+      }
+      // the signature graph (each identical-signature group contracted
+      // to its min id) labels docs exactly as the member-pair graph does
+      val viaMembers = TextOps.dedupClustersFromEdges(docs, "doc_id",
+        TextOps.minHashPairs(docs, "doc_id", "text", numHashes = 16,
+          bands = 2, minEstimate = 0.7, portable = portable))
+      assert(got == rows(viaMembers), s"portable=$portable")
+      clusters.unpersist()
+    }
+    docs.unpersist()
   }
 
   test("dedupClusters: canonical per cluster, sizes add up, singletons kept") {

@@ -477,6 +477,97 @@ class OpsSpec extends SparkTestBase {
     assert(got.nonEmpty)
   }
 
+  test("d37 agreement census: channel jaccard well-formed") {
+    val r = SparkEntry.queries("d37_dual_channel_dedup")(spark, sf)
+      .select("n_both", "n_text_only", "n_emb_only", "channel_jaccard")
+      .as[(Long, Long, Long, Double)].collect().head
+    assert(r._1 >= 0 && r._2 >= 0 && r._3 >= 0)
+    assert(r._4 >= 0.0 && r._4 <= 1.0)
+    assert(r._4 == (if (r._1 + r._2 + r._3 == 0) 0.0
+      else BigDecimal(r._1.toDouble / (r._1 + r._2 + r._3))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+  }
+
+  test("d39 funnel: stages are monotone and consistent with d01/d06 counts") {
+    val out = SparkEntry.queries("d39_dedup_funnel")(spark, sf)
+      .select("stage", "n_docs", "total_tokens", "token_share")
+      .as[(String, Long, Long, Double)].collect()
+      .map(r => r._1 -> r).toMap
+    // docs and tokens can only shrink down the funnel
+    assert(out("raw")._2 >= out("exact_dedup")._2)
+    assert(out("exact_dedup")._2 >= out("near_dup")._2)
+    assert(out("raw")._3 >= out("near_dup")._3)
+    assert(out("raw")._4 == 1.0)
+    // near-dup stage keeps exactly one doc per d06 cluster
+    val nClusters = graft.ops.TextOps.dedupClustersMinHash(
+      Tables.documents(spark, sf), "doc_id", "text",
+      numHashes = 16, bands = 2, minEstimate = 0.7, portable = true)
+      .select("cluster_id").distinct().count()
+    assert(out("near_dup")._2 == nClusters)
+  }
+
+  test("d40/d41: TRUE identical shingle sets land at est=1.0 in BOTH hash families") {
+    // est = 1.0 means identical signatures — guaranteed for identical
+    // shingle SETS in any hash family (equal set ⇒ equal minima ⇒
+    // same band ⇒ recalled), but each family also has its own
+    // 16-position near-miss collisions, so the est=1.0 sets need not
+    // be equal. The hash-independent contract: the TRUE
+    // identical-set pairs are a subset of both.
+    // no two natural docs share a full 3-gram set (reordering breaks
+    // shingles even when token sets match), so the m05 recrawl
+    // fixture injects byte-identical twins
+    val base = Tables.documents(spark, sf)
+    val docs = base.select($"doc_id", $"text").unionByName(
+      base.where($"doc_id" % 25 === 0)
+        .select(($"doc_id" + 100000L).as("doc_id"), $"text"))
+    val trueDups = docs
+      .select($"doc_id",
+        md5(array_join(array_sort(array_distinct(
+          TextOps.wordNgrams($"text", 3))), "|")).as("fp"))
+      .groupBy("fp").agg(collect_list($"doc_id").as("ids"))
+      .where(size($"ids") > 1)
+      .select(explode($"ids").as("a"), $"ids")
+      .select($"a", explode($"ids").as("b")).where($"a" < $"b")
+      .as[(Long, Long)].collect().toSet
+    def exactPairs(df: org.apache.spark.sql.DataFrame) =
+      df.where($"est_jaccard" === 1.0)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val portable = exactPairs(TextOps.shingleMinHashPairs(
+      docs, "doc_id", "text", n = 3, numHashes = 16, bands = 2,
+      minEstimate = 0.7))
+    val xx = exactPairs(TextOps.shingleMinHashPairsXx(
+      docs, "doc_id", "text", n = 3, numHashes = 16, bands = 2,
+      minEstimate = 0.7))
+    assert(trueDups.nonEmpty) // the corpus has true duplicates
+    assert(trueDups.subsetOf(portable), (trueDups -- portable).toString)
+    assert(trueDups.subsetOf(xx), (trueDups -- xx).toString)
+  }
+
+  test("banded-LSH steps are written once in src/main") {
+    // each step of the LSH candidate path (band key, signature groups,
+    // Bloom sketch) has one home in TextOps; a second copy would let a
+    // fix to one silently miss the other
+    import scala.jdk.CollectionConverters._
+    val steps = Seq("xxhash64(bnd,", """collect_list(col("id")).as("ids")""",
+      ".stat.bloomFilter(")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val lines = try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { f =>
+          java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.map {
+            case (line, i) => (s"$f:${i + 1}", line)
+          }
+        }.toList
+      finally files.close()
+    val bad = steps.flatMap { step =>
+      val sites = lines.collect { case (at, line) if line.contains(step) => s"$at: ${line.trim}" }
+      if (sites.size == 1) Nil
+      else Seq(s"`$step` at ${sites.size} sites:\n  ${sites.mkString("\n  ")}")
+    }
+    if (bad.nonEmpty) fail(bad.mkString("\n"))
+  }
+
   test("cluster representatives: highest quality kept, not min id; one per cluster") {
     // docs 10/20 share a token SET (identical minhash signatures ⇒ same
     // cluster) but 20 has the higher mean-token-length quality score —
