@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,21 +34,150 @@ object VectorOps {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** [[dot]]'s element-order fold as a HOF, for arrays `vector_dot` does
+    * not take (double or integer elements, float against double).
+    */
+  private def dotFold(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y), lit(0.0), (acc, t) => acc + t)
+
+  // ---- nearest-neighbour core: top-k, pair scoring, brute-force kernel
+
+  /** Top-`k` rows per `part` by `order`, ranked into `rank`; the
+    * `row_number() <= k` filter lets Spark plan a WindowGroupLimit.
+    */
+  private def topK(df: DataFrame, part: String, order: Seq[Column], k: Int,
+                   rank: String): DataFrame =
+    df.withColumn(rank, row_number().over(Window.partitionBy(part).orderBy(order: _*)))
+      .where(col(rank) <= k)
+
+  /** [[topK]] per `id_a` on `(score DESC, id_b)`: the neighbour order. */
+  private def topKDesc(scored: DataFrame, score: String, k: Int,
+                       rank: String = "rk"): DataFrame =
+    topK(scored, "id_a", Seq(col(score).desc, col("id_b")), k, rank)
+
+  /** `(id, vec, nrm)`: the norm is computed once per vector, not per pair. */
+  private def kmBase(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).as("vec"),
+      norm(col(vecCol)).as("nrm"))
+
+  /** A [[kmBase]] frame's `keys`, then `id`/`vec`/`nrm` suffixed `_s`. */
+  private def side(df: DataFrame, s: String, keys: String*): DataFrame =
+    df.select(keys.map(col) ++ Seq(col("id").as(s"id_$s"),
+      col("vec").as(s"vec_$s"), col("nrm").as(s"nrm_$s")): _*)
+
+  /** A joined pair frame scored as `(id_a, id_b, cos)`. */
+  private def pairCos(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+      (dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b"))).as("cos"))
+
+  /** [[pairCos]] of the pairs sharing `key` that `keep(id_a, id_b)`. */
+  private def keyedPairCos(df: DataFrame, key: String,
+                           keep: (Column, Column) => Column): DataFrame =
+    pairCos(side(df, "a", key).join(side(df, "b", key), Seq(key))
+      .where(keep(col("id_a"), col("id_b"))))
+
+  /** The sequential double fold that `vector_dot` runs. Bounding the
+    * loop by both lengths lets the JIT drop per-element range checks.
+    */
+  private def arrayDot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var j = 0
+    while (j < n) { s += a(j).toDouble * b(j).toDouble; j += 1 }
+    s
+  }
+
+  private def kernelNorm(v: Array[Float]): Double = math.sqrt(arrayDot(v, v))
+
+  /** [[arrayDot]] of two kernel rows; mismatched dimensions (corrupt
+    * embeddings) fail naming both ids instead of truncating. A plain
+    * `if`, not `require`: its by-name message would be a closure per pair.
+    */
+  private def kernelDot(op: String, idA: Long, a: Array[Float],
+                        idB: Long, b: Array[Float]): Double = {
+    if (a.length != b.length) throw new IllegalArgumentException(
+      s"$op: dimension mismatch — id $idA has ${a.length} dims, id $idB has ${b.length}")
+    arrayDot(a, b)
+  }
+
+  /** A kernel's small side: a column-pruned limit-count probe (never a
+    * full scan) that fails with `tooBig` past `maxRows`, then the
+    * collected rows and their norms, broadcast.
+    */
+  private def broadcastSmallSide[T](df: DataFrame, idCol: String, maxRows: Int,
+                                    tooBig: => String)(rows: => Array[T])(
+                                    vec: T => Array[Float],
+                                    nrm: Array[Float] => Double)
+      : Broadcast[(Array[T], Array[Double])] = {
+    val probe = df.select(col(idCol)).limit(maxRows + 1).count()
+    require(probe <= maxRows, tooBig)
+    val collected = rows
+    df.sparkSession.sparkContext.broadcast((collected, collected.map(r => nrm(vec(r)))))
+  }
+
+  /** The brute-force kernel body: each left row scores every other
+    * broadcast right row as `dot / (nrm_a * nrm_b)` and keeps its top
+    * `k`. MIPS passes norm 1.0: `d / (1.0 * 1.0)` is `d` bit for bit.
+    */
+  private def bruteForceTopK(op: String, left: DataFrame, right: DataFrame,
+                             idCol: String, vecCol: String, k: Int,
+                             maxRightRows: Int, tooBig: => String,
+                             nrm: Array[Float] => Double,
+                             score: String): DataFrame = {
+    val spark = left.sparkSession
+    import spark.implicits._
+    def rows(df: DataFrame) = df.select(col(idCol), col(vecCol)).as[(Long, Array[Float])]
+    val bc = broadcastSmallSide(right, idCol, maxRightRows, tooBig)(
+      rows(right).collect())(_._2, nrm)
+    rows(left).mapPartitions { it =>
+      val (rRows, rNorms) = bc.value
+      it.flatMap { case (idA, vecA) =>
+        topKOfRow(op, idA, vecA, nrm(vecA), rRows, rNorms, k)
+          .map { case (rk, idB, s) => (idA, rk, idB, s) }
+      }
+    }.toDF("id_a", "rk", "id_b", score)
+  }
+
+  /** One left row's top `k` by (score DESC, id ASC) over every other
+    * right row, scored `dot / (nrmA * rNorm)`: a bounded insertion into
+    * k slots. Returns (rank, id, score) of the filled slots.
+    */
+  private def topKOfRow(op: String, idA: Long, vecA: Array[Float], nrmA: Double,
+                        rRows: Array[(Long, Array[Float])], rNorms: Array[Double],
+                        k: Int): Iterator[(Int, Long, Double)] = {
+    val topS = Array.fill(k)(Double.NegativeInfinity)
+    val topId = new Array[Long](k)
+    var r = 0
+    while (r < rRows.length) {
+      val (idB, vecB) = rRows(r)
+      if (idB != idA) {
+        val s = kernelDot(op, idA, vecA, idB, vecB) / (nrmA * rNorms(r))
+        // find the insertion slot (better = higher score, or equal score + lower id)
+        var slot = k
+        var s2 = k - 1
+        while (s2 >= 0 && (s > topS(s2) ||
+          (s == topS(s2) && idB < topId(s2)))) { slot = s2; s2 -= 1 }
+        if (slot < k) {
+          var m = k - 1
+          while (m > slot) { topS(m) = topS(m - 1); topId(m) = topId(m - 1); m -= 1 }
+          topS(slot) = s; topId(slot) = idB
+        }
+      }
+      r += 1
+    }
+    (0 until k).iterator.filter(s => topS(s) != Double.NegativeInfinity)
+      .map(s => (s + 1, topId(s), topS(s)))
+  }
+
   /** Exact top-k neighbors for every vector (excluding self).
     * `right` is broadcast — at scale, the query set is the small side.
     * Norms are computed once per vector, not once per pair.
     */
   def knnBruteForce(left: DataFrame, right: DataFrame, idCol: String,
                     vecCol: String, k: Int): DataFrame = {
-    val a = left.select(col(idCol).as("id_a"), col(vecCol).as("vec_a"),
-      norm(col(vecCol)).as("nrm_a"))
-    val b = right.select(col(idCol).as("id_b"), col(vecCol).as("vec_b"),
-      norm(col(vecCol)).as("nrm_b"))
-    val scored = a.join(broadcast(b), col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b"))).as("cos"))
-    val w = Window.partitionBy("id_a").orderBy(col("cos").desc, col("id_b"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    val a = side(kmBase(left, idCol, vecCol), "a")
+    val b = side(kmBase(right, idCol, vecCol), "b")
+    topKDesc(pairCos(a.join(broadcast(b), col("id_a") =!= col("id_b"))), "cos", k)
       .select("id_a", "rk", "id_b", "cos")
   }
 
@@ -61,75 +191,31 @@ object VectorOps {
     * The right side is collected and broadcast — same contract as the
     * broadcast join in the declarative form, and the row guard makes
     * that contract self-enforcing: a right side past `maxRightRows`
-    * fails fast with a pointer to the scale-path twins (s03 LSH /
-    * s05 IVF) instead of OOMing the driver at collect. The probe is a
-    * column-pruned limit-count, never a full scan.
+    * fails fast with a pointer to the scale-path twins
+    * ([[lshNearestNeighbors]], s03; [[ivfNearestNeighbors]], s05)
+    * instead of OOMing the driver at collect. The probe is a
+    * column-pruned limit-count, never a full scan. A left row gets up
+    * to `k` neighbours whether or not its id is also on the right
+    * side; vectors of different dimensions fail, naming both ids.
     */
   def knnBruteForceKernel(left: DataFrame, right: DataFrame, idCol: String,
                           vecCol: String, k: Int,
-                          maxRightRows: Int = 1 << 20): DataFrame = {
-    val spark = left.sparkSession
-    import spark.implicits._
-    val probe = right.select(col(idCol)).limit(maxRightRows + 1).count()
-    require(probe <= maxRightRows,
+                          maxRightRows: Int = 1 << 20): DataFrame =
+    bruteForceTopK("knnBruteForceKernel", left, right, idCol, vecCol, k,
+      maxRightRows,
       s"knnBruteForceKernel right side exceeds $maxRightRows rows — " +
         "brute force is the small-query-side fixture; use the bucketed " +
-        "scale paths instead: VectorOps.knnLsh (s03) or knnIvf (s05)")
-    val rightRows = right.select(col(idCol), col(vecCol))
-      .as[(Long, Array[Float])].collect()
-    val rightNorms = rightRows.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((rightRows, rightNorms))
-
-    left.select(col(idCol), col(vecCol)).as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val (rRows, rNorms) = bc.value
-        it.flatMap { case (idA, vecA) =>
-          var sa = 0.0
-          var i = 0
-          while (i < vecA.length) { sa += vecA(i).toDouble * vecA(i).toDouble; i += 1 }
-          val nrmA = math.sqrt(sa)
-          // bounded top-k: (cos desc, id asc), insertion into k slots
-          val topCos = Array.fill(k)(Double.NegativeInfinity)
-          val topId = new Array[Long](k)
-          var r = 0
-          while (r < rRows.length) {
-            val (idB, vecB) = rRows(r)
-            if (idB != idA) {
-              var dotAb = 0.0
-              var j = 0
-              val n = math.min(vecA.length, vecB.length)
-              while (j < n) { dotAb += vecA(j).toDouble * vecB(j).toDouble; j += 1 }
-              val cos = dotAb / (nrmA * rNorms(r))
-              // find insertion slot (better = higher cos, or equal cos + lower id)
-              var slot = k
-              var s2 = k - 1
-              while (s2 >= 0 && (cos > topCos(s2) ||
-                (cos == topCos(s2) && idB < topId(s2)))) { slot = s2; s2 -= 1 }
-              if (slot < k) {
-                var m = k - 1
-                while (m > slot) { topCos(m) = topCos(m - 1); topId(m) = topId(m - 1); m -= 1 }
-                topCos(slot) = cos; topId(slot) = idB
-              }
-            }
-            r += 1
-          }
-          (0 until math.min(k, rRows.length - 1)).iterator
-            .filter(s => topCos(s) != Double.NegativeInfinity)
-            .map(s => (idA, s + 1, topId(s), topCos(s)))
-        }
-      }.toDF("id_a", "rk", "id_b", "cos")
-  }
+        "scale paths instead: VectorOps.lshNearestNeighbors (s03) or " +
+        "ivfNearestNeighbors (s05)",
+      kernelNorm, "cos")
 
   /** Maximum-inner-product search (MIPS) — top-k by RAW dot product,
     * the retrieval objective when magnitude carries signal (recommender
     * scores, unnormalized query/doc towers) and cosine's normalization
-    * would erase it. Same kernel contract as [[knnBruteForceKernel]]
-    * (broadcast right side, bounded top-k insertion, ties broken by
-    * lower id), scoring `dot` instead of `cos`.
+    * would erase it. The [[knnBruteForceKernel]] body with unit norms
+    * (broadcast right side, row guard, bounded top-k insertion, ties
+    * broken by lower id, dimension check), scoring `dot` instead of
+    * `cos`.
     *
     * Scale path: the norm-augmentation reduction (Bachrach et al.
     * 2014) — append sqrt(M² − ‖x‖²) to each database vector and 0 to
@@ -139,49 +225,12 @@ object VectorOps {
     */
   def mipsBruteForceKernel(left: DataFrame, right: DataFrame, idCol: String,
                            vecCol: String, k: Int,
-                           maxRightRows: Int = 1 << 20): DataFrame = {
-    val spark = left.sparkSession
-    import spark.implicits._
-    val probe = right.select(col(idCol)).limit(maxRightRows + 1).count()
-    require(probe <= maxRightRows,
+                           maxRightRows: Int = 1 << 20): DataFrame =
+    bruteForceTopK("mipsBruteForceKernel", left, right, idCol, vecCol, k,
+      maxRightRows,
       s"mipsBruteForceKernel right side exceeds $maxRightRows rows — " +
-        "use the norm-augmented bucketed tiers (see Scaladoc) instead")
-    val rightRows = right.select(col(idCol), col(vecCol))
-      .as[(Long, Array[Float])].collect()
-    val bc = spark.sparkContext.broadcast(rightRows)
-
-    left.select(col(idCol), col(vecCol)).as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val rRows = bc.value
-        it.flatMap { case (idA, vecA) =>
-          val topDot = Array.fill(k)(Double.NegativeInfinity)
-          val topId = new Array[Long](k)
-          var r = 0
-          while (r < rRows.length) {
-            val (idB, vecB) = rRows(r)
-            if (idB != idA) {
-              var d = 0.0
-              var j = 0
-              val n = math.min(vecA.length, vecB.length)
-              while (j < n) { d += vecA(j).toDouble * vecB(j).toDouble; j += 1 }
-              var slot = k
-              var s2 = k - 1
-              while (s2 >= 0 && (d > topDot(s2) ||
-                (d == topDot(s2) && idB < topId(s2)))) { slot = s2; s2 -= 1 }
-              if (slot < k) {
-                var m = k - 1
-                while (m > slot) { topDot(m) = topDot(m - 1); topId(m) = topId(m - 1); m -= 1 }
-                topDot(slot) = d; topId(slot) = idB
-              }
-            }
-            r += 1
-          }
-          (0 until math.min(k, rRows.length - 1)).iterator
-            .filter(s => topDot(s) != Double.NegativeInfinity)
-            .map(s => (idA, s + 1, topId(s), topDot(s)))
-        }
-      }.toDF("id_a", "rk", "id_b", "dot")
-  }
+        "use the norm-augmented bucketed tiers (see Scaladoc) instead",
+      _ => 1.0, "dot")
 
   /** MMR diversified rerank (Carbonell & Goldstein 1998): per query,
     * take the top-`kCand` candidates by cosine relevance, then
@@ -230,13 +279,10 @@ object VectorOps {
     // expression-level 1-λ (NOT a Scala-side subtraction result typed
     // into SQL): both engines then run the identical IEEE 1-λ
     val mu = lit(1.0) - lit(lambda)
-    def pick(scored: DataFrame, r: Int): DataFrame = {
-      val w = Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))
-      scored.withColumn("__rk", row_number().over(w))
-        .where(col("__rk") === 1)
+    def pick(scored: DataFrame, r: Int): DataFrame =
+      topK(scored, "qid", Seq(col("score").desc, col("cid")), 1, "__rk")
         .select(col("qid"), col("cid"), lit(r).as("mmr_rank"),
           col("rel"), col("score"))
-    }
     // pin each round's selection too, eagerly: round r references
     // sel(r−1) twice (anti-join + max-sim), so an unpinned lineage
     // re-executes every earlier round 2^r times (measured 5.4 s →
@@ -269,13 +315,8 @@ object VectorOps {
   /** Near-duplicate pairs by embedding cosine (id_a < id_b, cos >= threshold). */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          threshold: Double): DataFrame = {
-    val a = df.select(col(idCol).as("id_a"), col(vecCol).as("vec_a"),
-      norm(col(vecCol)).as("nrm_a"))
-    val b = df.select(col(idCol).as("id_b"), col(vecCol).as("vec_b"),
-      norm(col(vecCol)).as("nrm_b"))
-    a.join(broadcast(b), col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b"))).as("cos"))
+    val v = kmBase(df, idCol, vecCol)
+    pairCos(side(v, "a").join(broadcast(side(v, "b")), col("id_a") < col("id_b")))
       .where(col("cos") >= threshold)
   }
 
@@ -307,27 +348,17 @@ object VectorOps {
                   maxRightRows: Int = 1 << 20): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val probe = df.select(col(idCol)).limit(maxRightRows + 1).count()
-    require(probe <= maxRightRows,
-      s"tripletMine batch exceeds $maxRightRows rows — batch-hard " +
-        "mining is per-batch by contract; block by label or IVF cell " +
-        "(VectorOps.ivfAssign) and mine within blocks")
     val typed = df.select(col(idCol), col(vecCol),
       col(labelCol).cast("int")).as[(Long, Array[Float], Int)]
-    val rightRows = typed.collect()
-    val rightNorms = rightRows.map { case (_, v, _) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((rightRows, rightNorms))
+    val bc = broadcastSmallSide(df, idCol, maxRightRows,
+      s"tripletMine batch exceeds $maxRightRows rows — batch-hard " +
+        "mining is per-batch by contract; block by label or IVF cell " +
+        "(VectorOps.ivfAssign) and mine within blocks")(
+      typed.collect())(_._2, kernelNorm)
     typed.mapPartitions { it =>
       val (rRows, rNorms) = bc.value
       it.flatMap { case (idA, vecA, labA) =>
-        var sa = 0.0
-        var i = 0
-        while (i < vecA.length) { sa += vecA(i).toDouble * vecA(i).toDouble; i += 1 }
-        val nrmA = math.sqrt(sa)
+        val nrmA = kernelNorm(vecA)
         // hardest positive: lowest same-label cos; hardest negative:
         // highest cross-label cos; equal cos → lower id wins
         var posCos = 0.0; var posId = -1L; var hasPos = false
@@ -336,17 +367,7 @@ object VectorOps {
         while (r < rRows.length) {
           val (idB, vecB, labB) = rRows(r)
           if (idB != idA) {
-            // corrupt embeddings must surface as errors, not as
-            // silently truncated dots feeding plausible-but-wrong
-            // hardest-positive/negative picks
-            require(vecA.length == vecB.length,
-              s"tripletMine: dimension mismatch — id $idA has " +
-                s"${vecA.length} dims, id $idB has ${vecB.length}")
-            var dotAb = 0.0
-            var j = 0
-            val n = vecA.length
-            while (j < n) { dotAb += vecA(j).toDouble * vecB(j).toDouble; j += 1 }
-            val cos = dotAb / (nrmA * rNorms(r))
+            val cos = kernelDot("tripletMine", idA, vecA, idB, vecB) / (nrmA * rNorms(r))
             if (labB == labA) {
               if (!hasPos || cos < posCos ||
                 (cos == posCos && idB < posId)) {
@@ -394,14 +415,7 @@ object VectorOps {
                             probes: Int = 1,
                             portablePivots: Boolean = false): DataFrame = {
     val assigned = ivfAssign(df, idCol, vecCol, nCells, probes, portablePivots)
-    val a = assigned.select(col("cell"), col("id").as("id_a"),
-      col("vec").as("vec_a"), col("nrm").as("nrm_a"))
-    val b = assigned.select(col("cell"), col("id").as("id_b"),
-      col("vec").as("vec_b"), col("nrm").as("nrm_b"))
-    val scored = a.join(b, Seq("cell"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b"))).as("cos"))
+    val scored = keyedPairCos(assigned, "cell", _ < _)
       .where(col("cos") >= threshold)
       .select("id_a", "id_b")
     // only multi-probe can surface a pair in several cells; at the
@@ -418,16 +432,18 @@ object VectorOps {
   private def planeComponent(plane: Int, dim: Column): Column =
     (pmod(xxhash64(lit(plane), dim), lit(2000001L)).cast("double") / 1000000.0) - 1.0
 
+  /** Bucket id: bit `p` set where plane `p`'s projection is positive. */
+  private def planeBits(numPlanes: Int)(proj: Int => Column): Column =
+    (0 until numPlanes).map { p =>
+      when(proj(p) > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
+    }.reduce((a, b) => a.bitwiseOR(b))
+
   /** Sign-random-projection LSH bucket id: one bit per hyperplane. */
-  def lshBucket(vec: Column, numPlanes: Int): Column = {
-    val bits = (0 until numPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(p, i)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
+  def lshBucket(vec: Column, numPlanes: Int): Column = planeBits(numPlanes) { p =>
+    aggregate(
+      zip_with(vec, sequence(lit(0), size(vec) - 1),
+        (x, i) => x.cast("double") * planeComponent(p, i)),
+      lit(0.0), (acc, v) => acc + v)
   }
 
   /** Portable LSH bucket: hyperplane components derive from the MD5
@@ -436,25 +452,32 @@ object VectorOps {
     * materialized driver-side as literals — cheaper than per-row
     * hashing AND engine-independent. Oracle-verified flavor (s03).
     */
-  def lshBucketPortable(vec: Column, numPlanes: Int, dim: Int): Column = {
-    val bits = (0 until numPlanes).map { p =>
+  def lshBucketPortable(vec: Column, numPlanes: Int, dim: Int): Column =
+    planeBits(numPlanes) { p =>
       val weights = typedlit((0 until dim).map(i =>
         graft.functions.PortableHash.unitValue(s"$p,$i")))
-      val proj = aggregate(
-        zip_with(vec, weights, (x, w) => x.cast("double") * w),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
+      dotFold(vec, weights)
     }
-    bits.reduce((a, b) => a.bitwiseOR(b))
+
+  /** `n` pivot rows `(pid, pvec, extra…)` by lowest xxhash64(id), or
+    * with `portable` lowest MD5 hex of the id string (any engine, s05).
+    */
+  private def pickPivots(df: DataFrame, idCol: String, vecCol: String, n: Int,
+                         portable: Boolean, extra: Column*): DataFrame = {
+    val order = if (portable) md5(col("pid").cast("string")) else xxhash64(col("pid"))
+    df.select(Seq(col(idCol).as("pid"), col(vecCol).as("pvec")) ++ extra: _*)
+      .orderBy(order, col("pid")).limit(n)
   }
 
-  /** IVF-style ANN: partition the corpus into `nCells` Voronoi cells
-    * around deterministically-chosen pivot vectors (lowest
-    * xxhash64(id) — reproducible, no RNG/kmeans state), assign each
-    * vector to its `probes` nearest pivots, then exact-rerank within
-    * cells. Candidate work is N·nCells dots for assignment plus
-    * intra-cell pairs — the standard IVF trade against brute force.
-    */
+  /** [[pickPivots]] on the driver, widened to double, sorted by id. */
+  private def pivotVectors(df: DataFrame, idCol: String, vecCol: String, n: Int,
+                           portable: Boolean): Seq[(Long, Array[Double])] =
+    pickPivots(df, idCol, vecCol, n, portable)
+      .select(col("pid"), transform(col("pvec"), x => x.cast("double")).as("cvec"))
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+
   /** IVF cell assignment: pick `nCells` deterministic pivots, assign
     * every vector to its `probes` nearest — the shared front half of
     * IVF search and IVF maintenance. Returns (cell, id, vec, nrm).
@@ -462,21 +485,12 @@ object VectorOps {
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
                 nCells: Int, probes: Int = 1,
                 portablePivots: Boolean = false): DataFrame = {
-    // portable pivot choice orders by the MD5 hex of the id string —
-    // reproducible in any engine (oracle-verified flavor, s05)
-    val pivotOrder =
-      if (portablePivots) md5(col("pid").cast("string")) else xxhash64(col("pid"))
-    val pivots = df
-      .select(col(idCol).as("pid"), col(vecCol).as("pvec"),
-        norm(col(vecCol)).as("pnrm"))
-      .orderBy(pivotOrder, col("pid")).limit(nCells)
-    val wAssign = Window.partitionBy("id").orderBy(col("psim").desc, col("pid"))
-    df.select(col(idCol).as("id"), col(vecCol).as("vec"), norm(col(vecCol)).as("nrm"))
-      .join(broadcast(pivots))
+    val pivots = pickPivots(df, idCol, vecCol, nCells, portablePivots,
+      norm(col(vecCol)).as("pnrm"))
+    val sims = kmBase(df, idCol, vecCol).join(broadcast(pivots))
       .select(col("id"), col("vec"), col("nrm"), col("pid"),
         (dot(col("vec"), col("pvec")) / (col("nrm") * col("pnrm"))).as("psim"))
-      .withColumn("prk", row_number().over(wAssign))
-      .where(col("prk") <= probes)
+    topK(sims, "id", Seq(col("psim").desc, col("pid")), probes, "prk")
       .select(col("pid").as("cell"), col("id"), col("vec"), col("nrm"))
   }
 
@@ -521,15 +535,20 @@ object VectorOps {
           s => s.getField("c")).as("cv"))
     val a = cent.select(col("label").as("label_a"), col("cv").as("va"))
     val b = cent.select(col("label").as("label_b"), col("cv").as("vb"))
-    val dotAb = aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y),
-      lit(0.0), (acc, v) => acc + v)
-    val nrm = (v: Column) => sqrt(aggregate(
-      zip_with(v, v, (x, y) => x * y), lit(0.0), (acc, z) => acc + z))
+    val dotAb = dotFold(col("va"), col("vb"))
+    val nrm = (v: Column) => sqrt(dotFold(v, v))
     a.join(broadcast(b), col("label_a") < col("label_b"))
       .select(col("label_a"), col("label_b"),
         (dotAb / (nrm(col("va")) * nrm(col("vb")))).as("cos_centroid"))
   }
 
+  /** IVF-style ANN: partition the corpus into `nCells` Voronoi cells
+    * around deterministically-chosen pivot vectors (lowest
+    * xxhash64(id) — reproducible, no RNG/kmeans state), assign each
+    * vector to its `probes` nearest pivots, then exact-rerank within
+    * cells. Candidate work is N·nCells dots for assignment plus
+    * intra-cell pairs — the standard IVF trade against brute force.
+    */
   def ivfNearestNeighbors(df: DataFrame, idCol: String, vecCol: String,
                           nCells: Int, k: Int, probes: Int = 1,
                           portablePivots: Boolean = false): DataFrame = {
@@ -537,20 +556,64 @@ object VectorOps {
     // twice — each leg re-ran the scan + pivot broadcast + assignment
     // window
     val assigned = Pin(ivfAssign(df, idCol, vecCol, nCells, probes, portablePivots))
-    val a = assigned.select(col("cell"), col("id").as("id_a"),
-      col("vec").as("vec_a"), col("nrm").as("nrm_a"))
-    val b = assigned.select(col("cell"), col("id").as("id_b"),
-      col("vec").as("vec_b"), col("nrm").as("nrm_b"))
-    val paired = a.join(b, Seq("cell"))
-      .where(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b"))).as("cos"))
+    val paired = keyedPairCos(assigned, "cell", _ =!= _)
     // multi-probe can surface a pair in several cells; single-probe
     // cannot, so skip the dedup shuffle there
     val scored = if (probes > 1) paired.distinct() else paired
-    val w = Window.partitionBy("id_a").orderBy(col("cos").desc, col("id_b"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-      .select("id_a", "rk", "id_b", "cos")
+    topKDesc(scored, "cos", k).select("id_a", "rk", "id_b", "cos")
+  }
+
+  /** The recall reports' sampled queries (`mdHash60(id) % sampleMod
+    * == 0`), their exact top-`k` truth and their IVF lists.
+    */
+  private def recallSides(df: DataFrame, idCol: String, vecCol: String,
+                          nCells: Int, k: Int, probes: Int, sampleMod: Int,
+                          rank: String): (DataFrame, DataFrame, DataFrame) = {
+    def sampled(c: Column): Column =
+      graft.functions.PortableHash.mdHash60(c.cast("string")) % sampleMod === 0
+    val base = kmBase(df, idCol, vecCol)
+    val queries = side(base.where(sampled(col("id"))), "a")
+    val truth = topKDesc(pairCos(side(base, "b")
+      .join(broadcast(queries), col("id_a") =!= col("id_b"))), "cos", k, rank)
+    val approx = ivfNearestNeighbors(df, idCol, vecCol, nCells, k, probes,
+        portablePivots = true)
+      .where(sampled(col("id_a")))
+    (queries, truth, approx)
+  }
+
+  /** Recall CURVE — [[annRecallReport]] swept over k in one pass:
+    * truth and index lists rank once to `kMax`, the join carries both
+    * ranks, and each cutoff reads the same matched set. The
+    * mean-recall-vs-k table is the operating curve that picks k for a
+    * latency budget (the companion to the nCells/probes knobs).
+    * Queries are assumed to have ≥ kMax true neighbors (corpus ≫
+    * kMax), so the denominator is queries × k.
+    */
+  def annRecallCurve(df: DataFrame, idCol: String, vecCol: String,
+                     nCells: Int = 16, kMax: Int = 5, probes: Int = 2,
+                     sampleMod: Int = 20,
+                     ks: Seq[Int] = Seq(1, 3, 5)): DataFrame = {
+    require(ks.nonEmpty && ks.forall(k => k >= 1 && k <= kMax),
+      "cutoffs must lie in [1, kMax]")
+    val (queries, truth, approx) =
+      recallSides(df, idCol, vecCol, nCells, kMax, probes, sampleMod, "rk_t")
+    val matched = truth.select("id_a", "id_b", "rk_t")
+      .join(approx.select(col("id_a"), col("id_b"), col("rk").as("rk_a")),
+        Seq("id_a", "id_b"))
+    val nq = queries.agg(count(lit(1)).as("n_queries"))
+    val ksDf = df.sparkSession.range(1)
+      .select(explode(array(ks.map(lit(_)): _*)).as("k"))
+    val hits = matched
+      .join(broadcast(ksDf),
+        col("rk_t") <= col("k") && col("rk_a") <= col("k"))
+      .groupBy("k").agg(count(lit(1)).as("n_hits"))
+    ksDf.join(hits, Seq("k"), "left")
+      .crossJoin(broadcast(nq))
+      .select(col("k"), col("n_queries"),
+        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
+        round(coalesce(col("n_hits"), lit(0L)).cast("double")
+          / (col("n_queries") * col("k")), 6).as("mean_recall"))
+      .orderBy("k")
   }
 
   /** ANN recall@k report — the index-tuning evaluation loop run
@@ -571,86 +634,15 @@ object VectorOps {
     * (alone in every probed cell) still report, at recall 0, via the
     * truth-side left join.
     */
-  /** Recall CURVE — [[annRecallReport]] swept over k in one pass:
-    * truth and index lists rank once to `kMax`, the join carries both
-    * ranks, and each cutoff reads the same matched set. The
-    * mean-recall-vs-k table is the operating curve that picks k for a
-    * latency budget (the companion to the nCells/probes knobs).
-    * Queries are assumed to have ≥ kMax true neighbors (corpus ≫
-    * kMax), so the denominator is queries × k.
-    */
-  def annRecallCurve(df: DataFrame, idCol: String, vecCol: String,
-                     nCells: Int = 16, kMax: Int = 5, probes: Int = 2,
-                     sampleMod: Int = 20,
-                     ks: Seq[Int] = Seq(1, 3, 5)): DataFrame = {
-    import graft.functions.PortableHash
-    require(ks.nonEmpty && ks.forall(k => k >= 1 && k <= kMax),
-      "cutoffs must lie in [1, kMax]")
-    def sampled(c: Column): Column =
-      PortableHash.mdHash60(c.cast("string")) % sampleMod === 0
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      norm(col(vecCol)).as("nrm"))
-    val queries = base.where(sampled(col("id")))
-      .select(col("id").as("id_a"), col("vec").as("vec_a"),
-        col("nrm").as("nrm_a"))
-    val scored = base
-      .select(col("id").as("id_b"), col("vec").as("vec_b"),
-        col("nrm").as("nrm_b"))
-      .join(broadcast(queries), col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")))
-          .as("cos"))
-    val w = Window.partitionBy("id_a").orderBy(col("cos").desc, col("id_b"))
-    val truth = scored.withColumn("rk_t", row_number().over(w))
-      .where(col("rk_t") <= kMax).select("id_a", "id_b", "rk_t")
-    val approx = ivfNearestNeighbors(df, idCol, vecCol, nCells, kMax,
-        probes, portablePivots = true)
-      .where(sampled(col("id_a")))
-      .select(col("id_a"), col("id_b"), col("rk").as("rk_a"))
-    val matched = truth.join(approx, Seq("id_a", "id_b"))
-    val nq = queries.agg(count(lit(1)).as("n_queries"))
-    val ksDf = df.sparkSession.range(1)
-      .select(explode(array(ks.map(lit(_)): _*)).as("k"))
-    val hits = matched
-      .join(broadcast(ksDf),
-        col("rk_t") <= col("k") && col("rk_a") <= col("k"))
-      .groupBy("k").agg(count(lit(1)).as("n_hits"))
-    ksDf.join(hits, Seq("k"), "left")
-      .crossJoin(broadcast(nq))
-      .select(col("k"), col("n_queries"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double")
-          / (col("n_queries") * col("k")), 6).as("mean_recall"))
-      .orderBy("k")
-  }
-
   def annRecallReport(df: DataFrame, idCol: String, vecCol: String,
                       nCells: Int = 16, k: Int = 3, probes: Int = 2,
                       sampleMod: Int = 20): DataFrame = {
-    import graft.functions.PortableHash
     require(sampleMod >= 1, "sampleMod >= 1")
-    def sampled(c: Column): Column =
-      PortableHash.mdHash60(c.cast("string")) % sampleMod === 0
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      norm(col(vecCol)).as("nrm"))
-    val queries = base.where(sampled(col("id")))
-      .select(col("id").as("id_a"), col("vec").as("vec_a"),
-        col("nrm").as("nrm_a"))
-    val scored = base
-      .select(col("id").as("id_b"), col("vec").as("vec_b"),
-        col("nrm").as("nrm_b"))
-      .join(broadcast(queries), col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")))
-          .as("cos"))
-    val w = Window.partitionBy("id_a").orderBy(col("cos").desc, col("id_b"))
-    val truth = scored.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k).select("id_a", "id_b")
-    val approx = ivfNearestNeighbors(df, idCol, vecCol, nCells, k, probes,
-        portablePivots = true)
-      .where(sampled(col("id_a")))
-      .select(col("id_a"), col("id_b")).withColumn("_hit", lit(1))
-    truth.join(approx, Seq("id_a", "id_b"), "left")
+    val (_, truth, approx) =
+      recallSides(df, idCol, vecCol, nCells, k, probes, sampleMod, "rk")
+    truth.select("id_a", "id_b")
+      .join(approx.select(col("id_a"), col("id_b")).withColumn("_hit", lit(1)),
+        Seq("id_a", "id_b"), "left")
       .groupBy("id_a").agg(count(col("_hit")).as("n_hits"))
       .select(col("id_a"), col("n_hits"),
         (col("n_hits").cast("double") / lit(k.toDouble)).as("recall"))
@@ -712,24 +704,13 @@ object VectorOps {
   def lshNearestNeighbors(df: DataFrame, idCol: String, vecCol: String,
                           numPlanes: Int, k: Int,
                           portableDim: Option[Int] = None): DataFrame = {
-    val bucketFn = portableDim
-      .map(d => lshBucketPortable(col(vecCol), numPlanes, d))
-      .getOrElse(lshBucket(col(vecCol), numPlanes))
-    val bucketed = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      bucketFn.as("bucket"),
-      norm(col(vecCol)).as("nrm"))
-    val a = bucketed.select(col("bucket"), col("id").as("id_a"),
-      col("vec").as("vec_a"), col("nrm").as("nrm_a"))
-    val b = bucketed.select(col("bucket"), col("id").as("id_b"),
-      col("vec").as("vec_b"), col("nrm").as("nrm_b"))
-    val scored = a.join(b, Seq("bucket"))
-      .where(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b"))).as("cos"))
-    val w = Window.partitionBy("id_a").orderBy(col("cos").desc, col("id_b"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    val bucketed = kmBase(df, idCol, vecCol).withColumn("bucket", portableDim
+      .map(d => lshBucketPortable(col("vec"), numPlanes, d))
+      .getOrElse(lshBucket(col("vec"), numPlanes)))
+    topKDesc(keyedPairCos(bucketed, "bucket", _ =!= _), "cos", k)
       .select("id_a", "rk", "id_b", "cos")
   }
+
   /** Product-quantization codes: split each vector into `m` subvectors
     * and assign every subvector to its nearest (L2) codeword — the
     * IVF-PQ compression step that shrinks a 100 TB embedding store to
@@ -751,22 +732,9 @@ object VectorOps {
               portablePivots: Boolean = false): DataFrame = {
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val subDim = dim / m
-    val pivotOrder =
-      if (portablePivots) md5(col("pid").cast("string")) else xxhash64(col("pid"))
-    val pivots = df.select(col(idCol).as("pid"), col(vecCol).as("pvec"))
-      .orderBy(pivotOrder, col("pid")).limit(nCentroids)
-    val subs = df
-      .select(col(idCol).as("id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col(vecCol).as("vec"))
-      .select(col("id"), col("sub"),
-        slice(col("vec"), col("sub") * subDim + 1, lit(subDim)).as("svec"))
-    val d2 = aggregate(
-      zip_with(col("svec"),
-        slice(col("pvec"), col("sub") * subDim + 1, lit(subDim)),
-        (a, b) => (a.cast("double") - b.cast("double"))
-          * (a.cast("double") - b.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
-    subs.join(broadcast(pivots))
+    val pivots = pickPivots(df, idCol, vecCol, nCentroids, portablePivots)
+    val d2 = sqL2(col("svec"), slice(col("pvec"), col("sub") * subDim + 1, lit(subDim)))
+    pqSubs(df, idCol, vecCol, m, subDim).join(broadcast(pivots))
       .select(col("id"), col("sub"), col("pid"), d2.as("d2"))
       .groupBy("id", "sub")
       .agg(min(struct(col("d2"), col("pid"))).as("best"))
@@ -828,25 +796,11 @@ object VectorOps {
     kmUpdate(base, cents)
   }
 
-  private def kmBase(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      norm(col(vecCol)).as("nrm"))
-
-  /** Init centroids: pivot vectors, exact float->double widening;
-    * sorted by cell so the [[kmBestCell]] fold tie-breaks low.
-    */
+  /** Init centroids: the [[pivotVectors]]. */
   private def kmInitPivots(df: DataFrame, idCol: String, vecCol: String,
                            k: Int, portablePivots: Boolean): Seq[(Long, Array[Double])] = {
     require(k > 0, "k must be positive")
-    val pivotOrder =
-      if (portablePivots) md5(col("pid").cast("string")) else xxhash64(col("pid"))
-    val cents = df
-      .select(col(idCol).as("pid"), col(vecCol).as("pvec"))
-      .orderBy(pivotOrder, col("pid")).limit(k)
-      .select(col("pid"), transform(col("pvec"), x => x.cast("double")).as("cvec"))
-      .collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val cents = pivotVectors(df, idCol, vecCol, k, portablePivots)
     val dim = cents.headOption.map(_._2.length).getOrElse(0)
     require(k * dim <= 16384,
       s"k*dim = ${k * dim} exceeds the 16384 centroid-literal bound; " +
@@ -873,13 +827,10 @@ object VectorOps {
       struct(lit(cell).as("cell"),
         array(cv.map(lit(_)): _*).as("cvec"), lit(cnrm).as("cnrm"))
     }: _*)
-    def dotd(v: Column, cv: Column): Column =
-      aggregate(zip_with(v, cv, (a, b) => a.cast("double") * b),
-        lit(0.0), (s, x) => s + x)
     aggregate(centArr,
       struct(lit(Double.NegativeInfinity).as("sim"), lit(Long.MaxValue).as("cell")),
       (acc, c) => {
-        val sim = dotd(col("vec"), c.getField("cvec")) /
+        val sim = dotFold(col("vec"), c.getField("cvec")) /
           (col("nrm") * c.getField("cnrm"))
         when(sim > acc.getField("sim"),
           struct(sim.as("sim"), c.getField("cell").as("cell"))).otherwise(acc)
@@ -931,16 +882,7 @@ object VectorOps {
     for (_ <- 1 to iters) cents = kmCollect(kmUpdate(base, cents))
     val assigned = Pin(base.select(col("id"), col("vec"), col("nrm"),
       kmBestCell(cents).as("cell")))
-    val a = assigned.select(col("cell"), col("id").as("id_a"),
-      col("vec").as("vec_a"), col("nrm").as("nrm_a"))
-    val b = assigned.select(col("cell"), col("id").as("id_b"),
-      col("vec").as("vec_b"), col("nrm").as("nrm_b"))
-    val scored = a.join(b, Seq("cell"))
-      .where(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b"))).as("cos"))
-    val w = Window.partitionBy("id_a").orderBy(col("cos").desc, col("id_b"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    topKDesc(keyedPairCos(assigned, "cell", _ =!= _), "cos", k)
       .select("id_a", "rk", "id_b", "cos")
   }
 
@@ -1077,8 +1019,6 @@ object VectorOps {
                             k: Int, iters: Int,
                             portablePivots: Boolean = false): DataFrame = {
     require(iters > 0, "iters must be positive")
-    val spark = df.sparkSession
-    import spark.implicits._
     // IVF cells over raw vectors (probes=1); pinned (r19) — the
     // candidate generation self-joins this frame (two legs)
     val cells = Pin(ivfAssign(df, idCol, vecCol, nCells, probes = 1, portablePivots)
@@ -1091,16 +1031,9 @@ object VectorOps {
     val codes = subs.select(col("id").as("id_b"), col("sub"),
       pqBest(cents).getField("cell").as("code"))
     // per-query LUT: d2(query subvector, codeword) for every codeword
-    val cbRows = cents.zipWithIndex.flatMap { case (subCents, s) =>
-      subCents.map { case (cell, cv) => (s, cell, cv.toSeq) }
-    }
-    val cb = cbRows.toDF("sub", "code", "cvec")
-    val lutD2 = aggregate(
-      zip_with(col("svec"), col("cvec"),
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (s, x) => s + x)
-    val luts = subs.join(broadcast(cb), Seq("sub"))
-      .select(col("id").as("id_a"), col("sub"), col("code"), lutD2.as("lut"))
+    val luts = subs.join(broadcast(codebook(df.sparkSession, cents, "code")), Seq("sub"))
+      .select(col("id").as("id_a"), col("sub"), col("code"),
+        sqL2(col("svec"), col("cvec")).as("lut"))
     // intra-cell candidates score as m LUT lookups, never vectors
     val a = cells.select(col("cell"), col("id").as("id_a"))
     val b = cells.select(col("cell"), col("id").as("id_b"))
@@ -1110,8 +1043,7 @@ object VectorOps {
       .join(luts, Seq("id_a", "sub", "code"))
       .groupBy("id_a", "id_b")
       .agg(round(sum(col("lut")), 6).as("approx_d2"))
-    val w = Window.partitionBy("id_a").orderBy(col("approx_d2"), col("id_b"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    topK(scored, "id_a", Seq(col("approx_d2"), col("id_b")), k, "rk")
       .select("id_a", "rk", "id_b", "approx_d2")
   }
 
@@ -1139,17 +1071,43 @@ object VectorOps {
       .select("id_a", "id_b", "approx_d2")
     val va = df.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
     val vb = df.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
-    val exactD2 = aggregate(
-      zip_with(col("__va"), col("__vb"),
-        (x, y) => (x.cast("double") - y.cast("double"))
-          * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, d) => acc + d)
     val exact = sl.join(va, Seq("id_a")).join(vb, Seq("id_b"))
       .select(col("id_a"), col("id_b"), col("approx_d2"),
-        round(exactD2, 6).as("exact_d2"))
-    val w = Window.partitionBy("id_a").orderBy(col("exact_d2"), col("id_b"))
-    exact.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+        round(sqL2(col("__va"), col("__vb")), 6).as("exact_d2"))
+    topK(exact, "id_a", Seq(col("exact_d2"), col("id_b")), k, "rk")
       .select("id_a", "rk", "id_b", "exact_d2", "approx_d2")
+  }
+
+  private def snap6(d: Double): Double =
+    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Driver-side power-iteration core shared by [[principalComponent]]
+    * and [[removeTopComponent]]: returns the 6-dp-snapped unit
+    * loadings plus the final pre-normalization norm (λ estimate).
+    */
+  private[ops] def principalDirection(df: DataFrame, idCol: String,
+                                      vecCol: String, dim: Int, iters: Int)
+      : (Array[Double], Double) = {
+    require(iters > 0 && dim > 0, "positive dim/iters")
+    val spark = df.sparkSession
+    import spark.implicits._
+    val x = df.select(col(idCol).as("id"),
+      transform(col(vecCol), c => c.cast("double")).as("x"))
+    var v: Array[Double] = Array.fill(dim)(1.0 / math.sqrt(dim.toDouble))
+    var lambda = 0.0
+    for (_ <- 1 to iters) {
+      val vCol = array(v.toIndexedSeq.map(lit): _*)
+      val y = dotFold(col("x"), vCol)
+      val sums = x.withColumn("y", y)
+        .select(col("y"), posexplode(col("x")).as(Seq("j", "xj")))
+        .groupBy("j").agg(round(sum(col("xj") * col("y")), 6).as("s"))
+        .orderBy("j").as[(Int, Double)].collect()
+      val s = sums.map(_._2)
+      val nrm = math.sqrt(s.map(d => d * d).sum) // fixed-order, 64 terms
+      lambda = nrm
+      v = s.map(d => snap6(d / nrm))
+    }
+    (v, lambda)
   }
 
   /** Top principal direction of the embedding cloud (un-centered,
@@ -1170,39 +1128,6 @@ object VectorOps {
     * estimate (final pre-normalization norm) and the share of total
     * squared mass it explains.
     */
-  private def snap6(d: Double): Double =
-    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** Driver-side power-iteration core shared by [[principalComponent]]
-    * and [[removeTopComponent]]: returns the 6-dp-snapped unit
-    * loadings plus the final pre-normalization norm (λ estimate).
-    */
-  private[ops] def principalDirection(df: DataFrame, idCol: String,
-                                      vecCol: String, dim: Int, iters: Int)
-      : (Array[Double], Double) = {
-    require(iters > 0 && dim > 0, "positive dim/iters")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val x = df.select(col(idCol).as("id"),
-      transform(col(vecCol), c => c.cast("double")).as("x"))
-    var v: Array[Double] = Array.fill(dim)(1.0 / math.sqrt(dim.toDouble))
-    var lambda = 0.0
-    for (_ <- 1 to iters) {
-      val vCol = array(v.toIndexedSeq.map(lit): _*)
-      val y = aggregate(zip_with(col("x"), vCol, (a, b) => a * b),
-        lit(0.0), (acc, t) => acc + t)
-      val sums = x.withColumn("y", y)
-        .select(col("y"), posexplode(col("x")).as(Seq("j", "xj")))
-        .groupBy("j").agg(round(sum(col("xj") * col("y")), 6).as("s"))
-        .orderBy("j").as[(Int, Double)].collect()
-      val s = sums.map(_._2)
-      val nrm = math.sqrt(s.map(d => d * d).sum) // fixed-order, 64 terms
-      lambda = nrm
-      v = s.map(d => snap6(d / nrm))
-    }
-    (v, lambda)
-  }
-
   def principalComponent(df: DataFrame, idCol: String, vecCol: String,
                          dim: Int, iters: Int): DataFrame = {
     val spark = df.sparkSession
@@ -1237,8 +1162,7 @@ object VectorOps {
     val (v, _) = principalDirection(df, idCol, vecCol, dim, iters)
     val vCol = array(v.toIndexedSeq.map(lit): _*)
     val x = transform(col(vecCol), c => c.cast("double"))
-    val proj = aggregate(zip_with(x, vCol, (a, b) => a * b),
-      lit(0.0), (acc, t) => acc + t)
+    val proj = dotFold(x, vCol)
     df.select(col(idCol), proj.as("__proj"), x.as("__x"))
       .select(col(idCol), col("__proj"),
         sqrt(aggregate(zip_with(col("__x"), vCol,
@@ -1259,15 +1183,7 @@ object VectorOps {
       s"nCentroids*dim = ${nCentroids * dim} exceeds the 16384 " +
         "codebook-literal bound; train per-partition subsets instead")
     val subDim = dim / m
-    val pivotOrder =
-      if (portablePivots) md5(col("pid").cast("string")) else xxhash64(col("pid"))
-    val pivots: Seq[(Long, Array[Double])] = df
-      .select(col(idCol).as("pid"), col(vecCol).as("pvec"))
-      .orderBy(pivotOrder, col("pid")).limit(nCentroids)
-      .select(col("pid"), transform(col("pvec"), x => x.cast("double")).as("pv"))
-      .collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val pivots = pivotVectors(df, idCol, vecCol, nCentroids, portablePivots)
     (0 until m).map { s =>
       pivots.map { case (pid, pv) => (pid, pv.slice(s * subDim, (s + 1) * subDim)) }
     }
@@ -1295,15 +1211,11 @@ object VectorOps {
       }: _*)
     }: _*)
     val mine = element_at(arrs, col("sub") + 1)
-    def d2Of(cv: Column): Column = aggregate(
-      zip_with(col("svec"), cv,
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (s, x) => s + x)
     val stype = "struct<d2:double,cell:bigint>"
     aggregate(mine,
       struct(lit(Double.PositiveInfinity), lit(Long.MaxValue)).cast(stype),
       (acc, c) => {
-        val d = d2Of(c.getField("cvec"))
+        val d = sqL2(col("svec"), c.getField("cvec"))
         when(d < acc.getField("d2"),
           struct(d, c.getField("cell")).cast(stype)).otherwise(acc)
       })
@@ -1325,19 +1237,11 @@ object VectorOps {
     * over ascending cells (oracle-EXACT preserved, spec-pinned).
     */
   private def pqUpdate(subs: DataFrame,
-                       cs: Seq[Seq[(Long, Array[Double])]]): DataFrame = {
-    val spark = subs.sparkSession
-    import spark.implicits._
-    val cb = cs.zipWithIndex.flatMap { case (subCents, s) =>
-      subCents.map { case (cell, cv) => (s, cell, cv.toSeq) }
-    }.toDF("sub", "cell", "cvec")
-    val d2 = aggregate(
-      zip_with(col("svec"), col("cvec"),
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, x) => acc + x)
-    subs.join(broadcast(cb), Seq("sub"))
+                       cs: Seq[Seq[(Long, Array[Double])]]): DataFrame =
+    subs.join(broadcast(codebook(subs.sparkSession, cs, "cell")), Seq("sub"))
       .groupBy(col("id"), col("sub"))
-      .agg(min(struct(d2.as("d2"), col("cell").as("cell"))).as("b"),
+      .agg(min(struct(sqL2(col("svec"), col("cvec")).as("d2"),
+        col("cell").as("cell"))).as("b"),
         max(col("svec")).as("svec")) // svec constant per (id, sub)
       .select(col("sub"), col("b.cell").as("cell"),
         posexplode(col("svec")))
@@ -1345,7 +1249,22 @@ object VectorOps {
         col("col").cast("double").as("x"))
       .groupBy("sub", "cell", "i")
       .agg(round(avg(col("x")), 6).as("c"), count(lit(1)).as("n"))
+
+  /** The m subspace codebooks as a frame `(sub, <cell>, cvec)`. */
+  private def codebook(spark: SparkSession, cs: Seq[Seq[(Long, Array[Double])]],
+                       cell: String): DataFrame = {
+    import spark.implicits._
+    cs.zipWithIndex.flatMap { case (subCents, s) =>
+      subCents.map { case (c, cv) => (s, c, cv.toSeq) }
+    }.toDF("sub", cell, "cvec")
   }
+
+  /** Squared L2 distance as a fixed-order left-to-right double fold. */
+  private def sqL2(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double"))
+        * (x.cast("double") - y.cast("double"))),
+      lit(0.0), (acc, d) => acc + d)
 
   private def pqCollect(update: DataFrame,
                         m: Int): Seq[Seq[(Long, Array[Double])]] = {
@@ -1360,17 +1279,14 @@ object VectorOps {
     }
   }
 
-  /** Symmetric int8 quantization report per vector: the compression
-    * step a 100 TB embedding store runs before serving (4x smaller,
-    * cache-resident ANN). For each vector: `scale = max|v| / 127`,
-    * `q_i = floor(v_i/scale + 0.5)` (round-half-up, reproducible on
-    * any IEEE engine — unlike banker's-rounding `round`), plus the
-    * quantized checksum and the max absolute dequantization error.
-    * Pure narrow scalar pipeline over the embedding column — zero
-    * shuffles; every arithmetic step (float->double widening,
-    * division, floor, multiply, compare) is deterministic IEEE, so
-    * the report is hash-exact cross-engine.
-    */
+  /** Per-vector int8 scale `max|v| / 127` of a double array column. */
+  private def int8Scale(v: Column): Column = array_max(transform(v, x => abs(x))) / 127.0
+
+  /** Int8 codes `floor(v_i/scale + 0.5)`; scale 0 gives zeros, not NaN. */
+  private def int8Codes(v: Column, scale: Column): Column =
+    when(scale === 0.0, transform(v, _ => lit(0L)))
+      .otherwise(transform(v, x => floor(x / scale + 0.5)))
+
   /** SQ8 ANN with asymmetric distance computation — the scalar-
     * quantizer sibling of the PQ path (s15): the CORPUS is stored as
     * int8 codes + one scale per vector (s07's quantization, 4× the
@@ -1394,33 +1310,33 @@ object VectorOps {
     import graft.functions.PortableHash
     require(sampleMod >= 1, "sampleMod >= 1")
     val v = transform(col(vecCol), x => x.cast("double"))
-    val base = df.select(col(idCol).as("id"), v.as("v"),
-      (array_max(transform(v, x => abs(x))) / 127.0).as("scale"))
+    val base = df.select(col(idCol).as("id"), v.as("v"), int8Scale(v).as("scale"))
     val codes = base.select(col("id").as("id_b"), col("scale"),
-      when(col("scale") === 0.0, transform(col("v"), _ => lit(0L)))
-        .otherwise(transform(col("v"), x => floor(x / col("scale") + 0.5)))
-        .as("q"))
+      int8Codes(col("v"), col("scale")).as("q"))
     val queries = base
       .where(PortableHash.mdHash60(col("id").cast("string")) % sampleMod === 0)
       .select(col("id").as("id_a"), col("v").as("vec_a"))
     val scored = codes.join(broadcast(queries), col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b"),
-        (col("scale") * aggregate(
-          zip_with(col("q"), col("vec_a"), (qi, ai) => qi.cast("double") * ai),
-          lit(0.0), (acc, x) => acc + x)).as("adc"))
-    val w = Window.partitionBy("id_a").orderBy(col("adc").desc, col("id_b"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-      .select("id_a", "rk", "id_b", "adc")
+        (col("scale") * dotFold(col("q"), col("vec_a"))).as("adc"))
+    topKDesc(scored, "adc", k).select("id_a", "rk", "id_b", "adc")
   }
 
+  /** Symmetric int8 quantization report per vector: the compression
+    * step a 100 TB embedding store runs before serving (4x smaller,
+    * cache-resident ANN). For each vector: `scale = max|v| / 127`,
+    * `q_i = floor(v_i/scale + 0.5)` (round-half-up, reproducible on
+    * any IEEE engine — unlike banker's-rounding `round`), plus the
+    * quantized checksum and the max absolute dequantization error.
+    * Pure narrow scalar pipeline over the embedding column — zero
+    * shuffles; every arithmetic step (float->double widening,
+    * division, floor, multiply, compare) is deterministic IEEE, so
+    * the report is hash-exact cross-engine.
+    */
   def quantizeInt8Report(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val v = transform(col(vecCol), x => x.cast("double"))
-    val withScale = df.select(col(idCol), v.as("v"),
-      (array_max(transform(v, x => abs(x))) / 127.0).as("scale"))
-    // all-zero vector => scale 0: quantize to zeros rather than NaN
-    val q = when(col("scale") === 0.0,
-      transform(col("v"), _ => lit(0L)))
-      .otherwise(transform(col("v"), x => floor(x / col("scale") + 0.5)))
+    val withScale = df.select(col(idCol), v.as("v"), int8Scale(v).as("scale"))
+    val q = int8Codes(col("v"), col("scale"))
     withScale.select(col(idCol), col("scale"),
       aggregate(q, lit(0L), (acc, x) => acc + x).as("sum_q"),
       array_max(zip_with(q, col("v"), (qi, vi) => abs(qi * col("scale") - vi)))

@@ -543,28 +543,47 @@ class OpsSpec extends SparkTestBase {
     assert(trueDups.subsetOf(xx), (trueDups -- xx).toString)
   }
 
-  test("banded-LSH steps are written once in src/main") {
-    // each step of the LSH candidate path (band key, signature groups,
-    // Bloom sketch) has one home in TextOps; a second copy would let a
-    // fix to one silently miss the other
+  /** Each step whose literal is not on exactly one line of the
+    * `src/main/scala` files that `inFile` accepts, with every site.
+    */
+  private def notWrittenOnce(steps: Seq[String],
+                             inFile: String => Boolean = _ => true): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val steps = Seq("xxhash64(bnd,", """collect_list(col("id")).as("ids")""",
-      ".stat.bloomFilter(")
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = java.nio.file.Files.walk(root)
     val lines = try files.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
+        .filter(f => f.toString.endsWith(".scala") && inFile(f.toString))
         .flatMap { f =>
           java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.map {
             case (line, i) => (s"$f:${i + 1}", line)
           }
         }.toList
       finally files.close()
-    val bad = steps.flatMap { step =>
+    steps.flatMap { step =>
       val sites = lines.collect { case (at, line) if line.contains(step) => s"$at: ${line.trim}" }
       if (sites.size == 1) Nil
       else Seq(s"`$step` at ${sites.size} sites:\n  ${sites.mkString("\n  ")}")
     }
+  }
+
+  test("banded-LSH steps are written once in src/main") {
+    // each step of the LSH candidate path (band key, signature groups,
+    // Bloom sketch) has one home in TextOps; a second copy would let a
+    // fix to one silently miss the other
+    val bad = notWrittenOnce(Seq("xxhash64(bnd,",
+      """collect_list(col("id")).as("ids")""", ".stat.bloomFilter("))
+    if (bad.nonEmpty) fail(bad.mkString("\n"))
+  }
+
+  test("nearest-neighbour steps are written once in src/main") {
+    // each step of the kNN/ANN paths (the top-k window, the pair
+    // cosine, the kernels' small-side probe and bounded top-k, the
+    // pivot picker) has one home in VectorOps; a second copy would let
+    // a fix to one silently miss the other
+    val bad = notWrittenOnce(Seq("row_number().over("), _.endsWith("VectorOps.scala")) ++
+      notWrittenOnce(Seq("""(col("nrm_a") * col("nrm_b"))""",
+        ".select(col(idCol)).limit(", "Array.fill(k)(Double.NegativeInfinity)",
+        """md5(col("pid").cast("string"))"""))
     if (bad.nonEmpty) fail(bad.mkString("\n"))
   }
 
@@ -993,11 +1012,73 @@ class OpsSpec extends SparkTestBase {
       VectorOps.knnBruteForceKernel(emb, emb, "vec_id", "embedding", 3,
         maxRightRows = 3)
     }
-    assert(err.getMessage.contains("knnLsh") && err.getMessage.contains("knnIvf"),
+    assert(err.getMessage.contains("lshNearestNeighbors") &&
+      err.getMessage.contains("ivfNearestNeighbors"),
       s"guard message must point to the scale paths: ${err.getMessage}")
     // at the default bound the same call goes through untouched
     assert(VectorOps.knnBruteForceKernel(emb, emb, "vec_id", "embedding", 3)
       .count() > 0)
+  }
+
+  test("kNN kernels: a left id absent from the right side still gets k neighbours") {
+    val left = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
+    val right = Seq((2L, Array(1f, 1f)), (3L, Array(0f, 1f))).toDF("vec_id", "embedding")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Int, Long, Double)].collect().sortBy(_._2).toSeq
+    val decl = rows(VectorOps.knnBruteForce(left, right, "vec_id", "embedding", 2))
+    assert(decl.map(r => (r._2, r._3)) == Seq((1, 2L), (2, 3L)), decl.toString)
+    assert(rows(VectorOps.knnBruteForceKernel(left, right, "vec_id", "embedding", 2)) == decl)
+    // dots 1.0 and 0.0 rank the same two neighbours
+    assert(rows(VectorOps.mipsBruteForceKernel(left, right, "vec_id", "embedding", 2))
+      == Seq((1L, 1, 2L, 1.0), (1L, 2, 3L, 0.0)))
+  }
+
+  test("brute-force kernels reject mismatched dimensions, naming both ids") {
+    val vecs = Seq((1L, Array(1f, 0f)), (2L, Array(1f, 0f, 1f)))
+      .toDF("vec_id", "embedding")
+    def messages(t: Throwable): String =
+      if (t == null) "" else s"${t.getMessage}\n${messages(t.getCause)}"
+    val runs = Seq[(String, () => Any)](
+      "knnBruteForceKernel" -> (() =>
+        VectorOps.knnBruteForceKernel(vecs, vecs, "vec_id", "embedding", 1).collect()),
+      "mipsBruteForceKernel" -> (() =>
+        VectorOps.mipsBruteForceKernel(vecs, vecs, "vec_id", "embedding", 1).collect()),
+      "tripletMine" -> (() => VectorOps.tripletMine(vecs.withColumn("label", lit(0)),
+        "vec_id", "embedding", "label", margin = 0.1).collect()))
+    for ((op, run) <- runs) {
+      val err = messages(intercept[Exception](run()))
+      assert(err.contains(s"$op: dimension mismatch") && err.contains("id 1 has") &&
+        err.contains("id 2 has"), s"$op must name both ids: $err")
+    }
+  }
+
+  test("MIPS kernel equals a declarative top-k over VectorOps.dot") {
+    val emb = Tables.embeddings(spark, sf)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("id_a")
+      .orderBy($"dot".desc, $"id_b")
+    val decl = emb.select($"vec_id".as("id_a"), $"embedding".as("vec_a"))
+      .join(emb.select($"vec_id".as("id_b"), $"embedding".as("vec_b")),
+        $"id_a" =!= $"id_b")
+      .select($"id_a", $"id_b", VectorOps.dot($"vec_a", $"vec_b").as("dot"))
+      .withColumn("rk", row_number().over(w)).where($"rk" <= 3)
+      .select($"id_a", $"rk", $"id_b", $"dot")
+      .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+    val kern = VectorOps.mipsBruteForceKernel(emb, emb, "vec_id", "embedding", 3)
+      .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(decl.nonEmpty && decl == kern) // incl. exact double equality on dot
+  }
+
+  test("ANN recall report and recall curve agree at the shared cutoff") {
+    val emb = Tables.embeddings(spark, sf)
+    val report = VectorOps.annRecallReport(emb, "vec_id", "embedding",
+      nCells = 8, k = 3, probes = 2, sampleMod = 10)
+      .as[(Long, Long, Double)].collect()
+    val atThree = VectorOps.annRecallCurve(emb, "vec_id", "embedding",
+      nCells = 8, kMax = 5, probes = 2, sampleMod = 10)
+      .where($"k" === 3).select($"n_queries", $"n_hits").as[(Long, Long)].head()
+    assert(report.nonEmpty)
+    assert(atThree == ((report.length.toLong, report.map(_._2).sum)),
+      s"curve $atThree vs report ${report.toSeq}")
   }
 
   test("ivf ANN: deterministic, subset of valid scores, recall vs brute force") {
@@ -2248,6 +2329,73 @@ class OpsSpec extends SparkTestBase {
     val cos = VectorOps.knnBruteForceKernel(vecs, vecs, "vec_id", "embedding", 1)
       .where($"id_a" === 1L).select($"id_b").as[Long].head()
     assert(mips == 3L && cos == 2L, s"mips=$mips cos=$cos")
+  }
+
+  test("mmrRerank: diversity-heavy lambda skips the near-duplicate of the first pick") {
+    // q points at a; b is a's near-duplicate; c is distinct but less
+    // relevant. Pure relevance would rank (a, b, c); MMR at λ=0.3
+    // must pick c before b.
+    val e = Seq(
+      (0L, Array(1.0f, 0.0f)),          // the query vector
+      (1L, Array(1.0f, 0.01f)),         // a: most relevant
+      (2L, Array(1.0f, 0.011f)),        // b: a's near-dup
+      (3L, Array(0.7f, 0.7f))           // c: distinct, less relevant
+    ).toDF("vec_id", "embedding")
+    val out = VectorOps.mmrRerank(e.where($"vec_id" === 0), e,
+        "vec_id", "embedding", kCand = 3, kSelect = 3, lambda = 0.3)
+      .orderBy("mmr_rank")
+      .select("mmr_rank", "vec_id").as[(Int, Long)].collect()
+    assert(out.toSeq == Seq((1, 1L), (2, 3L), (3, 2L)), out.mkString(","))
+  }
+
+  test("tripletMine: hardest positive/negative with margin flag; singleton labels drop") {
+    val e = Seq(
+      (1L, Array(1.0f, 0.0f), 0),
+      (2L, Array(0.9f, 0.1f), 0),   // near 1, same label
+      (3L, Array(0.0f, 1.0f), 0),   // far from 1, same label → its hardest positive
+      (4L, Array(1.0f, 0.05f), 1),  // very close to 1, other label → hard negative
+      (5L, Array(0.5f, 0.5f), 2)    // singleton label → dropped as anchor
+    ).toDF("vec_id", "embedding", "label")
+    val out = VectorOps.tripletMine(e, "vec_id", "embedding", "label",
+        margin = 0.05)
+      .orderBy("id_a")
+      .select("id_a", "id_pos", "id_neg", "violation")
+      .as[(Long, Long, Long, Boolean)].collect()
+    val byId = out.map(r => r._1 -> r).toMap
+    // anchor 1: hardest positive is the orthogonal 3, hardest negative
+    // the nearly-parallel 4 — cos(neg) ≈ 1 ≫ cos(pos) ≈ 0 → violation
+    assert(byId(1L) == ((1L, 3L, 4L, true)), byId(1L).toString)
+    // BOTH singleton-label vectors (4 and 5) drop as anchors — no
+    // positive exists for them; only the three label-0 anchors remain
+    assert(!byId.contains(4L) && !byId.contains(5L))
+    assert(out.length == 3, out.mkString(","))
+  }
+
+  test("s30 calibration: per-dim quantization error bounded by half a step") {
+    val rows = SparkEntry.queries("s30_sq8_calibration")(spark, sf)
+      .select("lo", "hi", "mse", "max_abs_err")
+      .as[(Double, Double, Double, Double)].collect()
+    assert(rows.length == 64)
+    rows.foreach { case (lo, hi, mse, mx) =>
+      val halfStep = (hi - lo) / 255.0 / 2.0
+      // in-range values err at most half a step; clipped outliers can
+      // exceed it only via the p01/p99 clip itself
+      assert(mse >= 0 && mx >= 0)
+      assert(mse <= math.max(halfStep * halfStep, mx * mx) + 1e-12)
+    }
+  }
+
+  test("s34 recall curve: recall well-formed at every cutoff, hits monotone in k") {
+    val rows = SparkEntry.queries("s34_recall_curve")(spark, sf)
+      .as[(Int, Long, Long, Double)].collect()
+    assert(rows.map(_._1).toSeq == Seq(1, 3, 5))
+    rows.foreach { case (k, nq, hits, rec) =>
+      assert(hits >= 0 && hits <= nq * k)
+      // rec is snapped to 6 dp in the query output
+      assert(math.abs(rec - hits.toDouble / (nq * k)) < 5e-7)
+    }
+    // matched pairs can only accumulate as the cutoff widens
+    assert(rows(0)._3 <= rows(1)._3 && rows(1)._3 <= rows(2)._3)
   }
 
   test("readability: hand-computed Flesch on a fixed sentence") {

@@ -239,4 +239,23 @@ class PlanSpec extends SparkTestBase {
       && scanLine.contains("LessThan(l_shipdate"), p.take(4000))
     assert(p.contains("BroadcastHashJoin"), p.take(2000))
   }
+
+  test("ExplainDump: a query dumps the same after an unrelated broadcast and lambda") {
+    import graft.tools.ExplainDump
+    // d19's plan carries a Bloom-sketch broadcast and HOF lambdas, s01's
+    // the kernel's JVM closure: all session- or JVM-global counters
+    for (name <- Seq("d19_cdc_dedup_incremental", "s01_knn_cosine")) {
+      val q = SparkEntry.select(Some(name)).head
+      val first = ExplainDump.dump(spark, q, sf)
+      spark.sparkContext.broadcast(Array(1, 2, 3))
+      spark.range(3).select(transform(array(col("id")), x => x + 1)).collect()
+      val second = ExplainDump.dump(spark, q, sf)
+      assert(first == second, s"$name:\n$first\n---\n$second")
+    }
+    val raw = SparkEntry.queries("d19_cdc_dedup_incremental")(spark, sf)
+      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert("""Broadcast\(\d+\)""".r.findFirstIn(raw).nonEmpty &&
+      """\bx_\d+""".r.findFirstIn(raw).nonEmpty,
+      s"d19 no longer exercises the broadcast and lambda counters:\n$raw")
+  }
 }

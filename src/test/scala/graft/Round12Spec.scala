@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{SampleOps, UrlOps, VectorOps}
+import graft.ops.{SampleOps, UrlOps}
 
 /** Crafted-fixture semantics for the round-12 operators — properties
-  * the oracles replay but don't isolate: the water-filling cutoff,
-  * MMR's redundancy skip, triplet hard-pick tie-breaks, and the
-  * politeness rate bound.
+  * the oracles replay but don't isolate: the water-filling cutoff and
+  * the politeness rate bound. The vector cases (MMR, triplet mining,
+  * s30, s34) live in OpsSpec beside the other vector tests.
   */
 class Round12Spec extends SparkTestBase {
 
@@ -35,46 +35,6 @@ class Round12Spec extends SparkTestBase {
       .select("allocation", "capped", "level")
       .as[(Double, Boolean, Option[Double])].collect()
     assert(out.toSeq == Seq((10.0, false, None), (20.0, false, None)))
-  }
-
-  test("mmrRerank: diversity-heavy lambda skips the near-duplicate of the first pick") {
-    // q points at a; b is a's near-duplicate; c is distinct but less
-    // relevant. Pure relevance would rank (a, b, c); MMR at λ=0.3
-    // must pick c before b.
-    val e = Seq(
-      (0L, Array(1.0f, 0.0f)),          // the query vector
-      (1L, Array(1.0f, 0.01f)),         // a: most relevant
-      (2L, Array(1.0f, 0.011f)),        // b: a's near-dup
-      (3L, Array(0.7f, 0.7f))           // c: distinct, less relevant
-    ).toDF("vec_id", "embedding")
-    val out = VectorOps.mmrRerank(e.where($"vec_id" === 0), e,
-        "vec_id", "embedding", kCand = 3, kSelect = 3, lambda = 0.3)
-      .orderBy("mmr_rank")
-      .select("mmr_rank", "vec_id").as[(Int, Long)].collect()
-    assert(out.toSeq == Seq((1, 1L), (2, 3L), (3, 2L)), out.mkString(","))
-  }
-
-  test("tripletMine: hardest positive/negative with margin flag; singleton labels drop") {
-    val e = Seq(
-      (1L, Array(1.0f, 0.0f), 0),
-      (2L, Array(0.9f, 0.1f), 0),   // near 1, same label
-      (3L, Array(0.0f, 1.0f), 0),   // far from 1, same label → its hardest positive
-      (4L, Array(1.0f, 0.05f), 1),  // very close to 1, other label → hard negative
-      (5L, Array(0.5f, 0.5f), 2)    // singleton label → dropped as anchor
-    ).toDF("vec_id", "embedding", "label")
-    val out = VectorOps.tripletMine(e, "vec_id", "embedding", "label",
-        margin = 0.05)
-      .orderBy("id_a")
-      .select("id_a", "id_pos", "id_neg", "violation")
-      .as[(Long, Long, Long, Boolean)].collect()
-    val byId = out.map(r => r._1 -> r).toMap
-    // anchor 1: hardest positive is the orthogonal 3, hardest negative
-    // the nearly-parallel 4 — cos(neg) ≈ 1 ≫ cos(pos) ≈ 0 → violation
-    assert(byId(1L) == ((1L, 3L, 4L, true)), byId(1L).toString)
-    // BOTH singleton-label vectors (4 and 5) drop as anchors — no
-    // positive exists for them; only the three label-0 anchors remain
-    assert(!byId.contains(4L) && !byId.contains(5L))
-    assert(out.length == 3, out.mkString(","))
   }
 
   test("politenessSchedule: at most perSlot fetches per domain per slot, priority first") {
@@ -128,20 +88,6 @@ class Round12Spec extends SparkTestBase {
       .select("align_score", "kept").as[(Double, Boolean)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (sc, k) => assert(k == (sc >= 0.2)) }
-  }
-
-  test("s30 calibration: per-dim quantization error bounded by half a step") {
-    val rows = SparkEntry.queries("s30_sq8_calibration")(spark, sf)
-      .select("lo", "hi", "mse", "max_abs_err")
-      .as[(Double, Double, Double, Double)].collect()
-    assert(rows.length == 64)
-    rows.foreach { case (lo, hi, mse, mx) =>
-      val halfStep = (hi - lo) / 255.0 / 2.0
-      // in-range values err at most half a step; clipped outliers can
-      // exceed it only via the p01/p99 clip itself
-      assert(mse >= 0 && mx >= 0)
-      assert(mse <= math.max(halfStep * halfStep, mx * mx) + 1e-12)
-    }
   }
 
   test("q111 KMV estimates: within sketch error of the exact set sizes") {
@@ -230,19 +176,6 @@ class Round12Spec extends SparkTestBase {
     assert(math.abs(rows.map(_._4).sum - 1.0) < 1e-5)
     // A is the head: fewer per-part revenue but the largest share
     assert(rows(0)._4 > rows(1)._4 && rows(1)._4 > rows(2)._4)
-  }
-
-  test("s34 recall curve: recall well-formed at every cutoff, hits monotone in k") {
-    val rows = SparkEntry.queries("s34_recall_curve")(spark, sf)
-      .as[(Int, Long, Long, Double)].collect()
-    assert(rows.map(_._1).toSeq == Seq(1, 3, 5))
-    rows.foreach { case (k, nq, hits, rec) =>
-      assert(hits >= 0 && hits <= nq * k)
-      // rec is snapped to 6 dp in the query output
-      assert(math.abs(rec - hits.toDouble / (nq * k)) < 5e-7)
-    }
-    // matched pairs can only accumulate as the cutoff widens
-    assert(rows(0)._3 <= rows(1)._3 && rows(1)._3 <= rows(2)._3)
   }
 
   test("u12 LPA: 1 round on a crafted star adopts the hub's label; ties go smallest") {
